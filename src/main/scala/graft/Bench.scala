@@ -1,4 +1,5 @@
 package graft
+import graft.queries.Artifacts
 import org.apache.spark.sql.SparkSession
 object Bench {
   // Load sentinel (r9): four rounds of committed artifacts were inflated
@@ -40,113 +41,52 @@ object Bench {
       System.err.println(s"[bench] proceeding LOADED after ${waitedS}s wait " +
         s"(load_1m=$loadBefore); artifact will carry loaded:true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-first AQE coalescing — same two settings (and rationale) as
-      // GraftSession: partition counts derive from bytes, not from the
-      // core count, so the 8-core and 32-core runs execute comparable
-      // plans and per-task overhead stops scaling with parallelism
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-      // sort-based shuffle writer (see GraftSession: the bypass-merge
-      // writer's M×R per-map-task file creation was the residual
-      // per-query tax that scaled with SPARK_GRAFT_CPUS)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus()
+    val spark = GraftSession.get(cpus)
+    // a failed table load, artifact build, warmup or timed query must not
+    // masquerade as a fast success — each lands here (and on stderr), goes
+    // into the JSON's failed list, and makes the run exit non-zero
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
+    def attempt(name: String)(body: => Unit): Unit =
+      try body catch {
+        case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      }
     // Warm the JVM/codegen/file-listing paths so the first timed query isn't
     // charged for session startup; touch every table once.
     graft.Tables.all.foreach { t =>
-      try graft.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      attempt(s"table:$t")(graft.Tables.load(spark, sfDir, t).count())
     }
     // optional comma-separated subset (quiet A-B reruns of a few queries
     // without paying the full 120-query sweep). Read BEFORE the prebuilds:
     // a subset run with no consumer of an index/label artifact must not
-    // pay its derivation nor emit an unrelated *_build line item
-    // (Verify gates its prebuild the same way).
+    // pay its derivation nor emit an unrelated *_build line item.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def anyPicked(consumers: Set[String]): Boolean =
-      only.forall(_.exists(consumers))
-    // Index construction is an offline step (a cell-partitioned table at
-    // cluster scale); prebuild it so d_ann_ivf times the probe, not the
-    // build — but report the build as its own timed line item so the total
-    // still reflects ALL work performed.
-    // consumer sets live NEXT TO the artifact accessors (single source of
-    // truth — a new consumer registered without updating them would pay
-    // the build inside its timed run under SPARK_GRAFT_ONLY)
-    val ivfConsumers = graft.queries.AnnQueries.ivfConsumers
-    val buildSec: Option[Double] = if (!anyPicked(ivfConsumers)) None else {
-      val tBuild0 = System.nanoTime()
-      try {
-        val idx = graft.queries.AnnQueries.ivfIndex(spark, sfDir)
-        idx.indexed.count() // materialize the persisted cell assignment
-        // the margin-fixture index the oracle-checked d_ann_ivf probes
-        val idxP = graft.queries.AnnQueries.ivfIndexPlanted(spark, sfDir)
-        idxP.indexed.count()
-      } catch { case _: Throwable => () }
-      Some((System.nanoTime() - tBuild0) / 1e9)
-    }
-    // Same offline/online split for the PQ codebooks: train once here,
-    // reported as its own line item, so d_ann_pq times encode+probe.
-    val pqConsumers = graft.queries.AnnQueries.pqConsumers
-    val pqBuildSec: Option[Double] = if (!anyPicked(pqConsumers)) None else {
-      val tPq0 = System.nanoTime()
-      try graft.queries.AnnQueries.pqBooks(spark, sfDir)
-      catch { case _: Throwable => () }
-      Some((System.nanoTime() - tPq0) / 1e9)
-    }
-    // And for the dedup-apply family's shared cluster labels (r11): the CC
-    // loop derives once, its consumers (d_dedup_cluster / apply /
-    // keep_best) time what a pipeline times — label CONSUMPTION. Reported
-    // as its own line item below so the total still carries the build.
-    val labelConsumers = graft.queries.DocumentQueries.labelConsumers
-    val ccBuildSec: Option[Double] = if (!anyPicked(labelConsumers)) None else {
-      val tCc0 = System.nanoTime()
-      try graft.queries.DocumentQueries.clusterLabels(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      Some((System.nanoTime() - tCc0) / 1e9)
-    }
-    // s_hybrid_serve's staged lexical rank list is an offline artifact like
-    // the IVF index (built once per JVM, cachedArtifact) — r16 verdict: its
-    // build cost was invisible to min-of-3. Same split: prebuild here,
-    // report as its own line item so the total still carries ALL work.
-    val hybridConsumers = graft.queries.RetrievalQueries.hybridServeConsumers
-    val hybridBuildSec: Option[Double] = if (!anyPicked(hybridConsumers)) None else {
-      val tHl0 = System.nanoTime()
-      try graft.queries.RetrievalQueries.hybridServePrebuild(spark, sfDir)
-      catch { case _: Throwable => () }
-      Some((System.nanoTime() - tHl0) / 1e9)
-    }
+    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+    // Shared artifacts (IVF/PQ indexes, cluster labels, the hybrid rank
+    // list) are offline steps: prebuild them so their consumers time the
+    // probe, not the build — each build is its own timed line item, so the
+    // total still reflects ALL work performed.
+    val prebuilt = Artifacts.prebuild(spark, sfDir, picked.map(_._1).toSet)
+    failed ++= prebuilt.failed
     // Several operators (connected components, vancode, the embedding
     // index) pin localCheckpoint blocks that outlive their query; across
     // 80 queries × (warmup + timed) the leaked blocks grow old-gen
     // occupancy until GC pauses tax EVERY subsequent job (~+25% uniform
-    // drift measured at 8g). Reclaim non-index blocks after each query so
-    // each measurement starts from the same heap state.
-    val protectedRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def reclaimBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => protectedRdds(id) }
-        .values.foreach(_.unpersist(blocking = false))
+    // drift measured at 8g). Reclaim non-artifact blocks after each query,
+    // warmup and timed, so each measurement starts from the same heap state.
+    //
     // JMH-style warmup: run every query once untimed so the timed loop
     // measures steady-state execution, not whichever alphabetically-first
     // queries happen to absorb JIT/codegen warmup (disable with
     // SPARK_GRAFT_WARMUP=0 to measure cold).
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
-      picked.foreach { case (_, fn) =>
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        reclaimBlocks()
+      picked.foreach { case (name, fn) =>
+        attempt(name)(fn(spark, sfDir).count())
+        Artifacts.reclaim(spark, prebuilt.protectedRdds)
       }
       System.gc()
     }
@@ -175,24 +115,16 @@ object Bench {
       t
     }
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
       val g0 = gcMillis()
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
-      // a THROWING query must not masquerade as a fast success — record it
-      // (stderr + the JSON's failed list) so a regression can't read as a
-      // speedup in the artifact
-      try { fn(spark, sfDir).count(); () } catch {
-        case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
+      attempt(name)(fn(spark, sfDir).count())
       val sec = (System.nanoTime() - t0) / 1e9
       val cpu = (osBean.getProcessCpuTime - c0) / 1e9
       val gc = (gcMillis() - g0) / 1e3
-      reclaimBlocks()
+      Artifacts.reclaim(spark, prebuilt.protectedRdds)
       (sec, cpu, gc)
     }
     // keep every rep's wall time: the per-rep spread in the artifact is
@@ -206,10 +138,7 @@ object Bench {
       // sample)
       name -> runs.minBy(_._1)
     }.toMap ++
-      buildSec.map(s => "d_ann_ivf_build" -> (s, Double.NaN, Double.NaN)) ++
-      pqBuildSec.map(s => "d_ann_pq_build" -> (s, Double.NaN, Double.NaN)) ++
-      ccBuildSec.map(s => "d_cluster_labels_build" -> (s, Double.NaN, Double.NaN)) ++
-      hybridBuildSec.map(s => "s_hybrid_serve_build" -> (s, Double.NaN, Double.NaN))
+      prebuilt.seconds.map { case (name, s) => name -> (s, Double.NaN, Double.NaN) }
     val results = timed.map { case (k, (w, _, _)) => k -> w }
     val cpuResults = timed.collect { case (k, (_, c, _)) if !c.isNaN => k -> c }
     val gcResults = timed.collect { case (k, (_, _, g)) if !g.isNaN => k -> g }
@@ -261,5 +190,6 @@ object Bench {
       else s""","failed":[${failed.distinct.map(n => s"\"$n\"").mkString(",")}]"""
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"cpu_total_s":${f(cpuTotal)},"median_s":${f(median)},"max_s":${f(sorted.lastOption.getOrElse(0.0))},$loadJson,"queries":$slowest$failedJson,"full":"${fullPath.toAbsolutePath}","sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

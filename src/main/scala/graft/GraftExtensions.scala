@@ -12,10 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * installs the whole engine surface (TopK optimizer rewrite + physical
   * strategy, every custom SQL function) into EVERY session the cluster
-  * builds, including pure-SQL clients like the Thrift server — no call to
-  * GraftSession/GraftFunctions needed. The imperative
-  * `GraftSession.get` path stays for embedded use; both share the same
-  * registrations.
+  * builds, including pure-SQL clients like the Thrift server. It is the
+  * ONLY install path: [[GraftSession.builder]] sets the same conf
+  * (appending to any extensions already configured), so embedded use,
+  * `Bench`, `Verify` and spark-submit deployments all run one rewrite and
+  * one strategy.
   *
   * The optimizer rule is injected into the operator-optimization batch,
   * which runs to fixed point: the rewrite is idempotent (once the Window is

@@ -2,18 +2,47 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Builds a SparkSession tuned for this engine.
+/** Builds a SparkSession tuned for this engine — the ONE place graft sets
+  * Spark conf: the library, `Bench`, `Verify`, the tools and the test
+  * sessions all start here, so the plans the oracle gate verifies are the
+  * plans a user runs.
   *
   * Local-mode defaults mirror what we would set per-executor on a real
   * cluster: AQE on (runtime re-plan, skew-join splitting, partition
   * coalescing), shuffle partitions sized to the parallelism instead of the
-  * 200 default, UTC session time so results are oracle-comparable.
+  * 200 default, UTC session time so results are oracle-comparable. The
+  * engine surface (TopK rewrite + strategy, SQL functions) is installed
+  * through `spark.sql.extensions` — see [[GraftExtensions]].
   */
 object GraftSession {
+  private val ExtensionsKey = "spark.sql.extensions"
+  private val GraftExt = classOf[GraftExtensions].getName
+
+  /** `spark.sql.extensions` value that lists graft exactly once after every
+    * extension `existing` already names (a builder `.config` REPLACES the
+    * `spark.*` system property SparkConf would otherwise load).
+    */
+  def withGraftExtension(existing: Option[String]): String =
+    (existing.toSeq.flatMap(listed) :+ GraftExt).distinct.mkString(",")
+
+  private def listed(extensions: String): Seq[String] =
+    extensions.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** `SPARK_GRAFT_CPUS` as a core count (`default` when unset); a value
+    * that is not an integer fails here, naming the variable.
+    */
+  def envCpus(default: Int = 4): Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => default
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$v'"))
+  }
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
+      .config(ExtensionsKey, withGraftExtension(sys.props.get(ExtensionsKey)))
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -54,13 +83,17 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
 
+  /** The builder's session with WARN logging. Throws when the session's
+    * SparkContext was created earlier without graft's extension — its
+    * sessions would silently lack graft's SQL functions and TopK rewrite.
+    */
   def get(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // full engine surface out of the box: SQL-callable custom expressions
-    // and the conservative top-k window rewrite
-    graft.functions.GraftFunctions.register(s)
-    graft.plans.TopKRewriteRule.register(s)
+    if (!s.sparkContext.getConf.getOption(ExtensionsKey).exists(listed(_).contains(GraftExt)))
+      throw new IllegalStateException(
+        s"the running SparkContext was created without $ExtensionsKey=$GraftExt; " +
+          "create it with that conf (or through GraftSession.builder) before calling GraftSession.get")
     s
   }
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** SQL registration for graft's custom Catalyst expressions, so
+/** SQL builders for graft's custom Catalyst expressions, so
   * `spark.sql("SELECT cosine_sim(a, b) ...")` works alongside the Column
-  * API — the path a SQL-first user of the engine takes. The same builder
-  * list feeds [[graft.GraftExtensions]], the `spark.sql.extensions`
-  * injection path for spark-submit deployments.
+  * API — the path a SQL-first user of the engine takes. The list feeds
+  * [[graft.GraftExtensions]], which injects it into every session built
+  * with `spark.sql.extensions=graft.GraftExtensions` (as
+  * [[graft.GraftSession.builder]] sets).
   */
 object GraftFunctions {
 
@@ -102,12 +102,5 @@ object GraftFunctions {
                       child: Expression): Expression = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.eagerExpression(f(ColumnBridge.column(child)))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Slowly-changing-dimension type-2 history maintenance — the APPLY step of
   * incremental sync. [[Validators.snapshotDiff]] detects what changed
@@ -51,11 +52,23 @@ object Scd2 {
     */
   def merge(scd: DataFrame, snap: DataFrame, keys: Seq[String],
             compareCols: Seq[String], ts: String): DataFrame = {
+    require(keys.nonEmpty, "merge: keys must name at least one column")
+    require(compareCols.nonEmpty, "merge: compareCols must name at least one column")
     val dataCols = keys ++ compareCols
     require(snap.columns.toSeq == dataCols,
       s"snapshot columns must be exactly keys ++ compareCols ($dataCols), got ${snap.columns.toSeq}")
     require(scd.columns.toSeq == dataCols ++ Seq("valid_from", "valid_to"),
       s"scd columns must be keys ++ compareCols ++ (valid_from, valid_to), got ${scd.columns.toSeq}")
+    // the names the join below adds must be absent (upsert's guard): a data
+    // column already named one of them resolves against the wrong side
+    val clash = dataCols.filter(
+      dataCols.map(c => s"__s_$c").toSet ++ Set("__s_present", "__o_present", "__e"))
+    require(clash.isEmpty, s"merge: column(s) ${clash.mkString(",")} collide with the " +
+      "reserved __s_<col>, __s_present, __o_present and __e names; rename them first")
+    // the change compare is null-safe equality (<=>), undefined on maps
+    val mapCols = compareCols.filter(c => hasMap(snap.schema(c).dataType))
+    require(mapCols.isEmpty, s"merge: compare column(s) ${mapCols.mkString(",")} contain " +
+      "a map type, which has no equality; compare a canonical rendering instead")
     val open = scd.filter(col("valid_to").isNull)
     val closed = scd.filter(col("valid_to").isNotNull)
     // the snapshot side is fully RENAMED before joining (both frames
@@ -84,6 +97,13 @@ object Scd2 {
     val merged = j.select(explode(emit).as("__e"))
       .select(scd.columns.map(c => col(s"__e.$c").as(c)): _*)
     closed.unionByName(merged)
+  }
+
+  private def hasMap(t: DataType): Boolean = t match {
+    case _: MapType    => true
+    case a: ArrayType  => hasMap(a.elementType)
+    case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+    case _             => false
   }
 
   /** SCD type-1 merge — the everyday `MERGE INTO target USING source WHEN

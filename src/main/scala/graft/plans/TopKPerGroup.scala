@@ -23,8 +23,8 @@ import scala.collection.mutable
   * repeats the bounded heap per group after clustering. Same result, a
   * fraction of the shuffle.
   *
-  * Wiring: logical node → strategy (added idempotently via
-  * `spark.experimental.extraStrategies`) → two-phase physical plan, the
+  * Wiring: logical node → strategy (injected by GraftExtensions, or added
+  * on demand by [[TopK.perGroup]]) → two-phase physical plan, the
   * partial phase declaring no required distribution and the final phase
   * requiring `ClusteredDistribution(groupBy)` so the planner inserts the
   * exchange between them.
@@ -128,7 +128,8 @@ object TopK {
                k: Int): DataFrame = {
     require(k > 0, s"TopK.perGroup: k must be positive, got $k")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
+    // sessions built without GraftExtensions get the strategy on demand
+    if (!spark.sessionState.planner.strategies.contains(TopKStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy
     }

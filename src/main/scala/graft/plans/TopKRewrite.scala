@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -51,15 +50,5 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
           Project(projList, TopKPerGroup(part, order, k, base))
         case _ => p
       }
-  }
-
-  /** Idempotently install the rule + strategy on a session. */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewriteRule
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
 object AnnQueries {
 
   /** Consumers of [[ivfIndex]]/[[ivfIndexPlanted]] — the single source of
-    * truth Bench/Verify gate the prebuild on (see
+    * truth [[Artifacts]] gates the prebuild on (see
     * DocumentQueries.labelConsumers for the rule).
     */
   val ivfConsumers: Set[String] =

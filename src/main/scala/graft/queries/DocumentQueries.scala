@@ -649,12 +649,9 @@ object DocumentQueries {
 
   /** Build (or fetch the cached) cluster-label table for `dir`'s chained
     * near-dup corpus — the shared offline step of the dedup-apply family,
-    * prebuilt by Bench as its own timed line item like the ANN indexes.
-    * NOTE for harnesses that reclaim persisted blocks between queries
-    * (Bench/Verify): the labels are localCheckpoint-backed — call this
-    * BEFORE snapshotting the protected-RDD set, or the first reclaim
-    * truncates the cached lineage and later consumers die with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+    * declared in [[Artifacts]]. The labels are localCheckpoint-backed: a
+    * harness that reclaims persisted blocks between queries must build
+    * them through [[Artifacts.prebuild]], which protects their blocks.
     */
   def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
     labelsCache.entrySet().removeIf(
@@ -684,7 +681,7 @@ object DocumentQueries {
   }
 
   /** Registry queries consuming [[clusterLabels]] — the SINGLE source of
-    * truth Bench/Verify gate the prebuild on. Register a new consumer of
+    * truth [[Artifacts]] gates the prebuild on. Register a new consumer of
     * an artifact accessor? Add it to the accessor's consumer set HERE, or
     * a subset (SPARK_GRAFT_ONLY) run silently pays the build inside that
     * query's timed window and skews A-B comparisons.

@@ -323,9 +323,9 @@ object RetrievalQueries {
   // staged to disk (the cachedArtifact pattern — parquet can't be
   // reclaimed like localCheckpoint blocks, the r11 prebuild gotcha), so
   // serving times the probe+fusion, not the offline corpus ranking.
-  // Exposed so Bench can prebuild it as its own `s_hybrid_serve_build`
-  // line item (the d_ann_ivf_build precedent — offline cost must still be
-  // visible in the total). Consumer set lives HERE, next to the artifact
+  // Declared in Artifacts: harnesses prebuild it as its own
+  // `s_hybrid_serve_build` line item (the d_ann_ivf_build precedent —
+  // offline cost must still be visible in the total). Consumer set lives HERE, next to the artifact
   // accessor (single source of truth, like AnnQueries.ivfConsumers).
   val hybridServeConsumers: Set[String] = Set("s_hybrid_serve")
 

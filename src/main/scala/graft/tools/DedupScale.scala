@@ -33,9 +33,7 @@ object DedupScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(30)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCpus(32))
     if (only.exists(_.contains("ann"))) annScale(spark, src, factor)
     else run(spark, src, factor, only)
     spark.stop()

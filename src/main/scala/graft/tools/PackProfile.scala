@@ -18,9 +18,8 @@ object PackProfile {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.get(cpus)
     implicit val s: org.apache.spark.sql.SparkSession = spark
 
     val base = "target/packprofile"
@@ -84,7 +83,7 @@ object PackProfile {
     // stream B: repartition BEFORE tokenCount so the regex parallelizes
     // across the cores (text rides one extra shuffle)
     drainPack("stream pack (repartitioned tokenCount)", st =>
-      st.repartition(cpus.toInt)
+      st.repartition(cpus)
         .select(col("doc_id"), col("source"),
           graft.functions.TextFunctions.tokenCount(col("text")).as("n_tokens")))
 

@@ -34,9 +34,7 @@ object SourceScale {
     val src = args.lift(0).getOrElse("target/sf1")
     val files = args.lift(1).map(_.toInt).getOrElse(64)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCpus(32))
     run(spark, src, files, reps)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.scalatest.funsuite.AnyFunSuite
 
 class SqlFunctionsSpec extends AnyFunSuite {
@@ -8,7 +7,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("custom expressions are callable from SQL") {
-    GraftFunctions.register(spark)
     Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f), Array(0.0f, 1.0f)))
       .toDF("a", "b", "c").createOrReplaceTempView("vecs")
     val r = spark.sql(
@@ -47,7 +45,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("fused text/vector expressions are callable from SQL and match the Column API") {
-    GraftFunctions.register(spark)
     Seq(("the quick brown fox jumps", 1L)).toDF("t", "id")
       .createOrReplaceTempView("docs_sql")
     val row = spark.sql(
@@ -77,7 +74,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("curation text ops are callable from SQL and match the Column API") {
-    GraftFunctions.register(spark)
     Seq("<p>Hi &amp; bye</p>. Second one! Done.").toDF("t")
       .createOrReplaceTempView("cur_docs")
     val r = spark.sql(
@@ -91,7 +87,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("misra_gries and canonicalize_url are callable from SQL") {
-    GraftFunctions.register(spark)
     (Seq.fill(50)("hot") ++ (1 to 30).map(i => s"u$i"))
       .toDF("tok").createOrReplaceTempView("hh_sql")
     val sk = spark.sql(
@@ -105,7 +100,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("integral-literal SQL args: BIGINT literals accepted, columns rejected cleanly") {
-    GraftFunctions.register(spark)
     Seq("a", "a", "b").toDF("tok").createOrReplaceTempView("lit_sql")
     // CAST(8 AS BIGINT) is a foldable Long literal — must not ClassCastException
     val sk = spark.sql(

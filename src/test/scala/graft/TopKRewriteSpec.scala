@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.TopKRewriteRule
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +20,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("rule rewrites rank-dropped window top-k into TopKPerGroup") {
-    TopKRewriteRule.register(spark)
     val df = windowTopK(keepRank = false)
     val physical = df.queryExecution.executedPlan.toString
     assert(physical.contains("TopKFinal"), s"rewrite did not fire:\n$physical")
@@ -32,7 +30,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("rewritten plan returns exactly the window result") {
-    TopKRewriteRule.register(spark)
     val got = windowTopK(keepRank = false)
       .as[(Long, Long)].collect().toSet
     // reference computed with the rule disabled via a plain filter shape the
@@ -43,7 +40,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("rule leaves the plan alone when the rank column survives") {
-    TopKRewriteRule.register(spark)
     val physical = windowTopK(keepRank = true).queryExecution.executedPlan.toString
     assert(physical.contains("Window"), physical)
     assert(!physical.contains("TopKFinal"), physical)

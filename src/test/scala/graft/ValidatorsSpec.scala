@@ -114,6 +114,25 @@ class ValidatorsSpec extends AnyFunSuite {
     ), rows.toString)
   }
 
+  test("scd2 merge rejects reserved-name clashes, empty column lists and map compares") {
+    import spark.implicits._
+    import graft.operators.Scd2
+    def rejects(snap: org.apache.spark.sql.DataFrame, keys: Seq[String],
+                compareCols: Seq[String], msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](
+        Scd2.merge(Scd2.init(snap, "d1"), snap, keys, compareCols, "d2"))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    // a data column named like the snapshot-side rename of another one
+    rejects(Seq((1L, "a")).toDF("k", "__s_k"), Seq("k"), Seq("__s_k"), "reserved")
+    // ... or like the presence markers / the exploded row struct
+    for (reserved <- Seq("__s_present", "__o_present", "__e"))
+      rejects(Seq((1L, "a")).toDF("k", reserved), Seq("k"), Seq(reserved), "reserved")
+    rejects(Seq((1L, "a")).toDF("k", "v"), Seq("k", "v"), Seq.empty, "compareCols")
+    rejects(Seq((1L, "a")).toDF("k", "v"), Seq.empty, Seq("k", "v"), "keys")
+    rejects(Seq((1L, Map("x" -> 1))).toDF("k", "m"), Seq("k"), Seq("m"), "map type")
+  }
+
   test("upsert overwrites matched keys, inserts new ones, passes the rest through") {
     import spark.implicits._
     import graft.operators.Scd2
