@@ -896,9 +896,10 @@ object SourceQueries {
 
   // ------------------------------------------------------------ q47_avro
   // Avro container round-trip (sources/Avro.scala — avro CORE container +
-  // codec layer, graft sync-marker split plumbing): orders writes to
-  // snappy Avro (dates/timestamps as logical types, prices as double) and
-  // reads back through the byte-ranged split reader with splits small
+  // codec layer; sources/AvroV2.scala — the `graftavro` V2 scan and its
+  // sync-marker split planning): orders writes to snappy Avro
+  // (dates/timestamps as logical types, prices as double) and reads back
+  // through Avro.readAvro, i.e. the byte-ranged V2 scan, with splits small
   // enough that several tasks cover each part file. The oracle reads the
   // original parquet — any drift in the schema mapping, logical-type
   // encode/decode, or a split duplicating/dropping a block row breaks

@@ -1,13 +1,12 @@
 package graft.sources
 
-import org.apache.avro.{LogicalTypes, Schema => ASchema, SchemaBuilder}
-import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.avro.{LogicalTypes, Schema => ASchema}
+import org.apache.avro.file.{CodecFactory, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.ByteBuffer
 import scala.jdk.CollectionConverters._
@@ -20,16 +19,9 @@ import scala.jdk.CollectionConverters._
   * The reference ships no Avro path of its own — this closes the one
   * format gap SURVEY §2c carried as an environment exclusion.
   *
-  * Scale design — the genuine Avro split protocol, not per-file tasks:
-  * an Avro container is a sequence of blocks separated by a 16-byte sync
-  * marker, and `DataFileReader.sync(pos)` seeks to the first block
-  * boundary at or after an arbitrary byte offset. Planning therefore
-  * carves every file into ~`maxPartitionBytes` byte ranges and each task
-  * reads `sync(start) .. pastSync(end)` — exactly how avro-mapred splits —
-  * so ONE 10 GB file parallelizes across the cluster instead of pinning a
-  * single task, and a directory of files fans out both ways. Decoding
-  * streams block-by-block (one block in memory per task); no whole-file
-  * buffering.
+  * Reads go through the `graftavro` DataSource V2 scan ([[AvroDataSource]]),
+  * which owns the sync-marker split planning and the column pruning;
+  * [[readAvro]] is that scan under a function name.
   *
   * Type mapping (both directions): null/boolean/int/long/float/double/
   * string/bytes/fixed/enum ↔ the §3-natural Spark types, record ↔ struct,
@@ -126,13 +118,10 @@ object Avro {
 
   // --------------------------------------------------------------- values
 
-  /** Avro runtime value → Spark Row value for `dt` (shared with the V2
-    * scan — see [[AvroV2]]).
+  /** Avro runtime value → Spark Row value for `dt` (used by the V2 scan —
+    * see [[AvroV2]]).
     */
-  private[sources] def fieldToSpark(v: Any, dt: DataType, as: ASchema): Any =
-    toSpark(v, dt, as)
-
-  private def toSpark(v: Any, dt: DataType, as: ASchema): Any = {
+  private[sources] def toSpark(v: Any, dt: DataType, as: ASchema): Any = {
     if (v == null) return null
     val s = nonNull(as)
     dt match {
@@ -207,85 +196,16 @@ object Avro {
 
   // ----------------------------------------------------------------- read
 
-  /** One planned byte range of one container file: the task decodes blocks
-    * from the first sync at/after `start` until past `end` — Avro's split
-    * contract, so ranges never duplicate or drop records.
-    */
-  private final case class AvroSplit(file: String, start: Long, end: Long)
-
-  /** Read a container file or directory of them. `maxSplitBytes` bounds
-    * per-task input (default 128 MB — files larger than this parallelize
-    * WITHIN the file via sync-marker ranges).
+  /** Read a container file, a directory or a glob of them through the
+    * `graftavro` V2 scan ([[AvroDataSource]]), so Catalyst prunes columns
+    * into the Avro reader schema. `maxSplitBytes` bounds per-task input
+    * (default 128 MB — files larger than this parallelize WITHIN the file
+    * via sync-marker ranges).
     */
   def readAvro(spark: SparkSession, path: String,
-               maxSplitBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val files = listAvroFiles(fs, new Path(path))
-    require(files.nonEmpty, s"no .avro files under $path")
-    // schema from the first file's header (driver-side, metadata-only)
-    val aschema = {
-      val in = new FsInput(files.head.getPath, conf)
-      val r = new DataFileReader[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-      try r.getSchema finally { r.close() }
-    }
-    require(aschema.getType == ASchema.Type.RECORD,
-      s"top-level Avro schema must be a record, got ${aschema.getType}")
-    val schema = toSparkType(aschema).asInstanceOf[StructType]
-    val schemaJson = aschema.toString
-    val splits = files.flatMap { st =>
-      val n = math.max(1L, (st.getLen + maxSplitBytes - 1) / maxSplitBytes)
-      (0L until n).map(i => AvroSplit(st.getPath.toString, i * maxSplitBytes,
-        math.min((i + 1) * maxSplitBytes, st.getLen)))
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    val fieldNames = schema.fields.map(_.name)
-    // ship the SESSION's Hadoop conf to the tasks (object-store
-    // credentials/endpoints live there; a bare `new Configuration()` on the
-    // executor would drop them) — same carrier FixedWidthV2 uses
-    val sconf = new FixedWidthV2.SerializableConf(
-      spark.sessionState.newHadoopConf())
-    val rdd = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .mapPartitions { it =>
-        val hconf = sconf.conf
-        val reader = new GenericDatumReader[GenericRecord](
-          new ASchema.Parser().parse(schemaJson))
-        it.flatMap { sp =>
-          val in = new FsInput(new Path(sp.file), hconf)
-          val dfr = new DataFileReader[GenericRecord](in, reader)
-          // a partially-consumed read (limit/take) never exhausts the
-          // iterator, so hasNext's close would not run — close on task end
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => dfr.close()))
-          dfr.sync(sp.start) // first block boundary at/after the range start
-          new Iterator[Row] {
-            private var closed = false
-            def hasNext: Boolean = {
-              if (closed) return false
-              val more = dfr.hasNext && !dfr.pastSync(sp.end)
-              if (!more) { dfr.close(); closed = true }
-              more
-            }
-            def next(): Row = {
-              val rec = dfr.next()
-              Row.fromSeq(fieldNames.indices.map { i =>
-                toSpark(rec.get(fieldNames(i)), fieldTypes(i),
-                  rec.getSchema.getField(fieldNames(i)).schema())
-              })
-            }
-          }
-        }
-      }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  private def listAvroFiles(fs: FileSystem, p: Path) = {
-    val st = fs.getFileStatus(p)
-    val all = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
-    all.filter(s => s.isFile && s.getLen > 0 &&
-      (s.getPath.getName.endsWith(".avro") || !st.isDirectory))
-  }
+               maxSplitBytes: Long = 128L * 1024 * 1024): DataFrame =
+    spark.read.format("graftavro")
+      .option("maxSplitBytes", maxSplitBytes).load(path)
 
   // ---------------------------------------------------------------- write
 
@@ -305,10 +225,8 @@ object Avro {
     if (fs.exists(out)) fs.delete(out, true)
     fs.mkdirs(out)
     val dir = out.toString
-    val sconf = new FixedWidthV2.SerializableConf(
-      spark.sessionState.newHadoopConf())
+    val sconf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     df.rdd.mapPartitionsWithIndex { (idx, it) =>
-      val hconf = sconf.conf
       val as = new ASchema.Parser().parse(aschema)
       val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](as))
       w.setCodec(codec match {
@@ -317,34 +235,15 @@ object Avro {
         case "snappy"    => CodecFactory.snappyCodec()
         case _           => CodecFactory.zstandardCodec(3)
       })
-      // write to a per-ATTEMPT temp name and rename into place on success:
-      // a speculative or zombie duplicate attempt writing the final name
-      // directly could interleave with the winner and corrupt the container
-      // (same task-commit shape as the fixed-width V2 writer)
-      val tc = org.apache.spark.TaskContext.get()
-      val attempt = Option(tc).map(_.taskAttemptId()).getOrElse(0L)
-      val part = new Path(dir, f"part-$idx%05d.avro")
-      val tmp = new Path(dir, f".part-$idx%05d-$attempt%d.avro.tmp")
-      val pfs = part.getFileSystem(hconf)
-      val os = pfs.create(tmp, true)
-      var committed = false
-      Option(tc).foreach(_.addTaskCompletionListener[Unit] { _ =>
-        if (!committed) { // failed/superseded attempt: drop its temp file
-          try pfs.delete(tmp, false) catch { case _: Exception => () }
-        }
-      })
-      w.create(as, os)
       var n = 0L
-      it.foreach { row =>
-        w.append(toAvro(row, schema, as).asInstanceOf[GenericRecord])
-        n += 1
+      SourceFiles.writeTaskFile(new Path(dir, f"part-$idx%05d.avro"), sconf.value) { os =>
+        w.create(as, os)
+        it.foreach { row =>
+          w.append(toAvro(row, schema, as).asInstanceOf[GenericRecord])
+          n += 1
+        }
+        w.close()
       }
-      w.close()
-      // rename is atomic on HDFS-like stores; last committer wins whole-file
-      pfs.delete(part, false)
-      if (!pfs.rename(tmp, part))
-        throw new java.io.IOException(s"failed to commit $tmp -> $part")
-      committed = true
       Iterator.single(n)
     }.count(): Unit
   }

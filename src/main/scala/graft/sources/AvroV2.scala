@@ -15,30 +15,41 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.Row
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 registration of the Avro container format —
   * `spark.read.format("graftavro").load(path)` — layered over
-  * [[Avro]]'s schema mapping and the same sync-marker split planning.
+  * [[Avro]]'s schema mapping; the one Avro read path.
   *
-  * Scale design beyond the function API: the scan implements COLUMN
-  * PRUNING (SupportsPushDownRequiredColumns) as a PROJECTED AVRO READER
+  * Column pruning: the scan implements COLUMN PRUNING (SupportsPushDownRequiredColumns) as a PROJECTED AVRO READER
   * SCHEMA — Avro's own schema-resolution rules skip writer fields absent
   * from the reader record without materializing them (a varint hop for
   * scalars, a length hop for strings/bytes), so a 2-column projection
   * over a wide record never decodes the other fields. The pruned schema
   * is visible in `.explain` via the scan description.
   *
-  * Options: `maxSplitBytes` (default 128 MB) bounds per-task input; files
-  * larger than that parallelize WITHIN the file via sync-marker ranges,
-  * exactly like [[Avro.readAvro]].
+  * Splits — the genuine Avro split protocol, not per-file tasks:
+  * an Avro container is a sequence of blocks separated by a 16-byte sync
+  * marker, and `DataFileReader.sync(pos)` seeks to the first block
+  * boundary at or after an arbitrary byte offset. Planning therefore
+  * carves every file into ~`maxSplitBytes` byte ranges and each task
+  * reads `sync(start) .. pastSync(end)` — exactly how avro-mapred splits —
+  * so ONE 10 GB file parallelizes across the cluster instead of pinning a
+  * single task, and a directory of files fans out both ways. Decoding
+  * streams block-by-block (one block in memory per task); no whole-file
+  * buffering.
+  *
+  * Paths may name files, directories (their non-empty `.avro` files) or
+  * globs. Options: `maxSplitBytes` (default 128 MB) bounds per-task input.
+  * [[Avro.readAvro]] is this scan under a function name.
   */
 class AvroDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graftavro"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AvroV2.sparkSchema(AvroV2.writerSchema(AvroV2.paths(options)))
+    AvroV2.sparkSchema(AvroV2.writerSchema(SourceFiles.paths(options)))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -46,25 +57,12 @@ class AvroDataSource extends TableProvider with DataSourceRegister {
 }
 
 private[sources] object AvroV2 {
-  def paths(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("paths"))
-      .map(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(_, classOf[Array[String]]).toSeq)
-      .getOrElse(Option(options.get("path")).toSeq)
-
   /** (file, length) pairs of the container files under the given paths. */
   def listFiles(paths: Seq[String]): Seq[(String, Long)] = {
     val conf = org.apache.spark.sql.SparkSession.active
       .sessionState.newHadoopConf()
-    val all = paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val st = fs.getFileStatus(path)
-      if (st.isDirectory)
-        fs.listStatus(path).toSeq.filter(s => s.isFile && s.getLen > 0 &&
-          s.getPath.getName.endsWith(".avro"))
-      else Seq(st)
-    }
+    val all = SourceFiles.list(paths, conf,
+      s => s.getLen > 0 && s.getPath.getName.endsWith(".avro"))
     require(all.nonEmpty, s"no .avro files under ${paths.mkString(", ")}")
     all.map(s => (s.getPath.toString, s.getLen))
   }
@@ -112,7 +110,7 @@ private[sources] class AvroTable(options: CaseInsensitiveStringMap)
   // driver latency; staleness scope is one table instance, the same
   // contract Spark's own file-index caching has)
   private lazy val listed: Seq[(String, Long)] =
-    AvroV2.listFiles(AvroV2.paths(options))
+    AvroV2.listFiles(SourceFiles.paths(options))
   private lazy val writer = AvroV2.writerSchemaOf(listed.head._1)
 
   override def name(): String = s"graftavro(${options.get("path")})"
@@ -144,7 +142,7 @@ private[sources] class AvroScanBuilder(writer: ASchema,
     }
     val spark = org.apache.spark.sql.SparkSession.active
     new AvroScan(writer.toString, required, splits,
-      new FixedWidthV2.SerializableConf(spark.sessionState.newHadoopConf()))
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 }
 
@@ -153,7 +151,7 @@ private[sources] case class AvroSplit(file: String, start: Long, end: Long)
 
 private[sources] class AvroScan(writerJson: String, required: StructType,
                                 splits: Seq[AvroSplit],
-                                conf: FixedWidthV2.SerializableConf)
+                                conf: SerializableConfiguration)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -168,7 +166,7 @@ private[sources] class AvroScan(writerJson: String, required: StructType,
 
 private[sources] class AvroReaderFactory(writerJson: String,
                                          required: StructType,
-                                         conf: FixedWidthV2.SerializableConf)
+                                         conf: SerializableConfiguration)
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -179,7 +177,7 @@ private[sources] class AvroReaderFactory(writerJson: String,
     val fieldSchemas = required.fieldNames.toSeq.map(n => reader.getField(n).schema())
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
     new PartitionReader[InternalRow] {
-      private val in = new FsInput(new Path(sp.file), conf.conf)
+      private val in = new FsInput(new Path(sp.file), conf.value)
       private val dfr = new DataFileReader[GenericRecord](in, datum)
       dfr.sync(sp.start)
       private var rec: GenericRecord = _
@@ -193,7 +191,7 @@ private[sources] class AvroReaderFactory(writerJson: String,
       override def get(): InternalRow = {
         val row = Row.fromSeq(required.fields.toSeq.zipWithIndex.map {
           case (f, i) =>
-            Avro.fieldToSpark(rec.get(f.name), f.dataType, fieldSchemas(i))
+            Avro.toSpark(rec.get(f.name), f.dataType, fieldSchemas(i))
         })
         toCatalyst(row).asInstanceOf[InternalRow]
       }

@@ -1346,23 +1346,8 @@ object Dfasdl {
     * string columns.
     */
   def readFixedWidth(spark: SparkSession, path: String, doc: Doc): DataFrame = {
-    def widthOf(f: Field): Int = f.attr("length").map(_.toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"fixed-width DFASDL needs a length attribute on every field; ${f.id} has none"))
-    val widths = doc.slots.map {
-      case f: Field => f.id -> widthOf(f)
-      case c: ChoiceSlot =>
-        // a fixed-arity record needs ONE width per position, so every
-        // branch must declare the same length (branch-dependent record
-        // widths are the offset-retry shape a byte-sliced reader can't
-        // dispatch without parsing — typed rejection beats mis-slicing)
-        val ws = c.singleLeafBranches.map(widthOf).distinct
-        require(ws.size == 1,
-          s"fixed-width choice ${c.id}: branches declare differing lengths " +
-            s"(${ws.mkString(", ")}); all branches must share one width")
-        c.id -> ws.head
-    }
-    val raw = Sources.readFixedWidth(spark, path, widths)
+    val raw = Sources.readFixedWidth(spark, path,
+      slotWidths(doc).map { case (slot, w) => slot.id -> w })
     bounded(raw.select(doc.slots.flatMap {
       case f: Field if f.anonymous => Nil // consumed, never surfaced
       case f: Field =>
@@ -1372,6 +1357,28 @@ object Dfasdl {
         Seq(when(branchMatches(f, col(f.id)), coerce(f, col(f.id))).as(f.id))
       case c: ChoiceSlot => choiceCols(c, col(c.id))
     }: _*), doc)
+  }
+
+  /** The width of each record slot of a fixed-width document, in record
+    * order — the one layout [[readFixedWidth]] and [[writeFixedWidth]]
+    * share. Every field needs a `length`; a choice occupies ONE position,
+    * so every branch must declare the same length (branch-dependent record
+    * widths are the offset-retry shape a byte-sliced reader can't dispatch
+    * without parsing — typed rejection beats mis-slicing).
+    */
+  private def slotWidths(doc: Doc): Seq[(Slot, Int)] = {
+    def widthOf(f: Field): Int = f.attr("length").map(_.toInt).getOrElse(
+      throw new IllegalArgumentException(
+        s"fixed-width DFASDL needs a length attribute on every field; ${f.id} has none"))
+    doc.slots.map {
+      case f: Field => f -> widthOf(f)
+      case c: ChoiceSlot =>
+        val ws = c.singleLeafBranches.map(widthOf).distinct
+        require(ws.size == 1,
+          s"fixed-width choice ${c.id}: branches declare differing lengths " +
+            s"(${ws.mkString(", ")}); all branches must share one width")
+        c -> ws.head
+    }
   }
 
   // ------------------------------------------- DFASDL-described XML / JSON
@@ -1685,23 +1692,16 @@ object Dfasdl {
     requireNoAnonymous(doc, "writeFixedWidth")
     val missing = doc.fields.map(_.id).filterNot(df.columns.toSet)
     require(missing.isEmpty, s"DataFrame lacks DFASDL fields: ${missing.mkString(", ")}")
-    def widthOf(f: Field): Int = f.attr("length").map(_.toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"fixed-width DFASDL needs a length attribute on every field; ${f.id} has none"))
     // one padded column per record SLOT — a choice occupies ONE position
     // (its single populated branch renders, exactly like readFixedWidth
     // reads one width per choice slot); emitting every branch leaf would
     // shift every later field in the record
-    val parts = doc.slots.map { slot =>
-      val (w, v) = slot match {
-        case f: Field => (widthOf(f), render(f, col(f.id)))
+    val parts = slotWidths(doc).map { case (slot, w) =>
+      val v = slot match {
+        case f: Field => render(f, col(f.id))
         case c: ChoiceSlot =>
-          val ws = c.singleLeafBranches.map(widthOf).distinct
-          require(ws.size == 1,
-            s"fixed-width choice ${c.id}: branches declare differing lengths " +
-              s"(${ws.mkString(", ")}); all branches must share one width")
-          (ws.head, coalesce((c.singleLeafBranches.map(b =>
-            renderValue(b, col(b.id))) :+ lit("")): _*))
+          coalesce((c.singleLeafBranches.map(b =>
+            renderValue(b, col(b.id))) :+ lit("")): _*)
       }
       when(length(v) > w,
         raise_error(concat(lit(s"value too wide for fixed-width slot ${slot.id} (width $w): "), v)))

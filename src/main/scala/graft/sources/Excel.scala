@@ -5,6 +5,7 @@ import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SerializableConfiguration
 
 /** Excel (.xlsx) source/sink implemented with the JDK only — closes the one
   * reference surface the repo previously stubbed
@@ -33,14 +34,25 @@ object Excel {
     * the layout); all columns are StringType, like csv without inferSchema.
     */
   def read(spark: SparkSession, path: String, header: Boolean = true,
-           sheet: Option[String] = None): DataFrame = {
+           sheet: Option[String] = None): DataFrame =
+    readWorkbooks(spark, path, "*.xlsx", parseWorkbook, header, sheet)
+
+  /** The one workbook read path, shared with [[Xls]]: the binaryFile source
+    * lists the files `glob` matches under `path`, one task per workbook,
+    * and `parse` turns each workbook's bytes into rows of cell strings.
+    * Header and column rules as in [[read]].
+    */
+  private[sources] def readWorkbooks(
+      spark: SparkSession, path: String, glob: String,
+      parse: (Array[Byte], Option[String]) => Vector[Array[String]],
+      header: Boolean, sheet: Option[String]): DataFrame = {
     import spark.implicits._
     val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xlsx")
+      .option("pathGlobFilter", glob)
       .load(path)
       .select("path", "content")
     val firstFile = bin.sort(col("path")).select("content").head
-    val firstRows = parseWorkbook(firstFile.getAs[Array[Byte]](0), sheet)
+    val firstRows = parse(firstFile.getAs[Array[Byte]](0), sheet)
     require(firstRows.nonEmpty, s"empty workbook under $path")
     val width = firstRows.map(_.length).max
     val names: Seq[String] =
@@ -50,9 +62,8 @@ object Excel {
         }
       else (0 until width).map(i => s"_c$i")
     val n = names.length
-    val sheetName = sheet // avoid capturing Option wrapper ambiguity in closure
     val rows = bin.as[(String, Array[Byte])].flatMap { case (_, bytes) =>
-      val parsed = parseWorkbook(bytes, sheetName)
+      val parsed = parse(bytes, sheet)
       val data = if (header) parsed.drop(1) else parsed
       // pad/truncate to the header width so element access is always in
       // bounds (ANSI mode errors on out-of-range array indexes)
@@ -313,31 +324,13 @@ object Excel {
     // fs.defaultFS, endpoint overrides); a bare `new Configuration()` there
     // would silently resolve a differently-configured filesystem.
     val confBc = df.sparkSession.sparkContext.broadcast(
-      new FixedWidthV2.SerializableConf(
-        df.sparkSession.sessionState.newHadoopConf()))
+      new SerializableConfiguration(df.sparkSession.sessionState.newHadoopConf()))
     df.foreachPartition { (it: Iterator[Row]) =>
-      val tc = org.apache.spark.TaskContext.get()
-      val pid = tc.partitionId()
-      // per-ATTEMPT temp + rename on success: a speculative or retried
-      // duplicate attempt writing the final name directly could interleave
-      // into a corrupt ZIP (same task-commit shape as the Avro writer)
-      val fin = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.xlsx")
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        f".part-$pid%05d-${tc.taskAttemptId()}%d.xlsx.tmp")
-      val fs = fin.getFileSystem(confBc.value.conf)
-      var committed = false
-      tc.addTaskCompletionListener[Unit] { _ =>
-        if (!committed) {
-          try fs.delete(tmp, false) catch { case _: Exception => () }
-        }
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      SourceFiles.writeTaskFile(
+        new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.xlsx"), confBc.value.value) {
+        os => writeWorkbook(schema, it, os, sheetName)
       }
-      val os = fs.create(tmp, true)
-      try writeWorkbook(schema, it, os, sheetName)
-      finally os.close()
-      fs.delete(fin, false)
-      if (!fs.rename(tmp, fin))
-        throw new java.io.IOException(s"failed to commit $tmp -> $fin")
-      committed = true
     }
   }
 

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -13,6 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -30,7 +30,8 @@ import scala.jdk.CollectionConverters._
   * 40-field record only materializes 2 substrings per line, and the pruned
   * schema is visible in the plan for audit.
   *
-  * Options: `fields` = comma-separated `name:width` in record order
+  * Paths may name files, directories or globs. Options: `fields` =
+  * comma-separated `name:width` in record order, every width > 0
   * (required); `trim` = trim values and null empties (default true,
   * DFASDL's trim="both"). All columns surface as STRING, like csv without
   * inferSchema.
@@ -51,37 +52,20 @@ private[sources] object FixedWidthV2 {
     val spec = options.get("fields")
     require(spec != null && spec.nonEmpty,
       "fixedwidth requires a 'fields' option: comma-separated name:width pairs")
-    spec.split(",").toSeq.map { f =>
-      val Array(name, w) = f.trim.split(":")
-      name -> w.toInt
+    val fields = spec.split(",").toSeq.map { f =>
+      f.trim.split(":") match {
+        case Array(name, w) if name.nonEmpty && w.toIntOption.isDefined =>
+          name -> w.toInt
+        case _ => throw new IllegalArgumentException(
+          s"fixedwidth field '$f' is not a name:width pair")
+      }
     }
+    Sources.requirePositiveWidths(fields)
+    fields
   }
 
   def schemaFor(fields: Seq[(String, Int)]): StructType =
     StructType(fields.map { case (n, _) => StructField(n, StringType) })
-
-  def listFiles(paths: Seq[String], conf: Configuration): Seq[String] =
-    paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      def visible(s: org.apache.hadoop.fs.FileStatus) =
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
-      // glob patterns resolve like every built-in file source
-      // (load("/data/*.dat")); each match then lists as below
-      val roots: Seq[org.apache.hadoop.fs.FileStatus] =
-        if (p.exists("*?[{".contains(_))) {
-          val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Nil)
-          require(matches.nonEmpty, s"no files match glob $p")
-          matches
-        } else Seq(fs.getFileStatus(path))
-      roots.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq
-            .filter(s => s.isFile && visible(s))
-            .map(_.getPath.toString)
-        else Seq(st.getPath.toString)
-      }
-    }
 
   /** Render one InternalRow value as the string the fixed-width layout
     * writes — matching Sinks.writeFixedWidth's `cast(string)` bytes.
@@ -104,22 +88,6 @@ private[sources] object FixedWidthV2 {
       if (frac == 0L) base
       else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
     case _ => String.valueOf(row.get(idx, dt))
-  }
-
-  /** Java-serializable Hadoop conf carrier (Configuration is only
-    * Writable-serializable) — same shape as Spark's own file sources use.
-    */
-  final class SerializableConf(@transient var conf: Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new Configuration(false)
-      conf.readFields(in)
-    }
   }
 }
 
@@ -150,19 +118,11 @@ private[sources] class FixedWidthScanBuilder(
 
   override def build(): Scan = {
     val spark = org.apache.spark.sql.SparkSession.active
-    // 'paths' arrives as a JSON array (DataFrameReader.load(paths*)
-    // serializes it with Jackson) — parse it as JSON, not by bracket/quote
-    // stripping, so a path containing a comma or escaped quote survives.
-    val paths: Seq[String] =
-      Option(options.get("paths"))
-        .map(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readValue(_, classOf[Array[String]]).toSeq)
-        .getOrElse(Option(options.get("path")).toSeq)
-    val files = FixedWidthV2.listFiles(paths,
-      spark.sessionState.newHadoopConf())
+    val files = SourceFiles.list(SourceFiles.paths(options),
+      spark.sessionState.newHadoopConf()).map(_.getPath.toString)
     new FixedWidthScan(fields, required,
       Option(options.get("trim")).forall(_.toBoolean), files,
-      new FixedWidthV2.SerializableConf(spark.sessionState.newHadoopConf()))
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 }
 
@@ -171,7 +131,7 @@ private[sources] case class FixedWidthFilePartition(file: String)
 
 private[sources] class FixedWidthScan(
     fields: Seq[(String, Int)], required: StructType, trim: Boolean,
-    files: Seq[String], conf: FixedWidthV2.SerializableConf)
+    files: Seq[String], conf: SerializableConfiguration)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -188,7 +148,7 @@ private[sources] class FixedWidthScan(
 
 private[sources] class FixedWidthReaderFactory(
     fields: Seq[(String, Int)], requiredNames: Seq[String], trim: Boolean,
-    conf: FixedWidthV2.SerializableConf)
+    conf: SerializableConfiguration)
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -200,7 +160,7 @@ private[sources] class FixedWidthReaderFactory(
     val picks = requiredNames.map(byName)
     new PartitionReader[InternalRow] {
       private val path = new Path(file)
-      private val in = path.getFileSystem(conf.conf).open(path)
+      private val in = path.getFileSystem(conf.value).open(path)
       private val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
       private var line: String = _
@@ -235,7 +195,7 @@ private[sources] class FixedWidthWriteBuilder(
       val path = Option(info.options.get("path")).getOrElse(
         throw new IllegalArgumentException("fixedwidth write needs a path"))
       new FixedWidthBatchWrite(fields, info.schema(), path, doTruncate,
-        new FixedWidthV2.SerializableConf(spark.sessionState.newHadoopConf()))
+        new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     }
   }
 }
@@ -250,7 +210,7 @@ private[sources] class FixedWidthWriteBuilder(
   */
 private[sources] class FixedWidthBatchWrite(
     fields: Seq[(String, Int)], schema: StructType, path: String,
-    truncate: Boolean, conf: FixedWidthV2.SerializableConf)
+    truncate: Boolean, conf: SerializableConfiguration)
     extends BatchWrite {
 
   private val jobToken = java.util.UUID.randomUUID.toString.take(8)
@@ -258,7 +218,7 @@ private[sources] class FixedWidthBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.conf)
+    val fs = dir.getFileSystem(conf.value)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     else if (truncate)
       prior = fs.listStatus(dir).filter(_.isFile).map(_.getPath.toString)
@@ -267,13 +227,13 @@ private[sources] class FixedWidthBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     if (truncate && prior.nonEmpty) {
-      val fs = new Path(path).getFileSystem(conf.conf)
+      val fs = new Path(path).getFileSystem(conf.value)
       val fresh = messages.collect { case FixedWidthCommitted(f) => f }.toSet
       prior.filterNot(fresh).foreach(f => fs.delete(new Path(f), false))
     }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
+    val fs = new Path(path).getFileSystem(conf.value)
     messages.collect { case FixedWidthCommitted(f) =>
       fs.delete(new Path(f), false)
     }
@@ -286,7 +246,7 @@ private[sources] case class FixedWidthCommitted(file: String)
 private[sources] class FixedWidthWriterFactory(
     fields: Seq[(String, Int)], schema: StructType, path: String,
     jobToken: String,
-    conf: FixedWidthV2.SerializableConf) extends DataWriterFactory {
+    conf: SerializableConfiguration) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     // render in FIELDS order (the record layout), wherever each column sits
@@ -299,7 +259,7 @@ private[sources] class FixedWidthWriterFactory(
     val fin = new Path(path, f"part-$partitionId%05d-$taskId-$jobToken.txt")
     val tmp = new Path(path, f".part-$partitionId%05d-$taskId-$jobToken.tmp")
     new DataWriter[InternalRow] {
-      private val fs = tmp.getFileSystem(conf.conf)
+      private val fs = tmp.getFileSystem(conf.value)
       private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
         fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
 

@@ -99,12 +99,14 @@ object Sources {
     * walks arbitrary flat files element-by-element guided by DFASDL element
     * widths). Spark form: one distributed text scan + a substring projection
     * per field — splits parallelize by file block, the projection is pure
-    * codegen. `fields` are (name, width) pairs in record order; values are
-    * trimmed (DFASDL's trim="both" default) and empty fields become null.
+    * codegen. `fields` are (name, width) pairs in record order, every width
+    * > 0; values are trimmed (DFASDL's trim="both" default) and empty
+    * fields become null.
     */
   def readFixedWidth(spark: SparkSession, path: String,
                      fields: Seq[(String, Int)],
                      trimValues: Boolean = true): DataFrame = {
+    requirePositiveWidths(fields)
     val offsets = fields.scanLeft(1) { case (off, (_, w)) => off + w }
     val cols = fields.zip(offsets).map { case ((name, w), off) =>
       val raw = org.apache.spark.sql.functions.substring(
@@ -116,6 +118,15 @@ object Sources {
     }
     spark.read.text(path).select(cols: _*)
   }
+
+  /** Rejects a fixed-width layout holding a field of width <= 0, naming it:
+    * such a field would otherwise slice wrong or fail inside a task.
+    */
+  private[sources] def requirePositiveWidths(fields: Seq[(String, Int)]): Unit =
+    fields.find(_._2 <= 0).foreach { case (n, w) =>
+      throw new IllegalArgumentException(
+        s"fixed-width field '$n:$w' needs a width > 0")
+    }
 
   /** Excel .xlsx (helpers/ExcelToCSVConverter.scala:50). Pure-JDK OOXML
     * reader (ZIP + StAX — see [[Excel]]); one task per workbook via the

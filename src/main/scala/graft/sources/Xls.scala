@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Legacy binary Excel (.xls, BIFF8) source implemented with the JDK only —
   * the last reference Excel surface
@@ -30,32 +29,8 @@ object Xls {
     * first file; all columns StringType.
     */
   def read(spark: SparkSession, path: String, header: Boolean = true,
-           sheet: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xls")
-      .load(path)
-      .select("path", "content")
-    val firstFile = bin.sort(col("path")).select("content").head
-    val firstRows = parseWorkbook(firstFile.getAs[Array[Byte]](0), sheet)
-    require(firstRows.nonEmpty, s"empty workbook under $path")
-    val width = firstRows.map(_.length).max
-    val names: Seq[String] =
-      if (header)
-        firstRows.head.padTo(width, null).zipWithIndex.map {
-          case (c, i) => if (c == null || c.isEmpty) s"_c$i" else c
-        }
-      else (0 until width).map(i => s"_c$i")
-    val n = names.length
-    val sheetName = sheet
-    val rows = bin.as[(String, Array[Byte])].flatMap { case (_, bytes) =>
-      val parsed = parseWorkbook(bytes, sheetName)
-      val data = if (header) parsed.drop(1) else parsed
-      data.map(r => (r.padTo(n, null).take(n)): Seq[String])
-    }
-    rows.toDF("cells")
-      .select((0 until n).map(i => col("cells").getItem(i).as(names(i))): _*)
-  }
+           sheet: Option[String] = None): DataFrame =
+    Excel.readWorkbooks(spark, path, "*.xls", parseWorkbook, header, sheet)
 
   /** Parse one workbook: rows of string cells from the requested (or first)
     * sheet.

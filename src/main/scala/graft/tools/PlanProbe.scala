@@ -12,25 +12,51 @@ import org.apache.spark.sql.SparkSession
   * for config experiments (e.g. AQE coalescing modes) without recompiling.
   */
 object PlanProbe {
+
+  /** A parsed command line: the positionals in order, the bare flags
+    * (`--plan`, `--stages`, `--final`) and the `--set` confs.
+    */
+  private[graft] final case class Args(positional: Seq[String],
+                                       flags: Set[String],
+                                       sets: Seq[(String, String)])
+
+  /** Flags are position-independent ("--plan" must not be consumed as a
+    * positional); the value after a literal `--set` is a conf, never a
+    * positional, and `--set=k=v` is the same conf. A conf with no `=` or an
+    * empty key throws IllegalArgumentException.
+    */
+  private[graft] def parseArgs(args: Seq[String]): Args = {
+    def conf(kv: String): (String, String) = kv.split("=", 2) match {
+      case Array(k, v) if k.nonEmpty => k -> v
+      case _ => throw new IllegalArgumentException(
+        s"--set expects spark.conf.key=value, got '$kv'")
+    }
+    @scala.annotation.tailrec
+    def go(rest: List[String], pos: Vector[String], flags: Set[String],
+           sets: Vector[(String, String)]): Args = rest match {
+      case Nil => Args(pos, flags, sets)
+      case "--set" :: kv :: tail => go(tail, pos, flags, sets :+ conf(kv))
+      case "--set" :: Nil => throw new IllegalArgumentException(
+        "--set needs a spark.conf.key=value after it")
+      case a :: tail if a.startsWith("--set=") =>
+        go(tail, pos, flags, sets :+ conf(a.stripPrefix("--set=")))
+      case a :: tail if a.startsWith("--") => go(tail, pos, flags + a, sets)
+      case a :: tail => go(tail, pos :+ a, flags, sets)
+    }
+    go(args.toList, Vector.empty, Set.empty, Vector.empty)
+  }
+
   def main(args: Array[String]): Unit = {
-    // flags are position-independent: "--plan" must not be consumed as a
-    // positional (q1 dir --plan previously died in runs.toInt)
-    val positional = args.filterNot(_.startsWith("--"))
+    val Args(positional, flags, sets) = parseArgs(args.toSeq)
     val name = positional.headOption.getOrElse("q1_agg")
     val sfDir = positional.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = positional.lift(2).map(_.toInt).getOrElse(3)
-    val showPlan = args.contains("--plan")
-    val sets = args.filter(_.startsWith("--set")).map(_.stripPrefix("--set"))
-      .filter(_.nonEmpty) ++
-      args.sliding(2).collect { case Array("--set", kv) => kv }
     // static (core) confs only take effect at context construction —
     // stage them as system properties (SparkConf loads spark.* props),
     // then ALSO set runtime-settable SQL confs on the live session
-    sets.map(_.split("=", 2)).collect { case Array(k, v) =>
-      System.setProperty(k, v)
-    }
+    sets.foreach { case (k, v) => System.setProperty(k, v) }
     val spark = graft.GraftSession.get()
-    sets.map(_.split("=", 2)).collect { case Array(k, v) =>
+    sets.foreach { case (k, v) =>
       println(s"[probe] conf $k=$v")
       try spark.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException =>
@@ -41,7 +67,7 @@ object PlanProbe {
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'; valid names: " +
           graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-      if (showPlan) fn(spark, sfDir).explain("formatted")
+      if (flags("--plan")) fn(spark, sfDir).explain("formatted")
       // aggregate task metrics per run: input bytes ≈ how often the source
       // files were really scanned (runtime exchange/stage reuse is
       // invisible in the initial plan), shuffle bytes = exchange volume,
@@ -52,7 +78,7 @@ object PlanProbe {
       val nTasks = new java.util.concurrent.atomic.AtomicLong
       // per-stage attribution (--stages): stage id → (tasks, task-ms) so a
       // ballooning stage is nameable instead of guessed at
-      val showStages = args.contains("--stages")
+      val showStages = flags("--stages")
       val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
       val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       spark.sparkContext.addSparkListener(
@@ -92,7 +118,7 @@ object PlanProbe {
         // --final: the executed (post-AQE) operator skeleton — join
         // strategies and exchange counts as they actually RAN, which the
         // initial --plan cannot show
-        if (args.contains("--final") && i == runs) {
+        if (flags("--final") && i == runs) {
           val df = fn(spark, sfDir); df.count()
           val skeleton = df.queryExecution.executedPlan.toString.linesIterator
             .map(_.replaceAll("\\[.*", "").replaceAll("\\(\\d+\\)", ""))

@@ -1,13 +1,14 @@
 package graft.tools
 
 import graft.GraftSession
-import graft.sources.Dfasdl
+import graft.sources.{Dfasdl, Sources}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** DFASDL-reader throughput harness: how fast do the three text-parsing
-  * paths scan a 10x corpus, and does per-file parallelism actually hold?
+/** Text-source throughput harness: how fast do the three DFASDL
+  * text-parsing paths and the two fixed-width readers scan a 10x corpus,
+  * and does per-file parallelism actually hold?
   *
   * The DFASDL readers are oracle-gated for correctness (q42-q53) but had
   * no measured scale leg. Each is a different execution shape:
@@ -18,6 +19,10 @@ import org.apache.spark.sql.types.StringType
   *   - choice_stream: the r12 branch-combination alternation (q53 shape,
   *     branch-dependent record arity; alternation + per-combination
   *     dispatch predicates are the costliest regex path).
+  *   - fixed_width_fn / fixed_width_v2: the same fixed-width records
+  *     through [[Sources.readFixedWidth]] (splittable text scan +
+  *     substring projection) and `format("fixedwidth")` (one partition
+  *     per file), on `files` files and on one file.
   *
   * Each leg stages sf1 orders (~1.5M records) into `files` text files,
   * then times a full scan -> count + checksum aggregate (forces every
@@ -162,6 +167,24 @@ object SourceScale {
           lit(";"), col("o_orderstatus")).as("value"))
         .write.mode("overwrite").text(ch64Path)
 
+      // fixed-width twins of the same records; padded wider than any
+      // sf value so no field truncates
+      val fwFields = Seq("okey" -> 12, "ck" -> 12, "prio" -> 16, "status" -> 2)
+      val fwLine = concat(fwFields.zip(Seq("o_orderkey", "o_custkey",
+        "o_orderpriority", "o_orderstatus")).map { case ((_, w), c) =>
+        rpad(col(c).cast(StringType), w, " ")
+      }: _*).as("value")
+      val fwPath = s"$base/fw"
+      orders.repartition(files).select(fwLine).write.mode("overwrite").text(fwPath)
+      val fw1Path = s"$base/fw1"
+      orders.repartition(1).select(fwLine).write.mode("overwrite").text(fw1Path)
+      val fwSpec = fwFields.map { case (f, w) => s"$f:$w" }.mkString(",")
+      def fwFn(p: String) = Sources.readFixedWidth(spark, p, fwFields)
+        .select(col("okey").cast("long").as("okey"))
+      def fwV2(p: String) = spark.read.format("fixedwidth")
+        .option("fields", fwSpec).load(p)
+        .select(col("okey").cast("long").as("okey"))
+
       def scan(df: DataFrame): (Long, Long) = {
         val r = df.agg(count(lit(1)), sum(col("okey"))).collect()(0)
         (r.getLong(0), r.getLong(1))
@@ -188,7 +211,11 @@ object SourceScale {
         leg("choice_stream_1file", () =>
           Dfasdl.readDelimited(spark, ch1Path, choiceDoc)),
         leg("choice_stream_64", () =>
-          Dfasdl.readDelimited(spark, ch64Path, choice64Doc)))
+          Dfasdl.readDelimited(spark, ch64Path, choice64Doc)),
+        leg("fixed_width_fn", () => fwFn(fwPath)),
+        leg("fixed_width_fn_1file", () => fwFn(fw1Path)),
+        leg("fixed_width_v2", () => fwV2(fwPath)),
+        leg("fixed_width_v2_1file", () => fwV2(fw1Path)))
       val surfaces = legs.map { case (name, sec) =>
         f""""$name":{"sec":$sec%.3f,"rows_per_s":${(n / sec).toLong}}"""
       }.mkString(",")

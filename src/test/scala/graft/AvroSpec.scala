@@ -125,6 +125,30 @@ class AvroSpec extends AnyFunSuite {
     assert(many.count() == orders.count())
   }
 
+  test("graftavro loads a glob of container files") {
+    val df = (0L until 3000L).toDF("id").repartition(4)
+    val path = tmp("avro_glob")
+    Avro.writeAvro(df, path, codec = "null")
+    val back = spark.read.format("graftavro").load(s"$path/*.avro")
+    assert(back.count() == 3000L)
+    assert(back.agg(sum("id")).as[Long].head() == 2999L * 3000L / 2)
+  }
+
+  test("readAvro prunes columns through the graftavro scan") {
+    val orders = (0L until 1000L).toDF("o_orderkey")
+      .withColumn("o_custkey", col("o_orderkey") % 97)
+      .withColumn("o_totalprice", col("o_orderkey") * 1.5)
+    val path = tmp("avro_prune")
+    Avro.writeAvro(orders, path)
+    val plan = Avro.readAvro(spark, path).select("o_orderkey")
+      .queryExecution.executedPlan
+    assert(plan.toString.contains("ReadSchema: o_orderkey"), plan.toString)
+    val scan = plan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail(s"no BatchScan in plan:\n$plan"))
+    assert(scan.scan.readSchema().fieldNames.toSeq == Seq("o_orderkey"))
+  }
+
   test("multi-branch unions reject with a typed error") {
     import org.apache.avro.{Schema => AS, SchemaBuilder}
     val union = SchemaBuilder.record("r").fields()

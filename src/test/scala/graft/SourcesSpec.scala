@@ -383,6 +383,19 @@ class SourcesSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"leftover tmp files: ${stray.mkString(",")}")
   }
 
+  test("fixed-width readers reject malformed field specs, naming the entry") {
+    val dir = tmp("fwbad") + "/out"
+    Seq("1     alpha").toDF("value").write.text(dir)
+    for (spec <- Seq("a", "a:x", "a:-1", "id:6,b:0")) {
+      val e = intercept[IllegalArgumentException](
+        spark.read.format("fixedwidth").option("fields", spec).load(dir))
+      assert(e.getMessage.contains(s"'${spec.split(",").last}'"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](
+      Sources.readFixedWidth(spark, dir, Seq("id" -> 6, "name" -> 0)))
+    assert(e.getMessage.contains("'name:0'"), e.getMessage)
+  }
+
   test("schema-evolved parquet: merged read surfaces late columns as nulls") {
     import spark.implicits._
     val dir = tmp("evolve") + "/out"
