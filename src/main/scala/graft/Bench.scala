@@ -96,36 +96,18 @@ object Bench {
     // Two countermeasures, both recorded per query:
     //  - min-of-N wall time (N=SPARK_GRAFT_REPS, default 3): contention is
     //    bursty, so the min of two spaced runs sheds most of the tail;
-    //  - process-CPU seconds (all JVM threads, via the platform
-    //    OperatingSystemMXBean): the work a query does is ~invariant under
-    //    external load, so cpu_s is the metric to trust when wall times
-    //    disagree across artifacts.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    // per-query GC time (r17, the r16 adjudication lesson): a run whose
-    // walls blow up needs to show WHERE the time went — a uniform GC tax
-    // (heap pressure from pinned artifacts) reads completely differently
-    // from scheduling contention (GC flat, walls inflated). Sum across all
-    // collector beans; deltas are attributed to the rep that ran.
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMillis(): Long = {
-      var t = 0L
-      val it = gcBeans.iterator()
-      while (it.hasNext) { val v = it.next().getCollectionTime; if (v > 0) t += v }
-      t
-    }
+    //  - process-CPU and GC seconds from Metrics.measure, the one timer
+    //    (the artifact builds are timed by the same call in prebuild).
+    // Heap peak: the largest whole-heap occupancy after a collection,
+    // sampled at the end of each timed query.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
+    var heapPeak = 0L
     def timeOnce(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
-      val g0 = gcMillis()
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      attempt(name)(fn(spark, sfDir).count())
-      val sec = (System.nanoTime() - t0) / 1e9
-      val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-      val gc = (gcMillis() - g0) / 1e3
+                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Metrics.Usage = {
+      val (_, use) = Metrics.measure(attempt(name)(fn(spark, sfDir).count()))
+      heapPeak = math.max(heapPeak, Metrics.heapAfterGcBytes())
       Artifacts.reclaim(spark, prebuilt.protectedRdds)
-      (sec, cpu, gc)
+      use
     }
     // keep every rep's wall time: the per-rep spread in the artifact is
     // what lets a reader distinguish "code got slower" (all reps slow)
@@ -133,15 +115,14 @@ object Bench {
     val repWalls = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val timed = picked.map { case (name, fn) =>
       val runs = (1 to reps).map(_ => timeOnce(name, fn))
-      repWalls(name) = runs.map(_._1)
+      repWalls(name) = runs.map(_.wallS)
       // min wall; CPU and GC from the min-wall run (the least-contended
       // sample)
-      name -> runs.minBy(_._1)
-    }.toMap ++
-      prebuilt.seconds.map { case (name, s) => name -> (s, Double.NaN, Double.NaN) }
-    val results = timed.map { case (k, (w, _, _)) => k -> w }
-    val cpuResults = timed.collect { case (k, (_, c, _)) if !c.isNaN => k -> c }
-    val gcResults = timed.collect { case (k, (_, _, g)) if !g.isNaN => k -> g }
+      name -> runs.minBy(_.wallS)
+    }.toMap ++ prebuilt.builds
+    val results = timed.map { case (k, u) => k -> u.wallS }
+    val cpuResults = timed.map { case (k, u) => k -> u.cpuS }
+    val gcResults = timed.map { case (k, u) => k -> u.gcS }
     // The driver captures only the tail of stdout, and a single line carrying
     // all ~120 per-query timings truncates mid-line (BENCH parsed=null for 5
     // rounds). So: write the FULL per-query map to bench_full.json on disk,
@@ -164,15 +145,9 @@ object Bench {
     // cpus + GC totals + heap peak stamped into every artifact (r17): the
     // r16 32-core regression cost a round of archaeology because the
     // artifact couldn't say what parallelism it ran at or whether the time
-    // went to GC. Heap peak is the max across heap pools' peak-usage
-    // watermarks (set by the JVM, no sampling needed).
+    // went to GC.
     val gcTotal = gcResults.values.sum
-    val heapPeakMb = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-        .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L)).sum / (1024 * 1024)
-    }
+    val heapPeakMb = heapPeak / (1024 * 1024)
     val loadJson = s""""load_1m_before":${f(loadBefore)},"load_1m_after":${f(loadAfter)},"host_cores":$hostCores,"cpus":$cpus,"gc_total_s":${f(gcTotal)},"heap_peak_mb":$heapPeakMb,"loaded":$loaded,"load_waited_s":$waitedS"""
     val repsJson = repWalls.toSeq.sortBy(_._1).map { case (k, ws) =>
       "\"" + k + "\":[" + ws.map(f).mkString(",") + "]"

@@ -1,43 +1,186 @@
 package graft
 
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.graft.MetricsBridge
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** Per-query execution accounting — the Spark-native form of the
-  * reference's run reporting (LogReporter.scala aggregates per-run
-  * element/row counts; ClusterMetricsListener.scala samples load): a
-  * [[QueryExecutionListener]] that captures, for every completed action,
-  * the action name, wall duration, rows read at the leaves and rows
-  * produced at the root, straight from the executed plan's SQL metrics.
+/** The one measurement layer — the Spark-native form of the reference's
+  * run reporting (LogReporter.scala aggregates per-run element/row counts;
+  * ClusterMetricsListener.scala samples load).
   *
-  * Passive observability: listeners run on the listener bus AFTER the
-  * action completes, add nothing to the query path, and hold a bounded
-  * in-memory report queue (oldest dropped past `capacity`) — safe to leave
-  * registered on a long-lived session feeding a metrics scraper.
+  * [[Reporter]] records, for every SQL execution of one session (an
+  * action: `count`, `collect`, a write, a `localCheckpoint`), a
+  * [[QueryReport]]: the action name, wall duration, rows read at the
+  * leaves and produced at the root, whether it failed, the Catalyst phase
+  * times (`analysis`, `optimization`, `planning`), its jobs, its stages
+  * (id, name, tasks, executor run time) and, summed over its tasks,
+  * executor run and CPU time, input bytes, shuffle bytes read and
+  * written, spill and task GC. For every streaming trigger of a query
+  * started on that session it records a [[TriggerReport]]: the progress
+  * `durationMs` (addBatch, getBatch, walCommit, triggerExecution, …) and
+  * each state operator's update, removal and commit times.
+  *
+  * Attach with `Metrics.attach(spark)`, read `reports` / `triggers`, and
+  * `close()` when done. `drain()` waits (bounded) until every action that
+  * has returned is in `reports` — the listener bus is asynchronous.
+  * Passive: the reporter runs on the listener bus, starts no Spark job,
+  * reads only metrics the executed plan and the tasks already carry, and
+  * holds bounded queues (oldest dropped past `capacity`), so it is safe to
+  * leave attached to a long-lived session feeding a metrics scraper.
+  *
+  * [[measure]] is the process-side timer (wall, process CPU, GC) and
+  * [[heapAfterGcBytes]] the heap occupancy sample: `Bench`,
+  * `Artifacts.prebuild` and the tools time with these, nothing else.
   */
 object Metrics {
 
+  final case class StageReport(id: Int, name: String, tasks: Int, runMs: Long)
+
   final case class QueryReport(action: String, durationMs: Long,
                                rowsRead: Long, outputRows: Long,
-                               failed: Boolean)
+                               failed: Boolean, executionId: Long,
+                               phasesMs: Map[String, Long], jobs: Int,
+                               stages: Seq[StageReport], tasks: Long,
+                               runMs: Long, cpuMs: Long, inputBytes: Long,
+                               shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                               spillBytes: Long, gcMs: Long)
 
-  final class Reporter(capacity: Int = 1000) extends QueryExecutionListener {
-    private val buf = new ConcurrentLinkedQueue[QueryReport]()
+  final case class StateReport(operator: String, rows: Long, memoryBytes: Long,
+                               updatesMs: Long, removalsMs: Long, commitMs: Long)
+
+  final case class TriggerReport(query: String, runId: java.util.UUID,
+                                 batchId: Long, inputRows: Long,
+                                 durationMs: Map[String, Long],
+                                 state: Seq[StateReport])
+
+  /** A queue that drops its oldest entry past `capacity`. */
+  private final class Bounded[A](capacity: Int) {
+    private val buf = new ConcurrentLinkedQueue[A]()
     // ConcurrentLinkedQueue.size() is O(n); track it alongside so eviction
-    // on the listener bus stays O(1) per completed query.
-    private val bufSize = new java.util.concurrent.atomic.AtomicInteger(0)
+    // on the listener bus stays O(1) per record.
+    private val bufSize = new AtomicInteger(0)
 
-    private def record(r: QueryReport): Unit = {
-      buf.add(r)
+    def add(a: A): Unit = {
+      buf.add(a)
       bufSize.incrementAndGet()
       while (bufSize.get > capacity) {
         if (buf.poll() != null) bufSize.decrementAndGet()
         else return // racing evictor emptied it; counter resyncs on next add
+      }
+    }
+
+    def snapshot: Seq[A] = buf.iterator().asScala.toSeq
+
+    def clear(): Unit = {
+      buf.clear()
+      // reset the counter WITH the queue: a stale count at capacity would
+      // make every later add() evict the element it just added, and the
+      // queue would stay empty forever
+      bufSize.set(0)
+    }
+  }
+
+  private final class StageTotals(val name: String) {
+    var tasks = 0
+    var runMs = 0L
+  }
+
+  /** One open execution's running sums, fed by its jobs' stages and tasks. */
+  private final class ExecTotals {
+    var jobs = 0
+    val stages = mutable.LinkedHashMap.empty[Int, StageTotals]
+    var tasks, runMs, cpuNs, inputBytes, shuffleRead, shuffleWrite, spill, gcMs = 0L
+  }
+
+  final class Reporter private[Metrics] (spark: SparkSession, capacity: Int)
+      extends SparkListener {
+    private val queries = new Bounded[QueryReport](capacity)
+    private val trigs = new Bounded[TriggerReport](capacity)
+    // touched only on this listener's bus thread: executions still running
+    // (keyed by the spark.sql.execution.id job property, which differs from
+    // QueryExecution.id) and the execution each submitted stage belongs to
+    private val open = mutable.HashMap.empty[Long, ExecTotals]
+    private val stageExec = mutable.HashMap.empty[Int, Long]
+
+    private def executionId(props: java.util.Properties): Option[Long] =
+      Option(props).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .map(_.toLong)
+
+    private def totals(id: Long): ExecTotals = open.getOrElseUpdate(id, new ExecTotals)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      executionId(e.properties).foreach(totals(_).jobs += 1)
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      executionId(e.properties).foreach { id =>
+        val info = e.stageInfo
+        stageExec(info.stageId) = id
+        totals(id).stages.getOrElseUpdate(info.stageId,
+          new StageTotals(info.name.takeWhile(_ != '\n')))
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val m = e.taskMetrics
+      for (id <- stageExec.get(e.stageId); t <- open.get(id) if m != null) {
+        t.tasks += 1
+        t.runMs += m.executorRunTime
+        t.cpuNs += m.executorCpuTime
+        t.inputBytes += m.inputMetrics.bytesRead
+        t.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        t.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        t.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        t.gcMs += m.jvmGCTime
+        t.stages.get(e.stageId).foreach { s => s.tasks += 1; s.runMs += m.executorRunTime }
+      }
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case end: SparkListenerSQLExecutionEnd => finish(end)
+      case _ =>
+    }
+
+    /** Every task of an execution reaches the bus before its end event, so
+      * the sums are complete here; executions of other sessions sharing
+      * the SparkContext are dropped.
+      */
+    private def finish(e: SparkListenerSQLExecutionEnd): Unit = {
+      val t = open.remove(e.executionId).getOrElse(new ExecTotals)
+      stageExec --= t.stages.keys
+      val qe = MetricsBridge.queryExecution(e)
+      if (qe != null && (qe.sparkSession eq spark)) {
+        val failed = MetricsBridge.failed(e)
+        val (read, out) = if (failed) (-1L, -1L) else rowsAt(qe)
+        queries.add(QueryReport(
+          MetricsBridge.executionName(e).getOrElse(""),
+          MetricsBridge.durationNs(e) / 1000000L, read, out, failed,
+          e.executionId, qe.tracker.phases.map { case (k, p) => k -> p.durationMs },
+          t.jobs,
+          t.stages.toSeq.map { case (id, s) => StageReport(id, s.name, s.tasks, s.runMs) },
+          t.tasks, t.runMs, t.cpuNs / 1000000L, t.inputBytes, t.shuffleRead,
+          t.shuffleWrite, t.spill, t.gcMs))
+      }
+    }
+
+    private[Metrics] val streams: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        trigs.add(TriggerReport(Option(p.name).getOrElse(""), p.runId, p.batchId,
+          p.numInputRows,
+          p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap,
+          p.stateOperators.toSeq.map(s => StateReport(s.operatorName, s.numRowsTotal,
+            s.memoryUsedBytes, s.allUpdatesTimeMs, s.allRemovalsTimeMs, s.commitTimeMs))))
       }
     }
 
@@ -61,44 +204,99 @@ object Metrics {
       // the ROOT needs the same AQE unwrap the leaves get: under adaptive
       // execution (default on) executedPlan is AdaptiveSparkPlanExec,
       // which carries no numOutputRows of its own — without the unwrap
-      // every report's output count read -1
-      val root = qe.executedPlan match {
+      // every report's output count read -1; the final result stage and a
+      // whole-stage-codegen root likewise carry no row count of their own,
+      // so read the operator inside
+      @scala.annotation.tailrec
+      def unwrap(p: org.apache.spark.sql.execution.SparkPlan)
+          : org.apache.spark.sql.execution.SparkPlan = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
+          unwrap(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => unwrap(q.plan)
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => unwrap(w.child)
         case other => other
       }
+      val root = unwrap(qe.executedPlan)
       val out = root.metrics.get("numOutputRows")
         .map(_.value).getOrElse(-1L)
       (read, out)
     }
 
-    override def onSuccess(funcName: String, qe: QueryExecution,
-                           durationNs: Long): Unit = {
-      val (read, out) = rowsAt(qe)
-      record(QueryReport(funcName, durationNs / 1000000L, read, out,
-        failed = false))
-    }
+    /** Snapshot of captured execution reports, oldest first. */
+    def reports: Seq[QueryReport] = queries.snapshot
 
-    override def onFailure(funcName: String, qe: QueryExecution,
-                           exception: Exception): Unit =
-      record(QueryReport(funcName, -1L, -1L, -1L, failed = true))
+    /** Snapshot of captured streaming triggers, oldest first. */
+    def triggers: Seq[TriggerReport] = trigs.snapshot
 
-    /** Snapshot of captured reports, oldest first. */
-    def reports: Seq[QueryReport] = buf.iterator().asScala.toSeq
+    def clear(): Unit = { queries.clear(); trigs.clear() }
 
-    def clear(): Unit = {
-      buf.clear()
-      // reset the counter WITH the queue: a stale count at capacity would
-      // make every later record() evict the element it just added, and
-      // reports would stay empty forever
-      bufSize.set(0)
+    /** Waits, at most `timeoutMs`, until every event posted so far — the
+      * end of every action that has returned, the progress of every
+      * trigger that has finished — has reached this reporter; throws
+      * java.util.concurrent.TimeoutException past the bound.
+      */
+    def drain(timeoutMs: Long = 30000L): Unit =
+      MetricsBridge.drain(spark.sparkContext, timeoutMs)
+
+    /** Detaches both listeners; the captured reports stay readable. */
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(this)
+      spark.streams.removeListener(streams)
     }
   }
 
   /** Register a reporter on the session and return it. */
   def attach(spark: SparkSession, capacity: Int = 1000): Reporter = {
-    val r = new Reporter(capacity)
-    spark.listenerManager.register(r)
+    val r = new Reporter(spark, capacity)
+    spark.sparkContext.addSparkListener(r)
+    spark.streams.addListener(r.streams)
     r
+  }
+
+  /** Wall, process-CPU and GC seconds of one measured body. */
+  final case class Usage(wallS: Double, cpuS: Double, gcS: Double)
+
+  // Process-CPU seconds (all JVM threads, via the platform
+  // OperatingSystemMXBean): the work a body does is ~invariant under
+  // external load, so cpuS is the number to trust when wall times disagree
+  // across runs on a shared host.
+  private val osBean = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  // GC time (r17): a run whose walls blow up needs to show WHERE the time
+  // went — a uniform GC tax (heap pressure from pinned artifacts) reads
+  // completely differently from scheduling contention (GC flat, walls
+  // inflated). Summed across all collector beans.
+  private val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
+
+  private def gcMillis(): Long = gcBeans.map(_.getCollectionTime).filter(_ > 0).sum
+
+  /** Runs `body` and returns its result with the wall, process-CPU and GC
+    * seconds it took; an exception propagates unmeasured.
+    */
+  def measure[A](body: => A): (A, Usage) = {
+    val g0 = gcMillis()
+    val c0 = osBean.getProcessCpuTime
+    val t0 = System.nanoTime()
+    val r = body
+    val wall = (System.nanoTime() - t0) / 1e9
+    (r, Usage(wall, (osBean.getProcessCpuTime - c0) / 1e9, (gcMillis() - g0) / 1e3))
+  }
+
+  /** Whole-heap occupancy right after the latest collection, in bytes: for
+    * each collector, the heap pools of its last collection's after-GC
+    * usage summed — one collection's snapshot of every pool at the same
+    * moment — and the largest of those sums; 0 before any collection.
+    * Summing each pool's own peak instead adds watermarks from different
+    * moments and can exceed -Xmx.
+    */
+  def heapAfterGcBytes(): Long = {
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    gcBeans.flatMap {
+      case b: com.sun.management.GarbageCollectorMXBean => Option(b.getLastGcInfo)
+      case _ => None
+    }.map(_.getMemoryUsageAfterGc.asScala.collect {
+      case (pool, usage) if heapPools(pool) => usage.getUsed
+    }.sum).maxOption.getOrElse(0L)
   }
 }

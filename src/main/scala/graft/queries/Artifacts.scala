@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Metrics
 import org.apache.spark.sql.SparkSession
 
 /** The shared artifacts: offline steps that several registered queries
@@ -29,20 +30,20 @@ object Artifacts {
     Artifact("s_hybrid_serve_build", RetrievalQueries.hybridServeConsumers,
       RetrievalQueries.hybridServePrebuild(_, _)))
 
-  /** Build seconds per artifact built, the artifacts whose build failed,
-    * and the persisted RDDs [[reclaim]] must keep.
+  /** Wall, CPU and GC seconds per artifact built, the artifacts whose
+    * build failed, and the persisted RDDs [[reclaim]] must keep.
     */
-  final case class Prebuilt(seconds: Seq[(String, Double)], failed: Seq[String],
+  final case class Prebuilt(builds: Seq[(String, Metrics.Usage)], failed: Seq[String],
                             protectedRdds: Set[Int])
 
-  /** Builds, timed, every artifact a `picked` query reads; a failed build
-    * goes to stderr and `failed`, never into `seconds`. Call it before the
-    * first query: every RDD persisted by then is protected.
+  /** Builds, timed by [[Metrics.measure]], every artifact a `picked` query
+    * reads; a failed build goes to stderr and `failed`, never into
+    * `builds`. Call it before the first query: every RDD persisted by then
+    * is protected.
     */
   def prebuild(spark: SparkSession, dir: String, picked: Set[String]): Prebuilt = {
     val (failed, built) = all.filter(_.consumers.exists(picked)).partitionMap { a =>
-      val t0 = System.nanoTime()
-      try { a.build(spark, dir); Right(a.name -> (System.nanoTime() - t0) / 1e9) }
+      try Right(a.name -> Metrics.measure(a.build(spark, dir))._2)
       catch { case e: Throwable =>
         System.err.println(s"[artifacts] ${a.name} FAILED: ${e.getMessage}")
         Left(a.name)

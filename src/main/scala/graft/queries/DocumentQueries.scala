@@ -626,16 +626,6 @@ object DocumentQueries {
     Dedup.ngramJaccardPairs(u, "text", "doc_id",
       blockCols = Seq("lang", "source"), n = 4, threshold = 0.8)
 
-  /** The exact pair derivation [[clusterLabels]] feeds to components() —
-    * exposed (uncached) for tools.CcProfile's stage-cost attribution.
-    */
-  def clusterPairsForProfile(spark: SparkSession, dir: String): DataFrame =
-    clusterPairs(clusterInput(spark, dir))
-
-  /** The chained near-dup corpus itself — see [[clusterPairsForProfile]]. */
-  def clusterInputForProfile(spark: SparkSession, dir: String): DataFrame =
-    clusterInput(spark, dir)
-
   // The cluster labels derive ONCE per (session, data dir) and are shared
   // by the three registered consumers (d_dedup_cluster, d_dedup_apply,
   // d_dedup_keep_best): the iterative CC loop is the latency-bound step

@@ -1,15 +1,26 @@
 package graft.tools
 
+import graft.Metrics
+import graft.queries.Artifacts
 import org.apache.spark.sql.SparkSession
 
-/** Dev utility: print the formatted physical plan of one registry query and
-  * time N runs — the `.explain`-and-iterate loop SURVEY §5 prescribes.
+/** Dev utility: print the formatted physical plan of one registry query,
+  * or build one shared artifact, and time N runs — the
+  * `.explain`-and-iterate loop SURVEY §5 prescribes. Each run is read from
+  * a [[graft.Metrics]] reporter: a summary line, then one line per SQL
+  * execution (an artifact's iterative rounds each show up as their own).
   *
-  * Usage: runMain graft.tools.PlanProbe <queryName> [sfDir] [runs] [--plan]
+  * Usage: runMain graft.tools.PlanProbe <queryName | artifactName> [sfDir]
+  *          [runs] [--plan] [--stages] [--final]
   *          [--set spark.conf.key=value ...]
   *
-  * `--set k=v` applies runtime SQL confs before running — the A-B lever
-  * for config experiments (e.g. AQE coalescing modes) without recompiling.
+  * Artifact names are the `Artifacts.all` line items, e.g.
+  * `d_cluster_labels_build`; each artifact run builds on a fresh
+  * `spark.newSession()`, so the per-session artifact cache is cold while
+  * the JVM stays warm. `--set k=v` applies runtime SQL confs before
+  * running — the A-B lever for config experiments (e.g. AQE coalescing
+  * modes) without recompiling. `--stages` lists the last run's 12 most
+  * expensive stages; `--plan` and `--final` apply to queries only.
   */
 object PlanProbe {
 
@@ -56,70 +67,84 @@ object PlanProbe {
     // then ALSO set runtime-settable SQL confs on the live session
     sets.foreach { case (k, v) => System.setProperty(k, v) }
     val spark = graft.GraftSession.get()
-    sets.foreach { case (k, v) =>
-      println(s"[probe] conf $k=$v")
-      try spark.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        println(s"[probe]   ($k is static — applied via system property)")
-      }
-    }
-    try {
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'; valid names: " +
-          graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-      if (flags("--plan")) fn(spark, sfDir).explain("formatted")
-      // aggregate task metrics per run: input bytes ≈ how often the source
-      // files were really scanned (runtime exchange/stage reuse is
-      // invisible in the initial plan), shuffle bytes = exchange volume,
-      // executor run time = the true parallel work behind the wall time
-      val inB = new java.util.concurrent.atomic.AtomicLong
-      val shB = new java.util.concurrent.atomic.AtomicLong
-      val runMs = new java.util.concurrent.atomic.AtomicLong
-      val nTasks = new java.util.concurrent.atomic.AtomicLong
-      // per-stage attribution (--stages): stage id → (tasks, task-ms) so a
-      // ballooning stage is nameable instead of guessed at
-      val showStages = flags("--stages")
-      val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-      val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = e.taskMetrics
-            if (m != null) {
-              inB.addAndGet(m.inputMetrics.bytesRead)
-              shB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-              runMs.addAndGet(m.executorRunTime)
-              nTasks.incrementAndGet()
-              stageAgg.merge(e.stageId, (1L, m.executorRunTime),
-                (a, b) => (a._1 + b._1, a._2 + b._2))
-            }
-          }
-          override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            stageName.put(e.stageInfo.stageId, e.stageInfo.name.takeWhile(_ != '\n'))
-        })
-      (1 to runs).foreach { i =>
-        inB.set(0); shB.set(0); runMs.set(0); nTasks.set(0); stageAgg.clear()
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // listener events drain asynchronously; give the bus a beat
-        Thread.sleep(200)
-        println(f"[probe] $name run $i: $sec%.3f s ($n rows) " +
-          f"tasks=${nTasks.get} input=${inB.get / 1024}KB " +
-          f"shuffleW=${shB.get / 1024}KB taskTime=${runMs.get / 1000.0}%.2fs")
-        if (showStages && i == runs) {
-          import scala.jdk.CollectionConverters._
-          stageAgg.asScala.toSeq.sortBy(-_._2._2).take(12).foreach {
-            case (sid, (nt, ms)) =>
-              println(f"[probe]   stage $sid%4d: $nt%3d tasks ${ms / 1000.0}%7.2fs  " +
-                stageName.getOrDefault(sid, "?"))
-          }
+    def configure(s: SparkSession, log: Boolean): SparkSession = {
+      sets.foreach { case (k, v) =>
+        if (log) println(s"[probe] conf $k=$v")
+        try s.conf.set(k, v)
+        catch { case _: org.apache.spark.sql.AnalysisException =>
+          if (log) println(s"[probe]   ($k is static — applied via system property)")
         }
+      }
+      s
+    }
+    configure(spark, log = true)
+    try {
+      val query = graft.SparkEntry.queries.get(name)
+      val artifact = Artifacts.all.find(_.name == name)
+      if (query.isEmpty && artifact.isEmpty)
+        sys.error(s"unknown query or artifact '$name'; valid names: " +
+          (graft.SparkEntry.queries.keys ++ Artifacts.all.map(_.name))
+            .toSeq.sorted.mkString(", "))
+      // an artifact run gets a fresh session, so the per-session artifact
+      // cache starts cold (the build really builds) while the JVM stays
+      // warm; query runs share one session, as a caller's repeats would
+      def session(): SparkSession =
+        if (artifact.isEmpty) spark else configure(spark.newSession(), log = false)
+      def runOnce(s: SparkSession): String = query match {
+        case Some(fn) => s"${fn(s, sfDir).count()} rows"
+        case None => artifact.get.build(s, sfDir); "built"
+      }
+      if (flags("--plan")) query.foreach(_(spark, sfDir).explain("formatted"))
+      def kb(b: Long): String = s"${b / 1024}KB"
+      def sec(ms: Long): String = f"${ms / 1000.0}%.2fs"
+      (1 to runs).foreach { i =>
+        val s = session()
+        val rep = Metrics.attach(s)
+        try {
+          val (what, use) = Metrics.measure(runOnce(s))
+          // the listener bus is asynchronous: read only once every
+          // execution this run ended has reached the reporter
+          try rep.drain()
+          catch { case e: java.util.concurrent.TimeoutException =>
+            throw new IllegalStateException(
+              s"$name run $i: execution reports did not arrive in time", e)
+          }
+          val rs = rep.reports
+          if (rs.isEmpty)
+            throw new IllegalStateException(s"$name run $i: no execution report arrived")
+          // input bytes ≈ how often the source files were really scanned
+          // (runtime exchange/stage reuse is invisible in the initial
+          // plan), shuffle bytes = exchange volume, executor run time =
+          // the true parallel work behind the wall time
+          println(f"[probe] $name run $i: ${use.wallS}%.3f s ($what) " +
+            f"cpu=${use.cpuS}%.2fs gc=${use.gcS}%.2fs executions=${rs.size} " +
+            s"tasks=${rs.map(_.tasks).sum} input=${kb(rs.map(_.inputBytes).sum)} " +
+            s"shuffleW=${kb(rs.map(_.shuffleWriteBytes).sum)} " +
+            s"taskTime=${sec(rs.map(_.runMs).sum)}")
+          // one line per execution: an iterative build (the CC loop) shows
+          // each round's cost
+          rs.foreach { r =>
+            println(f"[probe]   exec ${r.executionId}%5d ${r.action}%-16s " +
+              f"${r.durationMs / 1000.0}%7.3f s plan=${r.phasesMs.values.sum}ms " +
+              s"jobs=${r.jobs} stages=${r.stages.size} tasks=${r.tasks} " +
+              s"input=${kb(r.inputBytes)} shuffleR=${kb(r.shuffleReadBytes)} " +
+              s"shuffleW=${kb(r.shuffleWriteBytes)} spill=${kb(r.spillBytes)} " +
+              s"taskTime=${sec(r.runMs)} taskCpu=${sec(r.cpuMs)} taskGc=${sec(r.gcMs)}" +
+              (if (r.failed) " FAILED" else ""))
+          }
+          // per-stage attribution (--stages): a ballooning stage is
+          // nameable instead of guessed at
+          if (flags("--stages") && i == runs)
+            rs.flatMap(_.stages).sortBy(-_.runMs).take(12).foreach { st =>
+              println(f"[probe]   stage ${st.id}%4d: ${st.tasks}%3d tasks " +
+                f"${st.runMs / 1000.0}%7.2fs  ${st.name}")
+            }
+        } finally rep.close()
         // --final: the executed (post-AQE) operator skeleton — join
         // strategies and exchange counts as they actually RAN, which the
         // initial --plan cannot show
-        if (flags("--final") && i == runs) {
-          val df = fn(spark, sfDir); df.count()
+        if (flags("--final") && i == runs) query.foreach { fn =>
+          val df = fn(s, sfDir); df.count()
           val skeleton = df.queryExecution.executedPlan.toString.linesIterator
             .map(_.replaceAll("\\[.*", "").replaceAll("\\(\\d+\\)", ""))
             .filter(l => l.exists(_.isLetter)).take(120)

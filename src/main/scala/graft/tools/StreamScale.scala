@@ -4,7 +4,7 @@ import graft.GraftSession
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming-throughput harness: how many events/docs per second do the
   * structured-streaming surfaces sustain when the input arrives as a
@@ -21,7 +21,11 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * Output: one JSON line
   *   {"metric":"stream_scale","events_n":…,"docs_n":…,"n_batches":…,
-  *    "surfaces":{name:{"sec":…,"rows_per_s":…,"batches":…}}}
+  *    "surfaces":{name:{"sec":…,"rows_per_s":…,"batches":…,
+  *                      "trigger_ms":{"addBatch":…,"getBatch":…,…}}}}
+  * where `trigger_ms` sums each progress `durationMs` key over the
+  * surface's triggers — the per-trigger split of `sec` between compute
+  * and sink (addBatch) and offset, log and state machinery (the rest).
   *
   * Usage: runMain graft.tools.StreamScale [srcDir] [nBatches]
   */
@@ -60,24 +64,57 @@ object StreamScale {
       .select(col("doc_id"), col("text")).localCheckpoint()
     bench.count()
 
-    def time(streamed: DataFrame, mode: OutputMode): (Double, Long) = {
-      val t0 = System.nanoTime()
+    /** Runs the query `start` returns to completion: wall seconds and the
+      * summed `durationMs` of its triggers (addBatch, getBatch, walCommit,
+      * triggerExecution, …), read from a [[graft.Metrics]] reporter on the
+      * session that starts it.
+      */
+    def drained(session: SparkSession)(start: => StreamingQuery)
+        : (Double, Map[String, Long]) = {
+      val rep = graft.Metrics.attach(session)
+      try {
+        val (q, use) = graft.Metrics.measure {
+          val q = start
+          q.processAllAvailable()
+          q.stop()
+          q
+        }
+        rep.drain()
+        val triggerMs = rep.triggers.filter(_.runId == q.runId)
+          .flatMap(_.durationMs).groupMapReduce(_._1)(_._2)(_ + _)
+        (use.wallS, triggerMs)
+      } finally rep.close()
+    }
+
+    def time(streamed: DataFrame, mode: OutputMode): (Double, Long, Map[String, Long]) = {
       // count triggers in the callback, NOT via recentProgress — that is a
       // ring buffer (default 100 entries), so nBatches above ~100 would
       // silently under-report the harness's own every-file-is-a-trigger
       // sanity signal
       val batches = new java.util.concurrent.atomic.AtomicLong(0)
-      val q = streamed.writeStream.outputMode(mode)
-        .option("checkpointLocation",
-          s"$base/ckpt-${System.nanoTime()}")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batches.incrementAndGet()
-          b.write.format("noop").mode("overwrite").save()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      ((System.nanoTime() - t0) / 1e9, batches.get())
+      val (sec, triggerMs) = drained(streamed.sparkSession) {
+        streamed.writeStream.outputMode(mode)
+          .option("checkpointLocation",
+            s"$base/ckpt-${System.nanoTime()}")
+          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            batches.incrementAndGet()
+            b.write.format("noop").mode("overwrite").save()
+          }
+          .start()
+      }
+      (sec, batches.get(), triggerMs)
+    }
+
+    def msJson(m: Map[String, Long]): String =
+      m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+    def surface(name: String, sec: Double, rows: Long, batches: Long,
+                triggerMs: Map[String, Long]): String = {
+      val rps = (rows / math.max(sec, 1e-9)).round
+      println(s"[streamscale] $name: ${f"$sec%.2f"} s, $rps rows/s, $batches batches, " +
+        s"addBatch ${triggerMs.getOrElse("addBatch", 0L)} ms")
+      s""""$name":{"sec":${f"$sec%.3f"},"rows_per_s":$rps,"batches":$batches,""" +
+        s""""trigger_ms":${msJson(triggerMs)}}"""
     }
 
     // r15: the online SemDeDup gate — every incoming embedding probes
@@ -167,10 +204,8 @@ object StreamScale {
 
     val results = surfaces.map { case (name, rows, mk) =>
       val (df, mode) = mk()
-      val (sec, batches) = time(df, mode)
-      val rps = (rows / math.max(sec, 1e-9)).round
-      println(s"[streamscale] $name: ${f"$sec%.2f"} s, $rps rows/s, $batches batches")
-      s""""$name":{"sec":${f"$sec%.3f"},"rows_per_s":$rps,"batches":$batches}"""
+      val (sec, batches, triggerMs) = time(df, mode)
+      surface(name, sec, rows, batches, triggerMs)
     } :+ {
       // r13: the drift monitor — every micro-batch scores against the
       // PERSISTED baseline (one ≤nBuckets-row read + one batch scan per
@@ -180,35 +215,29 @@ object StreamScale {
         spark.read.parquet(docDir), "n_chars",
         lo = 0.0, hi = 4096.0, nBuckets = 32, dir = s"$base/driftbase")
       val rep = s"$base/driftrep-${System.nanoTime()}"
-      val t0 = System.nanoTime()
-      val q = Streams.toDriftSink(docsStream, "n_chars", s"$base/driftbase",
-        rep, s"$base/ckpt-${System.nanoTime()}")
-      q.processAllAvailable(); q.stop()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, triggerMs) = drained(spark) {
+        Streams.toDriftSink(docsStream, "n_chars", s"$base/driftbase",
+          rep, s"$base/ckpt-${System.nanoTime()}")
+      }
       val batches = spark.read.parquet(rep)
         .select(col("batch_id")).distinct().count()
-      val rps = (docsN / math.max(sec, 1e-9)).round
-      println(s"[streamscale] drift_sink: ${f"$sec%.2f"} s, $rps rows/s, $batches batches")
-      s""""drift_sink":{"sec":${f"$sec%.3f"},"rows_per_s":$rps,"batches":$batches}"""
+      surface("drift_sink", sec, docsN, batches, triggerMs)
     } :+ {
       // r15: online ANN SERVING — every micro-batch of query vectors runs
       // the full probe (cell ranking, exact cosine over probed cells,
       // per-query top-10) via the foreachBatch serve sink; results land as
       // batch_id partitions, so the batch count reads back from the report
       val rep = s"$base/serverep-${System.nanoTime()}"
-      val t0 = System.nanoTime()
-      val q = Streams.toAnnServeSink(
-        spark.readStream.option("maxFilesPerTrigger", 1)
-          .schema(embSchema).parquet(embDir),
-        idx, "embedding", "vec_id", k = 10, nProbe = 2,
-        rep, s"$base/ckpt-${System.nanoTime()}")
-      q.processAllAvailable(); q.stop()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, triggerMs) = drained(spark) {
+        Streams.toAnnServeSink(
+          spark.readStream.option("maxFilesPerTrigger", 1)
+            .schema(embSchema).parquet(embDir),
+          idx, "embedding", "vec_id", k = 10, nProbe = 2,
+          rep, s"$base/ckpt-${System.nanoTime()}")
+      }
       val batches = spark.read.parquet(rep)
         .select(col("batch_id")).distinct().count()
-      val rps = (embN / math.max(sec, 1e-9)).round
-      println(s"[streamscale] ann_serve: ${f"$sec%.2f"} s, $rps rows/s, $batches batches")
-      s""""ann_serve":{"sec":${f"$sec%.3f"},"rows_per_s":$rps,"batches":$batches}"""
+      surface("ann_serve", sec, embN, batches, triggerMs)
     } :+ {
       // r16: online HYBRID serving — the ann_serve probe plus per-query
       // RRF fusion against a static 50-row lexical artifact (built once,
@@ -219,20 +248,17 @@ object StreamScale {
         .select(col("doc_id"), col("rk")).localCheckpoint()
       lex.count()
       val rep = s"$base/hsrvrep-${System.nanoTime()}"
-      val t0 = System.nanoTime()
-      val q = Streams.toHybridServeSink(
-        spark.readStream.option("maxFilesPerTrigger", 1)
-          .schema(embSchema).parquet(embDir),
-        idx, "embedding", "vec_id", lex, listKDense = 10, nProbe = 2,
-        kRrf = 60.0, k = 20, rep, s"$base/ckpt-${System.nanoTime()}")
-      q.processAllAvailable(); q.stop()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, triggerMs) = drained(spark) {
+        Streams.toHybridServeSink(
+          spark.readStream.option("maxFilesPerTrigger", 1)
+            .schema(embSchema).parquet(embDir),
+          idx, "embedding", "vec_id", lex, listKDense = 10, nProbe = 2,
+          kRrf = 60.0, k = 20, rep, s"$base/ckpt-${System.nanoTime()}")
+      }
       val batches = spark.read.parquet(rep)
         .select(col("batch_id")).distinct().count()
-      val rps = (embN / math.max(sec, 1e-9)).round
       lex.unpersist()
-      println(s"[streamscale] hybrid_serve: ${f"$sec%.2f"} s, $rps rows/s, $batches batches")
-      s""""hybrid_serve":{"sec":${f"$sec%.3f"},"rows_per_s":$rps,"batches":$batches}"""
+      surface("hybrid_serve", sec, embN, batches, triggerMs)
     }
     println(s"""{"metric":"stream_scale","events_n":$eventsN,""" +
       s""""docs_n":$docsN,"n_batches":$nBatches,""" +

@@ -20,7 +20,7 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(consumers.forall(queries.contains), consumers.filterNot(queries.contains))
     val pre = Artifacts.prebuild(spark, sf, queries.keySet.toSet)
     assert(pre.failed.isEmpty, pre.failed)
-    assert(pre.seconds.map(_._1) == Artifacts.all.map(_.name))
+    assert(pre.builds.map(_._1) == Artifacts.all.map(_.name))
     for (a <- Artifacts.all; name <- a.consumers.toSeq.sorted) {
       val run = Try(queries(name)(spark, sf).count())
       assert(run.isSuccess,
