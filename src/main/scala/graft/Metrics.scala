@@ -4,9 +4,11 @@ import java.lang.management.{ManagementFactory, MemoryType}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.graft.MetricsBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -25,14 +27,18 @@ import scala.jdk.CollectionConverters._
   * times (`analysis`, `optimization`, `planning`), its jobs, its stages
   * (id, name, tasks, executor run time) and, summed over its tasks,
   * executor run and CPU time, input bytes, shuffle bytes read and
-  * written, spill and task GC. For every streaming trigger of a query
+  * written, spill and task GC. Jobs that run outside any SQL execution
+  * while the reporter is attached — RDD actions, and the jobs Spark runs
+  * while a DataFrame is being built, such as parquet schema inference's
+  * footer read — carry no execution id and no session, so they are summed
+  * context-wide into `unattributed`. For every streaming trigger of a query
   * started on that session it records a [[TriggerReport]]: the progress
   * `durationMs` (addBatch, getBatch, walCommit, triggerExecution, …) and
   * each state operator's update, removal and commit times.
   *
   * Attach with `Metrics.attach(spark)`, read `reports` / `triggers`, and
-  * `close()` when done. `drain()` waits (bounded) until every action that
-  * has returned is in `reports` — the listener bus is asynchronous.
+  * `close()` when done. `drain()` waits (at most 30 s) until every action
+  * that has returned is in `reports` — the listener bus is asynchronous.
   * Passive: the reporter runs on the listener bus, starts no Spark job,
   * reads only metrics the executed plan and the tasks already carry, and
   * holds bounded queues (oldest dropped past `capacity`), so it is safe to
@@ -54,6 +60,11 @@ object Metrics {
                                runMs: Long, cpuMs: Long, inputBytes: Long,
                                shuffleReadBytes: Long, shuffleWriteBytes: Long,
                                spillBytes: Long, gcMs: Long)
+
+  /** Sums over the jobs that ran outside any SQL execution. */
+  final case class JobTotals(jobs: Int, tasks: Long, runMs: Long, cpuMs: Long,
+                             inputBytes: Long, shuffleReadBytes: Long,
+                             shuffleWriteBytes: Long, spillBytes: Long, gcMs: Long)
 
   final case class StateReport(operator: String, rows: Long, memoryBytes: Long,
                                updatesMs: Long, removalsMs: Long, commitMs: Long)
@@ -80,14 +91,6 @@ object Metrics {
     }
 
     def snapshot: Seq[A] = buf.iterator().asScala.toSeq
-
-    def clear(): Unit = {
-      buf.clear()
-      // reset the counter WITH the queue: a stale count at capacity would
-      // make every later add() evict the element it just added, and the
-      // queue would stay empty forever
-      bufSize.set(0)
-    }
   }
 
   private final class StageTotals(val name: String) {
@@ -95,11 +98,33 @@ object Metrics {
     var runMs = 0L
   }
 
-  /** One open execution's running sums, fed by its jobs' stages and tasks. */
+  /** One open execution's running sums, fed by its jobs' stages and tasks;
+    * also the unattributed sums, which the caller's thread reads, hence
+    * the locks.
+    */
   private final class ExecTotals {
-    var jobs = 0
+    private var jobs = 0
     val stages = mutable.LinkedHashMap.empty[Int, StageTotals]
-    var tasks, runMs, cpuNs, inputBytes, shuffleRead, shuffleWrite, spill, gcMs = 0L
+    private var tasks, runMs, cpuNs, inputBytes, shuffleRead, shuffleWrite, spill, gcMs = 0L
+
+    def addJob(): Unit = synchronized { jobs += 1 }
+
+    def addTask(stageId: Int, m: TaskMetrics): Unit = synchronized {
+      tasks += 1
+      runMs += m.executorRunTime
+      cpuNs += m.executorCpuTime
+      inputBytes += m.inputMetrics.bytesRead
+      shuffleRead += m.shuffleReadMetrics.totalBytesRead
+      shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+      spill += m.memoryBytesSpilled + m.diskBytesSpilled
+      gcMs += m.jvmGCTime
+      stages.get(stageId).foreach { s => s.tasks += 1; s.runMs += m.executorRunTime }
+    }
+
+    def jobTotals: JobTotals = synchronized {
+      JobTotals(jobs, tasks, runMs, cpuNs / 1000000L, inputBytes, shuffleRead,
+        shuffleWrite, spill, gcMs)
+    }
   }
 
   final class Reporter private[Metrics] (spark: SparkSession, capacity: Int)
@@ -111,38 +136,35 @@ object Metrics {
     // QueryExecution.id) and the execution each submitted stage belongs to
     private val open = mutable.HashMap.empty[Long, ExecTotals]
     private val stageExec = mutable.HashMap.empty[Int, Long]
+    // jobs with no execution id (ids are never negative) sum into `loose`
+    private val Loose = -1L
+    private val loose = new ExecTotals
 
-    private def executionId(props: java.util.Properties): Option[Long] =
+    private def executionId(props: java.util.Properties): Long =
       Option(props).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-        .map(_.toLong)
+        .map(_.toLong).getOrElse(Loose)
 
-    private def totals(id: Long): ExecTotals = open.getOrElseUpdate(id, new ExecTotals)
+    private def totals(id: Long): ExecTotals =
+      if (id == Loose) loose else open.getOrElseUpdate(id, new ExecTotals)
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      executionId(e.properties).foreach(totals(_).jobs += 1)
+      totals(executionId(e.properties)).addJob()
 
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      executionId(e.properties).foreach { id =>
-        val info = e.stageInfo
-        stageExec(info.stageId) = id
-        totals(id).stages.getOrElseUpdate(info.stageId,
-          new StageTotals(info.name.takeWhile(_ != '\n')))
-      }
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      for (id <- stageExec.get(e.stageId); t <- open.get(id) if m != null) {
-        t.tasks += 1
-        t.runMs += m.executorRunTime
-        t.cpuNs += m.executorCpuTime
-        t.inputBytes += m.inputMetrics.bytesRead
-        t.shuffleRead += m.shuffleReadMetrics.totalBytesRead
-        t.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        t.spill += m.memoryBytesSpilled + m.diskBytesSpilled
-        t.gcMs += m.jvmGCTime
-        t.stages.get(e.stageId).foreach { s => s.tasks += 1; s.runMs += m.executorRunTime }
-      }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      val info = e.stageInfo
+      val id = executionId(e.properties)
+      stageExec(info.stageId) = id
+      if (id != Loose) totals(id).stages.getOrElseUpdate(info.stageId,
+        new StageTotals(info.name.takeWhile(_ != '\n')))
     }
+
+    // an execution's stages are forgotten at its end, a loose stage at its own
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (stageExec.get(e.stageInfo.stageId).contains(Loose)) stageExec -= e.stageInfo.stageId
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      for (id <- stageExec.get(e.stageId); m <- Option(e.taskMetrics))
+        (if (id == Loose) Some(loose) else open.get(id)).foreach(_.addTask(e.stageId, m))
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case end: SparkListenerSQLExecutionEnd => finish(end)
@@ -160,14 +182,15 @@ object Metrics {
       if (qe != null && (qe.sparkSession eq spark)) {
         val failed = MetricsBridge.failed(e)
         val (read, out) = if (failed) (-1L, -1L) else rowsAt(qe)
+        val j = t.jobTotals
         queries.add(QueryReport(
           MetricsBridge.executionName(e).getOrElse(""),
           MetricsBridge.durationNs(e) / 1000000L, read, out, failed,
           e.executionId, qe.tracker.phases.map { case (k, p) => k -> p.durationMs },
-          t.jobs,
+          j.jobs,
           t.stages.toSeq.map { case (id, s) => StageReport(id, s.name, s.tasks, s.runMs) },
-          t.tasks, t.runMs, t.cpuNs / 1000000L, t.inputBytes, t.shuffleRead,
-          t.shuffleWrite, t.spill, t.gcMs))
+          j.tasks, j.runMs, j.cpuMs, j.inputBytes, j.shuffleReadBytes,
+          j.shuffleWriteBytes, j.spillBytes, j.gcMs))
       }
     }
 
@@ -184,16 +207,22 @@ object Metrics {
       }
     }
 
-    /** True leaves of an adaptively-executed plan: AQE's plan wrapper and
-      * its materialized query stages both hide their subtrees from
-      * collect/collectLeaves, so descend through them explicitly.
+    /** The operator a node stands for: AQE's plan wrapper and its
+      * materialized query stages hide their subtrees from
+      * collect/collectLeaves, and neither they nor a whole-stage-codegen
+      * node (nor the final result stage) carry a row count of their own,
+      * so descend to the operator inside.
       */
-    private def deepLeaves(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        deepLeaves(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        deepLeaves(q.plan)
+    @scala.annotation.tailrec
+    private def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case q: QueryStageExec => unwrap(q.plan)
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case other => other
+    }
+
+    /** True leaves of an adaptively-executed plan. */
+    private def deepLeaves(p: SparkPlan): Seq[SparkPlan] = unwrap(p) match {
       case leaf if leaf.children.isEmpty => Seq(leaf)
       case other => other.children.flatMap(deepLeaves)
     }
@@ -201,23 +230,11 @@ object Metrics {
     private def rowsAt(qe: QueryExecution): (Long, Long) = {
       val read = deepLeaves(qe.executedPlan)
         .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
-      // the ROOT needs the same AQE unwrap the leaves get: under adaptive
+      // the ROOT needs the same unwrap the leaves get: under adaptive
       // execution (default on) executedPlan is AdaptiveSparkPlanExec,
       // which carries no numOutputRows of its own — without the unwrap
-      // every report's output count read -1; the final result stage and a
-      // whole-stage-codegen root likewise carry no row count of their own,
-      // so read the operator inside
-      @scala.annotation.tailrec
-      def unwrap(p: org.apache.spark.sql.execution.SparkPlan)
-          : org.apache.spark.sql.execution.SparkPlan = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          unwrap(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => unwrap(q.plan)
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => unwrap(w.child)
-        case other => other
-      }
-      val root = unwrap(qe.executedPlan)
-      val out = root.metrics.get("numOutputRows")
+      // every report's output count read -1
+      val out = unwrap(qe.executedPlan).metrics.get("numOutputRows")
         .map(_.value).getOrElse(-1L)
       (read, out)
     }
@@ -228,15 +245,17 @@ object Metrics {
     /** Snapshot of captured streaming triggers, oldest first. */
     def triggers: Seq[TriggerReport] = trigs.snapshot
 
-    def clear(): Unit = { queries.clear(); trigs.clear() }
+    /** Sums over the jobs with no SQL execution id that started while
+      * this reporter was attached, from any session of the context.
+      */
+    def unattributed: JobTotals = loose.jobTotals
 
-    /** Waits, at most `timeoutMs`, until every event posted so far — the
-      * end of every action that has returned, the progress of every
-      * trigger that has finished — has reached this reporter; throws
+    /** Waits, at most 30 s, until every event posted so far — the end of
+      * every action that has returned, the progress of every trigger that
+      * has finished — has reached this reporter; throws
       * java.util.concurrent.TimeoutException past the bound.
       */
-    def drain(timeoutMs: Long = 30000L): Unit =
-      MetricsBridge.drain(spark.sparkContext, timeoutMs)
+    def drain(): Unit = MetricsBridge.drain(spark.sparkContext)
 
     /** Detaches both listeners; the captured reports stay readable. */
     def close(): Unit = {

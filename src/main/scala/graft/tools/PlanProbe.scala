@@ -17,9 +17,11 @@ import org.apache.spark.sql.SparkSession
   * Artifact names are the `Artifacts.all` line items, e.g.
   * `d_cluster_labels_build`; each artifact run builds on a fresh
   * `spark.newSession()`, so the per-session artifact cache is cold while
-  * the JVM stays warm. `--set k=v` applies runtime SQL confs before
-  * running — the A-B lever for config experiments (e.g. AQE coalescing
-  * modes) without recompiling. `--stages` lists the last run's 12 most
+  * the JVM stays warm, and its blocks are unpersisted after the run.
+  * Jobs outside any SQL execution (e.g. parquet schema inference while a
+  * query's DataFrame is built) count in the summary totals. `--set k=v`
+  * applies runtime SQL confs before running — the A-B lever for config
+  * experiments (e.g. AQE coalescing modes) without recompiling. `--stages` lists the last run's 12 most
   * expensive stages; `--plan` and `--final` apply to queries only.
   */
 object PlanProbe {
@@ -99,6 +101,7 @@ object PlanProbe {
       def sec(ms: Long): String = f"${ms / 1000.0}%.2fs"
       (1 to runs).foreach { i =>
         val s = session()
+        val kept = spark.sparkContext.getPersistentRDDs.keySet.toSet
         val rep = Metrics.attach(s)
         try {
           val (what, use) = Metrics.measure(runOnce(s))
@@ -112,15 +115,18 @@ object PlanProbe {
           val rs = rep.reports
           if (rs.isEmpty)
             throw new IllegalStateException(s"$name run $i: no execution report arrived")
+          val u = rep.unattributed
           // input bytes ≈ how often the source files were really scanned
           // (runtime exchange/stage reuse is invisible in the initial
           // plan), shuffle bytes = exchange volume, executor run time =
           // the true parallel work behind the wall time
           println(f"[probe] $name run $i: ${use.wallS}%.3f s ($what) " +
             f"cpu=${use.cpuS}%.2fs gc=${use.gcS}%.2fs executions=${rs.size} " +
-            s"tasks=${rs.map(_.tasks).sum} input=${kb(rs.map(_.inputBytes).sum)} " +
-            s"shuffleW=${kb(rs.map(_.shuffleWriteBytes).sum)} " +
-            s"taskTime=${sec(rs.map(_.runMs).sum)}")
+            s"tasks=${rs.map(_.tasks).sum + u.tasks} " +
+            s"input=${kb(rs.map(_.inputBytes).sum + u.inputBytes)} " +
+            s"shuffleW=${kb(rs.map(_.shuffleWriteBytes).sum + u.shuffleWriteBytes)} " +
+            s"taskTime=${sec(rs.map(_.runMs).sum + u.runMs)} " +
+            s"(outside executions: jobs=${u.jobs} tasks=${u.tasks})")
           // one line per execution: an iterative build (the CC loop) shows
           // each round's cost
           rs.foreach { r =>
@@ -139,7 +145,12 @@ object PlanProbe {
               println(f"[probe]   stage ${st.id}%4d: ${st.tasks}%3d tasks " +
                 f"${st.runMs / 1000.0}%7.2fs  ${st.name}")
             }
-        } finally rep.close()
+        } finally {
+          rep.close()
+          // an artifact run's session is never used again: free the blocks
+          // it pinned, or later runs build under a growing heap
+          if (artifact.isDefined) Artifacts.reclaim(s, kept)
+        }
         // --final: the executed (post-AQE) operator skeleton — join
         // strategies and exchange counts as they actually RAN, which the
         // initial --plan cannot show

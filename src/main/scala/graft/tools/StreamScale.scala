@@ -67,11 +67,13 @@ object StreamScale {
     /** Runs the query `start` returns to completion: wall seconds and the
       * summed `durationMs` of its triggers (addBatch, getBatch, walCommit,
       * triggerExecution, …), read from a [[graft.Metrics]] reporter on the
-      * session that starts it.
+      * session that starts it. The reporter holds twice as many records
+      * as there are staged files (a stateful query may follow each data
+      * trigger with a no-data one), so no trigger is dropped.
       */
     def drained(session: SparkSession)(start: => StreamingQuery)
         : (Double, Map[String, Long]) = {
-      val rep = graft.Metrics.attach(session)
+      val rep = graft.Metrics.attach(session, nBatches * 2 + 16)
       try {
         val (q, use) = graft.Metrics.measure {
           val q = start

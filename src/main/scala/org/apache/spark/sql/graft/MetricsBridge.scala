@@ -22,9 +22,10 @@ object MetricsBridge {
   def failed(e: SparkListenerSQLExecutionEnd): Boolean =
     e.executionFailure.isDefined
 
+  private val DrainTimeoutMs = 30000L
+
   /** Blocks until every event posted so far has been delivered to every
-    * listener; throws TimeoutException after `timeoutMs`.
+    * listener; throws TimeoutException after 30 s.
     */
-  def drain(sc: SparkContext, timeoutMs: Long): Unit =
-    sc.listenerBus.waitUntilEmpty(timeoutMs)
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(DrainTimeoutMs)
 }

@@ -77,7 +77,7 @@ class MetricsSpec extends AnyFunSuite {
         val b = spark.range(0, 5).select(col("id").as("k"), (col("id") * 10).as("w"))
         val rows = a.join(b, "k").groupBy("k").agg(sum("w").as("s"), count("*").as("n"))
           .orderBy("k").collect().toSeq
-        MetricsBridge.drain(spark.sparkContext, 30000L)
+        MetricsBridge.drain(spark.sparkContext)
         (jobs.get, rows)
       } finally {
         spark.sparkContext.setLocalProperty("metricsspec.tag", null)
@@ -104,6 +104,34 @@ class MetricsSpec extends AnyFunSuite {
       rep.drain()
       assert(rep.reports.map(_.action) == Seq("count"), rep.reports)
     } finally rep.close()
+  }
+
+  test("jobs outside any SQL execution are summed as unattributed") {
+    val dir = java.nio.file.Files.createTempDirectory("metrics_loose")
+    val path = dir.resolve("t").toString
+    spark.range(0, 50, 1, 2).write.parquet(path)
+    val rep = Metrics.attach(spark)
+    try {
+      assert(spark.sparkContext.parallelize(1 to 100, 3).map(_ * 2).count() == 100)
+      rep.drain()
+      val rdd = rep.unattributed
+      assert(rdd.jobs == 1 && rdd.tasks == 3 && rdd.runMs >= 0, rdd)
+      assert(rep.reports.isEmpty, rep.reports)
+      // a SQL action's jobs belong to its execution, not here
+      assert(spark.range(0, 100, 1, 2).count() == 100)
+      rep.drain()
+      assert(rep.unattributed == rdd, rep.unattributed)
+      // reading parquet without a schema runs a footer job while the
+      // DataFrame is built, before any execution starts
+      val df = spark.read.parquet(path)
+      rep.drain()
+      val built = rep.unattributed
+      assert(built.jobs > rdd.jobs && built.tasks > rdd.tasks, built)
+      assert(df.count() == 50)
+    } finally {
+      rep.close()
+      TempFiles.deleteRecursively(dir)
+    }
   }
 
   test("a streaming query yields one trigger record per batch with its addBatch time") {
