@@ -82,7 +82,12 @@ object Bench {
     // JMH-style warmup: run every query once untimed so the timed loop
     // measures steady-state execution, not whichever alphabetically-first
     // queries happen to absorb JIT/codegen warmup (disable with
-    // SPARK_GRAFT_WARMUP=0 to measure cold).
+    // SPARK_GRAFT_WARMUP=0 to measure cold). It warms codegen only within
+    // the codegen cache's 1024 entries (GraftSession.builder): a warm pass
+    // over the whole registry at sf0.01 needs about 2,400, so a timed query
+    // can still recompile classes the warmup compiled, unless its previous
+    // rep (run back to back) left them in the cache. The `codegen` map in
+    // bench_full.json counts those compiles per query.
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
       picked.foreach { case (name, fn) =>
         attempt(name)(fn(spark, sfDir).count())
@@ -96,8 +101,9 @@ object Bench {
     // Two countermeasures, both recorded per query:
     //  - min-of-N wall time (N=SPARK_GRAFT_REPS, default 3): contention is
     //    bursty, so the min of two spaced runs sheds most of the tail;
-    //  - process-CPU and GC seconds from Metrics.measure, the one timer
-    //    (the artifact builds are timed by the same call in prebuild).
+    //  - process-CPU, GC and JIT seconds and codegen compiles from
+    //    Metrics.measure, the one timer (the artifact builds are timed by
+    //    the same call in prebuild).
     // Heap peak: the largest whole-heap occupancy after a collection,
     // sampled at the end of each timed query.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
@@ -123,6 +129,7 @@ object Bench {
     val results = timed.map { case (k, u) => k -> u.wallS }
     val cpuResults = timed.map { case (k, u) => k -> u.cpuS }
     val gcResults = timed.map { case (k, u) => k -> u.gcS }
+    val jitResults = timed.map { case (k, u) => k -> u.jitS }
     // The driver captures only the tail of stdout, and a single line carrying
     // all ~120 per-query timings truncates mid-line (BENCH parsed=null for 5
     // rounds). So: write the FULL per-query map to bench_full.json on disk,
@@ -135,6 +142,8 @@ object Bench {
     val cpuTotal = if (cpuResults.nonEmpty) cpuResults.values.sum else 0.0
     def jmap(m: Iterable[(String, Double)]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    val codegenJson = timed.toSeq.sortBy(_._1)
+      .map { case (k, u) => "\"" + k + "\":" + u.codegenCompiles }.mkString("{", ",", "}")
     val fullJson = jmap(results)
     val loadAfter = loadavg1m()
     // the flag keys on the BEFORE reading only: the after reading is
@@ -156,7 +165,7 @@ object Bench {
     val fullPath = java.nio.file.Paths.get(
       if (only.isEmpty) "bench_full.json" else "bench_subset.json")
     java.nio.file.Files.write(fullPath,
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","reps":$reps,"cpu_total_s":${f(cpuTotal)},$loadJson,"queries":$fullJson,"cpu":${jmap(cpuResults)},"gc":${jmap(gcResults)},"rep_walls":$repsJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","reps":$reps,"cpu_total_s":${f(cpuTotal)},$loadJson,"queries":$fullJson,"cpu":${jmap(cpuResults)},"gc":${jmap(gcResults)},"jit":${jmap(jitResults)},"codegen":$codegenJson,"rep_walls":$repsJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
     val slowest = results.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")

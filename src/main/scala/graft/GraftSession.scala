@@ -81,6 +81,18 @@ object GraftSession {
       // time functions (unix_micros, windows, intervals) keep working no
       // matter which annotation a producer wrote.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // Generated-code cache sized to graft's working set. Spark's default
+      // LRU holds 100 classes; one perfbench catalog pass (8 queries)
+      // cycles through about 145 distinct classes (about 250 with its
+      // artifact builds), so with 100 entries every warm repeat missed and
+      // recompiled all of them. 1024 entries hold catalog four times over at
+      // about 42 KB of heap per entry (emptying a 2,381-entry cache freed
+      // 98 MB of heap and 18 MB of metaspace), so at most about 45 MB. A
+      // warm pass over the whole registry at sf0.01 needs about 2,400 and
+      // is deliberately not covered: only Bench's sweep cycles through it,
+      // and it runs each query's reps back to back. Static conf — it takes
+      // effect when the JVM first generates code, which is why it lives here.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.ui.enabled", "false")
 
   /** The builder's session with WARN logging. Throws when the session's

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan, WholeStageCodegenExec}
@@ -44,7 +45,8 @@ import scala.jdk.CollectionConverters._
   * holds bounded queues (oldest dropped past `capacity`), so it is safe to
   * leave attached to a long-lived session feeding a metrics scraper.
   *
-  * [[measure]] is the process-side timer (wall, process CPU, GC) and
+  * [[measure]] is the process-side timer (wall, process CPU, GC, JIT
+  * compile time and Spark codegen compilations) and
   * [[heapAfterGcBytes]] the heap occupancy sample: `Bench`,
   * `Artifacts.prebuild` and the tools time with these, nothing else.
   */
@@ -272,8 +274,11 @@ object Metrics {
     r
   }
 
-  /** Wall, process-CPU and GC seconds of one measured body. */
-  final case class Usage(wallS: Double, cpuS: Double, gcS: Double)
+  /** Wall, process-CPU, GC and JIT-compile seconds of one measured body,
+    * and the number of classes Spark's code generator compiled in it.
+    */
+  final case class Usage(wallS: Double, cpuS: Double, gcS: Double,
+                         jitS: Double, codegenCompiles: Long)
 
   // Process-CPU seconds (all JVM threads, via the platform
   // OperatingSystemMXBean): the work a body does is ~invariant under
@@ -286,19 +291,35 @@ object Metrics {
   // completely differently from scheduling contention (GC flat, walls
   // inflated). Summed across all collector beans.
   private val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
+  // JIT compile time (all compiler threads) shows the compile work JIT
+  // threads take from the query's cores; Spark's generated-class compile
+  // count should not grow on a warm repeat, so a nonzero codegenCompiles
+  // on a repeat names a codegen-cache miss.
+  private val jitBean = Option(ManagementFactory.getCompilationMXBean)
+    .filter(_.isCompilationTimeMonitoringSupported)
 
   private def gcMillis(): Long = gcBeans.map(_.getCollectionTime).filter(_ > 0).sum
 
-  /** Runs `body` and returns its result with the wall, process-CPU and GC
-    * seconds it took; an exception propagates unmeasured.
+  private def jitMillis(): Long = jitBean.map(_.getTotalCompilationTime).getOrElse(0L)
+
+  // one sample of the compile-time histogram per Janino compilation; a
+  // codegen-cache hit adds none
+  private def codegenCompiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Runs `body` and returns its result with the wall, process-CPU, GC and
+    * JIT seconds and codegen compilations it took; an exception propagates
+    * unmeasured.
     */
   def measure[A](body: => A): (A, Usage) = {
     val g0 = gcMillis()
+    val j0 = jitMillis()
+    val k0 = codegenCompiles()
     val c0 = osBean.getProcessCpuTime
     val t0 = System.nanoTime()
     val r = body
     val wall = (System.nanoTime() - t0) / 1e9
-    (r, Usage(wall, (osBean.getProcessCpuTime - c0) / 1e9, (gcMillis() - g0) / 1e3))
+    (r, Usage(wall, (osBean.getProcessCpuTime - c0) / 1e9, (gcMillis() - g0) / 1e3,
+      (jitMillis() - j0) / 1e3, codegenCompiles() - k0))
   }
 
   /** Whole-heap occupancy right after the latest collection, in bytes: for

@@ -340,7 +340,9 @@ object RetrievalQueries {
   private def sHybridServe(spark: SparkSession, dir: String): DataFrame = {
     val idx = AnnQueries.ivfIndexPlanted(spark, dir)
     val lexRoot = hybridServePrebuild(spark, dir)
-    val lex = spark.read.parquet(lexRoot + "/lex")
+    // its own staged files: read through Tables.parquet, so none of the
+    // three reads below runs a schema-inference job per serve
+    val lex = Tables.parquet(spark, lexRoot + "/lex")
     val root = SourceQueries.cachedArtifact("hybridserve", dir) { tmp =>
       Tables.embeddings(spark, dir).filter(col("vec_id") < 5)
         .select("vec_id", "embedding").write.mode("overwrite").parquet(tmp + "/in")
@@ -348,12 +350,12 @@ object RetrievalQueries {
     val rep = java.nio.file.Files.createTempDirectory("graft_hybridserve")
     graft.TempFiles.cleanupAtExit(rep)
     val stream = spark.readStream
-      .schema(spark.read.parquet(root + "/in").schema).parquet(root + "/in")
+      .schema(Tables.parquet(spark, root + "/in").schema).parquet(root + "/in")
     val q = graft.streaming.Streams.toHybridServeSink(stream, idx,
       "embedding", "vec_id", lex, listKDense = 10, nProbe = 4,
       kRrf = 60.0, k = 20, rep.toString + "/r", rep.toString + "/ckpt")
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(rep.toString + "/r")
+    Tables.parquet(spark, rep.toString + "/r")
       .select(col("query_id"), col("doc_id"), col("r_a"), col("r_b"), col("rk"))
   }
 

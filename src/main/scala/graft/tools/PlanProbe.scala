@@ -18,8 +18,11 @@ import org.apache.spark.sql.SparkSession
   * `d_cluster_labels_build`; each artifact run builds on a fresh
   * `spark.newSession()`, so the per-session artifact cache is cold while
   * the JVM stays warm, and its blocks are unpersisted after the run.
-  * Jobs outside any SQL execution (e.g. parquet schema inference while a
-  * query's DataFrame is built) count in the summary totals. `--set k=v`
+  * Jobs outside any SQL execution (e.g. an RDD action inside an operator)
+  * count in the summary totals. The summary also gives the run's JIT
+  * compile seconds and `codegen`, the classes Spark's code generator
+  * compiled during it: a warm repeat of a query should show `codegen=0`,
+  * and a repeat that does not has missed the codegen cache. `--set k=v`
   * applies runtime SQL confs before running — the A-B lever for config
   * experiments (e.g. AQE coalescing modes) without recompiling. `--stages` lists the last run's 12 most
   * expensive stages; `--plan` and `--final` apply to queries only.
@@ -121,7 +124,8 @@ object PlanProbe {
           // plan), shuffle bytes = exchange volume, executor run time =
           // the true parallel work behind the wall time
           println(f"[probe] $name run $i: ${use.wallS}%.3f s ($what) " +
-            f"cpu=${use.cpuS}%.2fs gc=${use.gcS}%.2fs executions=${rs.size} " +
+            f"cpu=${use.cpuS}%.2fs gc=${use.gcS}%.2fs jit=${use.jitS}%.2fs " +
+            s"codegen=${use.codegenCompiles} executions=${rs.size} " +
             s"tasks=${rs.map(_.tasks).sum + u.tasks} " +
             s"input=${kb(rs.map(_.inputBytes).sum + u.inputBytes)} " +
             s"shuffleW=${kb(rs.map(_.shuffleWriteBytes).sum + u.shuffleWriteBytes)} " +

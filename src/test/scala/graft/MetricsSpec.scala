@@ -110,6 +110,8 @@ class MetricsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("metrics_loose")
     val path = dir.resolve("t").toString
     spark.range(0, 50, 1, 2).write.parquet(path)
+    // the write's own end event must not reach the reporter attached below
+    MetricsBridge.drain(spark.sparkContext)
     val rep = Metrics.attach(spark)
     try {
       assert(spark.sparkContext.parallelize(1 to 100, 3).map(_ * 2).count() == 100)
@@ -170,6 +172,19 @@ class MetricsSpec extends AnyFunSuite {
       val r = rep.reports.filter(_.action == "collect")
       assert(r.size == 1 && r.head.failed, rep.reports)
     } finally rep.close()
+  }
+
+  test("measure counts codegen compiles: one or more on a first run, none on its repeat") {
+    // a literal no earlier run used is inlined into the generated code, so
+    // the first collect must compile; its repeat must hit the cache
+    val c = 1000000L + scala.util.Random.nextInt(1000000)
+    def run() = spark.range(3).select((col("id") * lit(c)).as("v")).collect()
+    val (first, cold) = Metrics.measure(run())
+    val (again, warm) = Metrics.measure(run())
+    assert(first.toSeq == again.toSeq)
+    assert(cold.codegenCompiles >= 1, cold)
+    assert(warm.codegenCompiles == 0, warm)
+    assert(cold.jitS >= 0.0 && warm.jitS >= 0.0, (cold, warm))
   }
 
   test("measure times a body and the heap sample stays within -Xmx") {
