@@ -72,12 +72,12 @@ object Bench {
     // total still reflects ALL work performed.
     val prebuilt = Artifacts.prebuild(spark, sfDir, picked.map(_._1).toSet)
     failed ++= prebuilt.failed
-    // Several operators (connected components, vancode, the embedding
-    // index) pin localCheckpoint blocks that outlive their query; across
-    // 80 queries × (warmup + timed) the leaked blocks grow old-gen
-    // occupancy until GC pauses tax EVERY subsequent job (~+25% uniform
-    // drift measured at 8g). Reclaim non-artifact blocks after each query,
-    // warmup and timed, so each measurement starts from the same heap state.
+    // Several operators (connected components, vancode, simhash) pin
+    // blocks that outlive their query; across 80 queries × (warmup +
+    // timed) the leaked blocks grow old-gen occupancy until GC pauses tax
+    // EVERY subsequent job (~+25% uniform drift measured at 8g). Reclaim
+    // the blocks no artifact owns after each query, warmup and timed, so
+    // each measurement starts from the same heap state.
     //
     // JMH-style warmup: run every query once untimed so the timed loop
     // measures steady-state execution, not whichever alphabetically-first
@@ -91,7 +91,7 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
       picked.foreach { case (name, fn) =>
         attempt(name)(fn(spark, sfDir).count())
-        Artifacts.reclaim(spark, prebuilt.protectedRdds)
+        Artifacts.reclaim(spark)
       }
       System.gc()
     }
@@ -112,7 +112,7 @@ object Bench {
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Metrics.Usage = {
       val (_, use) = Metrics.measure(attempt(name)(fn(spark, sfDir).count()))
       heapPeak = math.max(heapPeak, Metrics.heapAfterGcBytes())
-      Artifacts.reclaim(spark, prebuilt.protectedRdds)
+      Artifacts.reclaim(spark)
       use
     }
     // keep every rep's wall time: the per-rep spread in the artifact is

@@ -31,6 +31,10 @@ object Tables {
   def parquet(spark: SparkSession, path: String): DataFrame =
     footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
+  /** A parquet file stream over `path`, with the schema [[parquet]] reads. */
+  def parquetStream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream.schema(parquet(spark, path).schema).parquet(path)
+
   /** The schema Spark's non-merging inference gives `path`, from the file
     * it reads: the first, in path order, of the files that `path` (a file,
     * directory or glob) names, skipping the names Spark's file listing

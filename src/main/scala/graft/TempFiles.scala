@@ -19,6 +19,13 @@ object TempFiles {
     finally walk.close()
   }
 
+  /** A new temp dir whose name starts with `prefix`, deleted at JVM exit. */
+  def createDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    cleanupAtExit(p)
+    p.toString
+  }
+
   /** Register `p` for recursive deletion when the JVM exits (a shutdown
     * hook walking the tree AT exit time, so late-written files go too).
     */

@@ -3,8 +3,7 @@ import graft.queries.Artifacts
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Every query that
-  * can be written is; the run then exits non-zero if any artifact build or
-  * query failed. */
+  * can be written is; the run then exits non-zero if any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -14,9 +13,8 @@ object Verify {
     val spark = GraftSession.get(GraftSession.envCpus())
     new java.io.File(outDir).mkdirs()
     val picked = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
-    // shared artifacts first: the per-query reclaim below must keep them
-    val prebuilt = Artifacts.prebuild(spark, sfDir, picked.keySet)
-    val failed = scala.collection.mutable.ListBuffer.from(prebuilt.failed)
+    // shared artifacts build inside their first consumer
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
     picked.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -27,7 +25,7 @@ object Verify {
       // reclaim blocks pinned by iterative operators after each query —
       // across 80 sequential queries the leak taxes every later job with
       // GC pauses
-      Artifacts.reclaim(spark, prebuilt.protectedRdds)
+      Artifacts.reclaim(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Checkpoints
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -247,6 +248,9 @@ object Dedup {
     * diversity, not corpus size — replicated corpora (the common case at
     * scale: crawl snapshots, mirrored shards) cost what their distinct
     * content costs.
+    *
+    * Lifecycle: the result reads a persisted signature table; a long-lived
+    * session frees it with [[graft.queries.Artifacts.reclaim]] after use.
     */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxDist: Int = 3): DataFrame = {
@@ -264,9 +268,7 @@ object Dedup {
     // enumeration, and the two expansion joins) — unpersisted, each
     // consumer re-runs the corpus scan + tokenize + simhash (r17 plan
     // audit: 5 tokenize passes per invocation). Persist the 16-byte
-    // (id, simhash) rows so the corpus tokenizes ONCE; Bench/Verify
-    // reclaim the blocks after each query, and long-lived callers fall
-    // under the library's standard persist-lifecycle note.
+    // (id, simhash) rows so the corpus tokenizes ONCE.
     val sig = simhash(df, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -321,13 +323,14 @@ object Dedup {
     * Scale shape: candidates exchange id-only tuples; the shingle arrays
     * join back per-candidate through two hash joins, so text-sized data
     * never rides the pair explosion.
+    *
+    * Lifecycle: as [[simhashPairs]]', plus a persisted shingle table.
     */
   def simhashVerifiedPairs(df: DataFrame, textCol: String, idCol: String,
                            maxDist: Int = 7, shingleK: Int = 3,
                            threshold: Double = 0.5): DataFrame = {
     // the shingle table joins into BOTH sides of every candidate pair —
     // persist it so the corpus shingles once instead of once per side
-    // (same lifecycle note as simhashPairs' signature table)
     val sh = df.select(col(idCol).as("id"),
       graft.functions.ShingleHash.wordShingleHashes(col(textCol), shingleK,
         sorted = true).as("sh"))
@@ -695,9 +698,9 @@ object Dedup {
     */
   /** NOTE on lifecycle: the returned DataFrame is backed by localCheckpoint
     * blocks (the converged labels). Long-lived sessions running many
-    * components() calls should unpersist results when done — leaked blocks
+    * components() calls should free results when done — leaked blocks
     * surface as uniform GC drift across subsequent jobs (see
-    * Bench.reclaimBlocks).
+    * [[graft.queries.Artifacts.reclaim]]).
     */
   def components(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                  maxIters: Int = 20): DataFrame = {
@@ -705,6 +708,7 @@ object Dedup {
     // id would crash the cast under ANSI mode — or, with ANSI off, null
     // every sum and fake convergence after two rounds (split clusters,
     // silent under-deletion). Hash string ids to int64 first.
+    require(maxIters >= 1, s"components: maxIters must be >= 1, got $maxIters")
     for (c <- Seq(aCol, bCol))
       require(pairs.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
         s"components: $c must be numeric (got " +
@@ -784,11 +788,11 @@ object Dedup {
         .collect()(0).getDecimal(0)
       converged = prevSum.contains(s)
       prevSum = Some(s)
-      jumpTmp.foreach(_.unpersist())
-      prev.unpersist()
+      jumpTmp.foreach(Checkpoints.release)
+      Checkpoints.release(prev)
       iter += 1
     }
-    edges.unpersist()
+    Checkpoints.release(edges)
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"components: iteration cap $maxIters reached before convergence — " +
@@ -833,7 +837,8 @@ object Dedup {
     * over (id, score) pairs — no text in any exchange, survivors resolve
     * with a single keyed anti-join. Like [[components]], the result is
     * backed by localCheckpoint blocks (the pinned doomed set); long-lived
-    * sessions should unpersist results when done (see Bench.reclaimBlocks).
+    * sessions should release them when done (see
+    * [[graft.queries.Artifacts.reclaim]]).
     */
   def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
                scoreCol: String,

@@ -318,9 +318,7 @@ object Similarity {
     * parquet table partitioned by `cell` — the persist() here is the
     * single-JVM stand-in for that.
     */
-  final case class IvfIndex(centroids: Seq[Seq[Double]], indexed: DataFrame) {
-    def unpersist(): Unit = indexed.unpersist()
-  }
+  final case class IvfIndex(centroids: Seq[Seq[Double]], indexed: DataFrame)
 
   /** Centroid ids ordered by squared-L2 distance from `v` — one fused
     * codegen pass over the vector with every centroid accumulating in the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,7 +77,7 @@ object VanCode {
           when(col("__jump") === 0L, lit(0L))
             .otherwise(coalesce(col("__hjump"), lit(0L))).as("__jump"))
         .localCheckpoint()
-      prev.unpersist()
+      Checkpoints.release(prev)
     }
     val codes = cur.select(col("__id"),
       concat(col("__anc"), col("__seg"), lit("/")).as(outCol))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Profiling, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -227,22 +227,20 @@ object DocumentQueries {
     val model = Corpus.qualityModelCollect(
       Corpus.qualityModelTrain(docs, "text", qualityScore(col("text")) >= 500L),
       topK = 16)
-    val root = SourceQueries.cachedArtifact("qmstage", dir) { tmp =>
+    val root = Artifacts.staged(spark, "qmstage", dir) { tmp =>
       docs.select("doc_id", "text").write.mode("overwrite").parquet(tmp + "/in")
     }
-    val rep = java.nio.file.Files.createTempDirectory("graft_qmgate")
-    graft.TempFiles.cleanupAtExit(rep)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(root + "/in").schema).parquet(root + "/in")
+    val rep = graft.TempFiles.createDir("graft_qmgate")
+    val stream = Tables.parquetStream(spark, root + "/in")
     val q = stream.select(col("doc_id"),
         graft.functions.QualityModelFns.score(col("text"), model).as("score"))
       .filter(col("score") > 0L)
       .writeStream.format("parquet")
-      .option("path", rep.toString + "/r")
-      .option("checkpointLocation", rep.toString + "/ckpt")
+      .option("path", rep + "/r")
+      .option("checkpointLocation", rep + "/ckpt")
       .start()
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(rep.toString + "/r")
+    Tables.parquet(spark, rep + "/r")
   }
 
   private val sQualityModelSql =
@@ -291,7 +289,7 @@ object DocumentQueries {
   private def sSemDedup(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val idx = AnnQueries.ivfIndex(spark, dir)
-    val root = SourceQueries.cachedArtifact("semgatestage", dir) { tmp =>
+    val root = Artifacts.staged(spark, "semgatestage", dir) { tmp =>
       val copies = AnnQueries.annPlanted(e.select("vec_id", "embedding"))
         .filter(col("vec_id") >= 100000L)
       val novel = e.filter(col("vec_id") < 500)
@@ -299,19 +297,17 @@ object DocumentQueries {
           transform(col("embedding"), x => -x).as("embedding"))
       copies.unionByName(novel).write.mode("overwrite").parquet(tmp + "/in")
     }
-    val rep = java.nio.file.Files.createTempDirectory("graft_semgate")
-    graft.TempFiles.cleanupAtExit(rep)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(root + "/in").schema).parquet(root + "/in")
+    val rep = graft.TempFiles.createDir("graft_semgate")
+    val stream = Tables.parquetStream(spark, root + "/in")
     val q = graft.streaming.Streams
       .semDedupGateStream(stream, idx, "embedding", tau = 0.8)
       .select(col("vec_id"))
       .writeStream.format("parquet")
-      .option("path", rep.toString + "/r")
-      .option("checkpointLocation", rep.toString + "/ckpt")
+      .option("path", rep + "/r")
+      .option("checkpointLocation", rep + "/ckpt")
       .start()
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(rep.toString + "/r")
+    Tables.parquet(spark, rep + "/r")
   }
 
   private val sSemDedupSql =
@@ -631,44 +627,33 @@ object DocumentQueries {
   // d_dedup_keep_best): the iterative CC loop is the latency-bound step
   // and every consumer needs the SAME labels, so per-query re-derivation
   // just multiplied that latency by three (r10 bench: 3.8 + 3.7 s for
-  // apply + keep_best alone at sf1). Session-identity keyed like ivfCache;
-  // entries for stopped sessions are evicted (their localCheckpoint
-  // blocks died with the session's block manager).
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** Build (or fetch the cached) cluster-label table for `dir`'s chained
+  // apply + keep_best alone at sf1).
+  /** Build (or fetch the memoized) cluster-label table for `dir`'s chained
     * near-dup corpus — the shared offline step of the dedup-apply family,
-    * declared in [[Artifacts]]. The labels are localCheckpoint-backed: a
-    * harness that reclaims persisted blocks between queries must build
-    * them through [[Artifacts.prebuild]], which protects their blocks.
+    * declared in [[Artifacts]]. The labels are localCheckpoint-backed; the
+    * memo owns their blocks, so [[Artifacts.reclaim]] keeps them.
     */
-  def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    labelsCache.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    labelsCache.computeIfAbsent(
-      (System.identityHashCode(spark).toString, dir),
-      _ => {
-        // checkpoint the 300-row chained corpus ONCE: ngramJaccardPairs
-        // runs several internal jobs (distinct-set groupBy, the eager
-        // hottest-block aggregate, member expansion, pair scoring) and
-        // each re-derived the 3-way union + text slicing from parquet —
-        // r16's profile attributed ~2 s of the 7.3 s build to exactly
-        // that. The BASE 100-row slice checkpoints first so the union's
-        // three variant branches read it from memory instead of each
-        // re-scanning parquet (r16). Bounded by construction (doc_id <
-        // 100, x3 variants), so both materializations are fixture-sized
-        // at every SF.
-        val base = Tables.documents(spark, dir).filter(col("doc_id") < 100)
-          .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          .localCheckpoint()
-        val input = clusterVariants(base).localCheckpoint()
-        base.unpersist(blocking = false)
-        val labels = Dedup.components(clusterPairs(input))
-        input.unpersist(blocking = false)
-        labels
-      })
-  }
+  def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.memo(spark, "labels", dir) {
+      // checkpoint the 300-row chained corpus ONCE: ngramJaccardPairs
+      // runs several internal jobs (distinct-set groupBy, the eager
+      // hottest-block aggregate, member expansion, pair scoring) and
+      // each re-derived the 3-way union + text slicing from parquet —
+      // r16's profile attributed ~2 s of the 7.3 s build to exactly
+      // that. The BASE 100-row slice checkpoints first so the union's
+      // three variant branches read it from memory instead of each
+      // re-scanning parquet (r16). Bounded by construction (doc_id <
+      // 100, x3 variants), so both materializations are fixture-sized
+      // at every SF.
+      val base = Tables.documents(spark, dir).filter(col("doc_id") < 100)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"))
+        .localCheckpoint()
+      val input = clusterVariants(base).localCheckpoint()
+      Checkpoints.release(base)
+      val labels = Dedup.components(clusterPairs(input))
+      Checkpoints.release(input)
+      labels
+    }
 
   /** Registry queries consuming [[clusterLabels]] — the SINGLE source of
     * truth [[Artifacts]] gates the prebuild on. Register a new consumer of

@@ -269,7 +269,7 @@ object DriftQueries {
 
   // ------------------------------------------------------------- s_drift
   // The STREAMING drift monitor under the hash gate (the recurring-check
-  // form of p_drift): the numeric baseline persists ONCE per (JVM, dir) —
+  // form of p_drift): the numeric baseline persists ONCE per (session, dir) —
   // bucket counts + binning contract, never the snapshot — snapshot B
   // stages as a parquet drop directory, and a real readStream →
   // toDriftSink query scores it against the stored baseline (one batch →
@@ -278,8 +278,8 @@ object DriftQueries {
   // divergence, a re-binning drift, or a double-append breaks the hash.
   private def sDrift(spark: SparkSession, dir: String): DataFrame = {
     // baseline (root/b) + staged snapshot-B drop dir (root/in), once per
-    // (JVM, dir) — the recurring invocations only read them
-    val root = SourceQueries.cachedArtifact("driftstage", dir) { tmp =>
+    // (session, dir) — the recurring invocations only read them
+    val root = Artifacts.staged(spark, "driftstage", dir) { tmp =>
       graft.operators.Profiling.writeDriftBaseline(
         Tables.orders(spark, dir).select(col("o_totalprice")),
         "o_totalprice", lo = 0.0, hi = 500000.0, nBuckets = 20,
@@ -287,14 +287,12 @@ object DriftQueries {
       driftSnapshotB(spark, dir).write.mode("overwrite")
         .parquet(tmp + "/in")
     }
-    val rep = java.nio.file.Files.createTempDirectory("graft_driftrep")
-    graft.TempFiles.cleanupAtExit(rep)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(root + "/in").schema).parquet(root + "/in")
+    val rep = graft.TempFiles.createDir("graft_driftrep")
+    val stream = Tables.parquetStream(spark, root + "/in")
     val q = graft.streaming.Streams.toDriftSink(stream, "o_totalprice",
-      root + "/b", rep.toString + "/r", rep.toString + "/ckpt")
+      root + "/b", rep + "/r", rep + "/ckpt")
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(rep.toString + "/r")
+    Tables.parquet(spark, rep + "/r")
       .select(col("bucket"), col("count_a"), col("count_b"),
         col("psi_term").cast(DoubleType).as("psi_term"),
         // batch_id is the report's PARTITION column (replay-idempotent
@@ -313,7 +311,7 @@ object DriftQueries {
   // must hash-match p_drift_cat's oracle — a recomputed-instead-of-read
   // vocabulary, a fold-key drift, or a count divergence breaks it.
   private def sDriftCat(spark: SparkSession, dir: String): DataFrame = {
-    val root = SourceQueries.cachedArtifact("cdriftstage", dir) { tmp =>
+    val root = Artifacts.staged(spark, "cdriftstage", dir) { tmp =>
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"))
       graft.operators.Profiling.writeCategoricalBaseline(
@@ -324,14 +322,12 @@ object DriftQueries {
         .select(col("o_orderpriority"))
         .write.mode("overwrite").parquet(tmp + "/in")
     }
-    val rep = java.nio.file.Files.createTempDirectory("graft_cdriftrep")
-    graft.TempFiles.cleanupAtExit(rep)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(root + "/in").schema).parquet(root + "/in")
+    val rep = graft.TempFiles.createDir("graft_cdriftrep")
+    val stream = Tables.parquetStream(spark, root + "/in")
     val q = graft.streaming.Streams.toCatDriftSink(stream, "o_orderpriority",
-      root + "/b", rep.toString + "/r", rep.toString + "/ckpt")
+      root + "/b", rep + "/r", rep + "/ckpt")
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(rep.toString + "/r")
+    Tables.parquet(spark, rep + "/r")
       .select(col("category"), col("is_fold"), col("count_a"), col("count_b"),
         col("psi_term").cast(DoubleType).as("psi_term"),
         col("batch_id").cast(LongType).as("batch_id")) // partition column
@@ -350,31 +346,30 @@ object DriftQueries {
   // ledger that double-counted a replay, mixed the batch into its own
   // history, or mis-pruned the window breaks the hash.
   private def sDriftRolling(spark: SparkSession, dir: String): DataFrame = {
-    // both batches' parquet files stage ONCE per (JVM, dir) — recurring
+    // both batches' parquet files stage ONCE per (session, dir) — recurring
     // invocations hardlink them into a fresh drop dir (the ledger,
     // checkpoint, and report must stay per-invocation; the DATA is
     // invariant), so the timed run is the monitor, not two table dumps
     val o = Tables.orders(spark, dir).select(col("o_totalprice"))
-    val stage = SourceQueries.cachedArtifact("rdriftstage", dir) { tmp =>
+    val stage = Artifacts.staged(spark, "rdriftstage", dir) { tmp =>
       o.write.mode("overwrite").parquet(tmp + "/b0")
       driftSnapshotB(spark, dir).write.mode("overwrite").parquet(tmp + "/b1")
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_rdriftq")
-    graft.TempFiles.cleanupAtExit(root)
-    val in = root.toString + "/in"
+    val root = graft.TempFiles.createDir("graft_rdriftq")
+    val in = root + "/in"
     linkParquetInto(stage + "/b0", in) // batch 0: the baseline snapshot
     val q = graft.streaming.Streams.toRollingDriftSink(
       spark.readStream.schema(o.schema).parquet(in),
       "o_totalprice", lo = 0.0, hi = 500000.0, nBuckets = 20,
       windowBatches = 4,
-      stateDir = root.toString + "/ledger",
-      reportDir = root.toString + "/r",
-      checkpointDir = root.toString + "/ckpt")
+      stateDir = root + "/ledger",
+      reportDir = root + "/r",
+      checkpointDir = root + "/ckpt")
     q.processAllAvailable() // batch 0 seeds the ledger
     linkParquetInto(stage + "/b1", in) // batch 1: the mutated snapshot
     q.processAllAvailable() // batch 1 scores against the window
     q.stop()
-    spark.read.parquet(root.toString + "/r")
+    Tables.parquet(spark, root + "/r")
       .select(col("bucket"), col("count_a"), col("count_b"),
         col("psi_term").cast(DoubleType).as("psi_term"),
         col("batch_id").cast(LongType).as("batch_id")) // partition column
@@ -410,7 +405,7 @@ object DriftQueries {
   private def sDriftMulti(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-    val stage = SourceQueries.cachedArtifact("mdriftstage", dir) { tmp =>
+    val stage = Artifacts.staged(spark, "mdriftstage", dir) { tmp =>
       graft.operators.Profiling.writeCategoricalVocabulary(
         o.select(col("o_orderpriority")), "o_orderpriority", topK = 3,
         dir = tmp + "/v")
@@ -422,26 +417,24 @@ object DriftQueries {
       driftSnapshotB(spark, dir, extra = Seq("o_orderpriority"))
         .write.mode("overwrite").parquet(tmp + "/b1")
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_mdriftq")
-    graft.TempFiles.cleanupAtExit(root)
-    val in = root.toString + "/in"
+    val root = graft.TempFiles.createDir("graft_mdriftq")
+    val in = root + "/in"
     linkParquetInto(stage + "/b0", in)
     val q = graft.streaming.Streams.toRollingMultiDriftSink(
-      spark.readStream
-        .schema(spark.read.parquet(stage + "/b0").schema).parquet(in),
+      Tables.parquetStream(spark, in), // b0's files, linked above
       numeric = Seq(graft.streaming.Streams.NumericDriftCol(
         "o_totalprice", lo = 0.0, hi = 500000.0, nBuckets = 20)),
       categorical = Seq(graft.streaming.Streams.CatDriftCol(
         "o_orderpriority", stage + "/v")),
       windowBatches = 4,
-      stateDir = root.toString + "/ledger",
-      reportDir = root.toString + "/r",
-      checkpointDir = root.toString + "/ckpt")
+      stateDir = root + "/ledger",
+      reportDir = root + "/r",
+      checkpointDir = root + "/ckpt")
     q.processAllAvailable() // batch 0 seeds both columns' ledger slices
     linkParquetInto(stage + "/b1", in)
     q.processAllAvailable() // batch 1 scores per column
     q.stop()
-    spark.read.parquet(root.toString + "/r")
+    Tables.parquet(spark, root + "/r")
       .select(col("column"), col("key"), col("is_fold"),
         col("count_a"), col("count_b"),
         col("psi_term").cast(DoubleType).as("psi_term"),

@@ -319,43 +319,40 @@ object RetrievalQueries {
       .select(col("doc_id"), col("rk"))
   }
 
-  // the offline lexical artifact: 50 rows, built ONCE per (JVM, dir) and
-  // staged to disk (the cachedArtifact pattern — parquet can't be
-  // reclaimed like localCheckpoint blocks, the r11 prebuild gotcha), so
-  // serving times the probe+fusion, not the offline corpus ranking.
-  // Declared in Artifacts: harnesses prebuild it as its own
-  // `s_hybrid_serve_build` line item (the d_ann_ivf_build precedent —
-  // offline cost must still be visible in the total). Consumer set lives HERE, next to the artifact
-  // accessor (single source of truth, like AnnQueries.ivfConsumers).
+  // the offline lexical artifact: 50 rows, built ONCE per (session, dir)
+  // and staged to disk (Artifacts.staged), so serving times the
+  // probe+fusion, not the offline corpus ranking. Declared in Artifacts:
+  // harnesses prebuild it as its own `s_hybrid_serve_build` line item (the
+  // d_ann_ivf_build precedent — offline cost must still be visible in the
+  // total). Consumer set lives HERE, next to the artifact accessor (single
+  // source of truth, like AnnQueries.ivfConsumers).
   val hybridServeConsumers: Set[String] = Set("s_hybrid_serve")
 
   /** Build (or reuse) the staged lexical rank-list artifact; returns its
-    * staging root. Memoized per (JVM, dir) by cachedArtifact.
+    * staging root. Staged once per (session, dir).
     */
   def hybridServePrebuild(spark: SparkSession, dir: String): String =
-    SourceQueries.cachedArtifact("hybridlex", dir) { tmp =>
+    Artifacts.staged(spark, "hybridlex", dir) { tmp =>
       hybridLexList(spark, dir).write.mode("overwrite").parquet(tmp + "/lex")
     }
 
   private def sHybridServe(spark: SparkSession, dir: String): DataFrame = {
     val idx = AnnQueries.ivfIndexPlanted(spark, dir)
     val lexRoot = hybridServePrebuild(spark, dir)
-    // its own staged files: read through Tables.parquet, so none of the
-    // three reads below runs a schema-inference job per serve
+    // its own staged files: read through Tables.parquet(Stream), so none
+    // of the three reads below runs a schema-inference job per serve
     val lex = Tables.parquet(spark, lexRoot + "/lex")
-    val root = SourceQueries.cachedArtifact("hybridserve", dir) { tmp =>
+    val root = Artifacts.staged(spark, "hybridserve", dir) { tmp =>
       Tables.embeddings(spark, dir).filter(col("vec_id") < 5)
         .select("vec_id", "embedding").write.mode("overwrite").parquet(tmp + "/in")
     }
-    val rep = java.nio.file.Files.createTempDirectory("graft_hybridserve")
-    graft.TempFiles.cleanupAtExit(rep)
-    val stream = spark.readStream
-      .schema(Tables.parquet(spark, root + "/in").schema).parquet(root + "/in")
+    val rep = graft.TempFiles.createDir("graft_hybridserve")
+    val stream = Tables.parquetStream(spark, root + "/in")
     val q = graft.streaming.Streams.toHybridServeSink(stream, idx,
       "embedding", "vec_id", lex, listKDense = 10, nProbe = 4,
-      kRrf = 60.0, k = 20, rep.toString + "/r", rep.toString + "/ckpt")
+      kRrf = 60.0, k = 20, rep + "/r", rep + "/ckpt")
     q.processAllAvailable(); q.stop()
-    Tables.parquet(spark, rep.toString + "/r")
+    Tables.parquet(spark, rep + "/r")
       .select(col("query_id"), col("doc_id"), col("r_a"), col("r_b"), col("rk"))
   }
 
@@ -475,27 +472,25 @@ object RetrievalQueries {
     val t = Tables.documents(spark, dir).select(col("doc_id"), col("source"),
         graft.functions.TextFunctions.tokenCount(col("text")).as("n_tokens"))
       .filter(col("n_tokens") > 0)
-    val in = SourceQueries.cachedArtifact("packin", dir) { out =>
+    val in = Artifacts.staged(spark, "packin", dir) { out =>
       t.write.mode("overwrite").parquet(out)
     }
-    val rep = java.nio.file.Files.createTempDirectory("graft_packgate")
-    graft.TempFiles.cleanupAtExit(rep)
+    val rep = graft.TempFiles.createDir("graft_packgate")
     implicit val s: SparkSession = spark
     // key cardinality = #sources (single digits): start the stateful query
     // at 8 state partitions — per-trigger store IO scales with partition
     // count, not keys (Streams.packStream's sizing note; measured 2x)
     graft.streaming.Streams.withShufflePartitions(spark, 8) {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(in).schema).parquet(in)
+      val stream = Tables.parquetStream(spark, in)
       val q = graft.streaming.Streams.packStream(stream, budget = 512L)
         .toDF()
         .writeStream.format("parquet").outputMode("append")
-        .option("path", rep.toString + "/r")
-        .option("checkpointLocation", rep.toString + "/ckpt")
+        .option("path", rep + "/r")
+        .option("checkpointLocation", rep + "/ckpt")
         .start()
       q.processAllAvailable(); q.stop()
     }
-    spark.read.parquet(rep.toString + "/r")
+    Tables.parquet(spark, rep + "/r")
       .select("source", "seq_id", "doc_id", "doc_off", "seq_off", "take_n")
   }
 

@@ -23,31 +23,8 @@ object SourceQueries {
   // either direction breaks the hash.
   private val fwFields = Seq(("n_nationkey", 6), ("n_name", 26), ("n_regionkey", 4))
 
-  /** Round-trip queries write a temp artifact as INPUT for the read side.
-    * That write is an eager action, so memoize it per data dir (the content
-    * is a pure function of the dir) — one write per JVM instead of one per
-    * warmup/timed/sweep invocation, and no unbounded temp-disk growth.
-    * Each staging dir is removed by an exit-time recursive delete
-    * ([[graft.TempFiles.cleanupAtExit]]) so files written AFTER staging
-    * (Derby transaction logs) go too.
-    */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  private[queries] def cachedArtifact(kind: String, dir: String)(write: String => Unit): String =
-    artifactCache.computeIfAbsent((kind, dir), { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_$kind")
-      write(tmp.toString)
-      // a shutdown-hook recursive delete, not deleteOnExit: deleteOnExit
-      // only removes what existed at registration, and several artifacts
-      // keep writing afterwards (Derby transaction logs) — each
-      // short-lived Verify/Bench JVM then leaks its staging dirs
-      graft.TempFiles.cleanupAtExit(tmp)
-      tmp.toString
-    })
-
   private def q21FixedWidth(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = cachedArtifact("fw", dir) { out =>
+    val tmp = Artifacts.staged(spark, "fw", dir) { out =>
       Sinks.writeFixedWidth(
         Tables.nation(spark, dir).select("n_nationkey", "n_name", "n_regionkey"),
         out, fwFields)
@@ -248,7 +225,7 @@ object SourceQueries {
   // columns; the oracle reads the original parquet. Any cell-encoding,
   // escaping, shared/inline-string or column-alignment bug breaks the hash.
   private def q23Excel(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = cachedArtifact("xlsx", dir) { out =>
+    val tmp = Artifacts.staged(spark, "xlsx", dir) { out =>
       Sinks.writeExcel(
         Tables.documents(spark, dir).select("doc_id", "text", "lang", "n_chars"),
         java.nio.file.Paths.get(out).resolve("documents.xlsx").toString)
@@ -331,7 +308,7 @@ object SourceQueries {
   // breaks the hash.
   private def q41Jdbc(spark: SparkSession, dir: String): DataFrame = {
     val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    val db = cachedArtifact("derby", dir) { out =>
+    val db = Artifacts.staged(spark, "derby", dir) { out =>
       Sinks.writeJdbc(
         Tables.supplier(spark, dir)
           .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
@@ -365,7 +342,7 @@ object SourceQueries {
     val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val base = Tables.supplier(spark, dir)
       .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val db = cachedArtifact("derbyups", dir) { out =>
+    val db = Artifacts.staged(spark, "derbyups", dir) { out =>
       Sinks.writeJdbc(base, s"jdbc:derby:$out/db;create=true", "supplier_ups",
         props, mode = org.apache.spark.sql.SaveMode.Overwrite)
     }
@@ -407,7 +384,7 @@ object SourceQueries {
     val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val base = Tables.supplier(spark, dir)
       .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val db = cachedArtifact("derbycdc", dir) { out =>
+    val db = Artifacts.staged(spark, "derbycdc", dir) { out =>
       Sinks.writeJdbc(base, s"jdbc:derby:$out/db;create=true", "supplier_cdc",
         props, mode = org.apache.spark.sql.SaveMode.Overwrite)
     }
@@ -455,7 +432,7 @@ object SourceQueries {
   private def sCdcApply(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val in = cachedArtifact("scdcin", dir) { out =>
+    val in = Artifacts.staged(spark, "scdcin", dir) { out =>
       base.withColumn("seq", lit(1L))
         .write.mode("overwrite").parquet(out)
       base.filter(col("o_orderkey") % 10 === 0)
@@ -468,14 +445,13 @@ object SourceQueries {
         .withColumn("seq", lit(1L))
         .write.mode("append").parquet(out)
     }
-    val outDir = java.nio.file.Files.createTempDirectory("scdcout").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("scdcckpt").toString
-    val stream = spark.readStream
-      .schema(spark.read.parquet(in).schema).parquet(in)
+    val outDir = graft.TempFiles.createDir("scdcout") + "/t"
+    val ckpt = graft.TempFiles.createDir("scdcckpt")
+    val stream = Tables.parquetStream(spark, in)
     val q = graft.streaming.Streams.toUpsertSink(stream, outDir, ckpt,
       keys = Seq("o_orderkey"), seqCol = "seq")
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"),
         col("seq"))
   }
@@ -503,12 +479,12 @@ object SourceQueries {
   // partition-column type loss, or a nondeterministic position breaks
   // the hash.
   private def dShardExport(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = cachedArtifact("shards", dir) { out =>
+    val tmp = Artifacts.staged(spark, "shards", dir) { out =>
       Sinks.writeShuffledShards(
         Tables.documents(spark, dir).select("doc_id"), out, "doc_id",
         seed = 11L, nShards = 4)
     }
-    spark.read.parquet(tmp)
+    Tables.parquet(spark, tmp)
       .select(col("doc_id"), col("pos"),
         col("shard").cast(org.apache.spark.sql.types.LongType).as("shard"))
   }
@@ -533,7 +509,7 @@ object SourceQueries {
     val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val base = Tables.supplier(spark, dir)
       .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val db = cachedArtifact("derbyia", dir) { out =>
+    val db = Artifacts.staged(spark, "derbyia", dir) { out =>
       Sinks.writeJdbc(base.filter(col("s_suppkey") % 2 === 0),
         s"jdbc:derby:$out/db;create=true", "supplier_ia", props,
         mode = org.apache.spark.sql.SaveMode.Overwrite)
@@ -573,7 +549,7 @@ object SourceQueries {
 
   private def q50DfasdlTokens(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val tmp = cachedArtifact("tokstream", dir) { out =>
+    val tmp = Artifacts.staged(spark, "tokstream", dir) { out =>
       Tables.orders(spark, dir)
         .select(concat(lit("KEY:"), col("o_orderkey"),
           lit("\nPRI:"), col("o_orderpriority")).as("value"))
@@ -598,7 +574,7 @@ object SourceQueries {
   // wrong branch pick, or a type-coercion miss breaks the hash.
   private def q53DfasdlMixed(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdlmixed", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdlmixed", dir) { out =>
       Tables.orders(spark, dir)
         .select(concat(
           col("o_orderkey"), lit(";"),
@@ -645,7 +621,7 @@ object SourceQueries {
   private def q42Dfasdl(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
     val cols = Seq("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    val tmp = cachedArtifact("dfasdlcsv", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdlcsv", dir) { out =>
       Sinks.writeCsv(Tables.customer(spark, dir).select(cols.map(col): _*), out)
     }
     val schemaDoc = Dfasdl
@@ -698,7 +674,7 @@ object SourceQueries {
   // extraction, or the num/formatnum coercions breaks the hash.
   private def q43DfasdlXml(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdlxml", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdlxml", dir) { out =>
       Sinks.writeXml(
         Tables.customer(spark, dir).select(
           col("c_custkey"), col("c_name"), col("c_acctbal"),
@@ -731,7 +707,7 @@ object SourceQueries {
   // stringly read. Oracle reads the original parquet.
   private def q44DfasdlJson(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdljson", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdljson", dir) { out =>
       Sinks.writeJson(
         Tables.orders(spark, dir).select(
           col("o_orderkey").as("key"), col("o_orderdate").as("odate"),
@@ -778,7 +754,7 @@ object SourceQueries {
         |    </elem>
         |  </seq>
         |</dfasdl>""".stripMargin)
-    val tmp = cachedArtifact("dfasdlout", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdlout", dir) { out =>
       Dfasdl.writeDelimited(
         Tables.orders(spark, dir).select(
           col("o_orderkey").as("orderkey"), col("o_orderdate").as("orderdate"),
@@ -805,7 +781,7 @@ object SourceQueries {
   // (pre-r8) parse, or a typing drift breaks the hash.
   private def q46DfasdlChoice(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdlchoice", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdlchoice", dir) { out =>
       Sinks.writeCsv(
         Tables.orders(spark, dir).select(
           col("o_orderkey").as("okey"),
@@ -849,7 +825,7 @@ object SourceQueries {
   // a wrong branch, a lost trim, or a formatstr drift breaks the hash.
   private def q48DfasdlLines(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdllines", dir) { out =>
+    val tmp = Artifacts.staged(spark, "dfasdllines", dir) { out =>
       Tables.orders(spark, dir).select(
         when(col("o_orderkey") % 3 === 1,
           concat(lit("ORDER: "), (col("o_orderkey") * 2).cast(StringType)))
@@ -906,7 +882,7 @@ object SourceQueries {
   // rows+hash.
   private def q47Avro(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Avro
-    val tmp = cachedArtifact("avro", dir) { out =>
+    val tmp = Artifacts.staged(spark, "avro", dir) { out =>
       Avro.writeAvro(
         Tables.orders(spark, dir).select(
           col("o_orderkey"), col("o_custkey"), col("o_totalprice"),

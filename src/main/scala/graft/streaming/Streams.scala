@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Checkpoints
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -787,8 +788,8 @@ object Streams {
         newLedger.coalesce(1).write.mode("overwrite").parquet(tmp)
         graft.sinks.Publish.publishSwap(fs,
           new org.apache.hadoop.fs.Path(tmp), dirPath)
-        batchCounts.unpersist()
-        history.foreach(_.unpersist())
+        Checkpoints.release(batchCounts)
+        history.foreach(Checkpoints.release)
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Metrics
 import graft.queries.Artifacts
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: print the formatted physical plan of one registry query,
   * or build one shared artifact, and time N runs — the
@@ -15,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   *          [--set spark.conf.key=value ...]
   *
   * Artifact names are the `Artifacts.all` line items, e.g.
-  * `d_cluster_labels_build`; each artifact run builds on a fresh
-  * `spark.newSession()`, so the per-session artifact cache is cold while
-  * the JVM stays warm, and its blocks are unpersisted after the run.
+  * `d_cluster_labels_build`. Every run uses the one session; before each
+  * artifact run `Artifacts.release` drops what the session had built, so
+  * the build is cold while the JVM stays warm.
   * Jobs outside any SQL execution (e.g. an RDD action inside an operator)
   * count in the summary totals. The summary also gives the run's JIT
   * compile seconds and `codegen`, the classes Spark's code generator
@@ -72,17 +71,13 @@ object PlanProbe {
     // then ALSO set runtime-settable SQL confs on the live session
     sets.foreach { case (k, v) => System.setProperty(k, v) }
     val spark = graft.GraftSession.get()
-    def configure(s: SparkSession, log: Boolean): SparkSession = {
-      sets.foreach { case (k, v) =>
-        if (log) println(s"[probe] conf $k=$v")
-        try s.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          if (log) println(s"[probe]   ($k is static — applied via system property)")
-        }
+    sets.foreach { case (k, v) =>
+      println(s"[probe] conf $k=$v")
+      try spark.conf.set(k, v)
+      catch { case _: org.apache.spark.sql.AnalysisException =>
+        println(s"[probe]   ($k is static — applied via system property)")
       }
-      s
     }
-    configure(spark, log = true)
     try {
       val query = graft.SparkEntry.queries.get(name)
       val artifact = Artifacts.all.find(_.name == name)
@@ -90,24 +85,20 @@ object PlanProbe {
         sys.error(s"unknown query or artifact '$name'; valid names: " +
           (graft.SparkEntry.queries.keys ++ Artifacts.all.map(_.name))
             .toSeq.sorted.mkString(", "))
-      // an artifact run gets a fresh session, so the per-session artifact
-      // cache starts cold (the build really builds) while the JVM stays
-      // warm; query runs share one session, as a caller's repeats would
-      def session(): SparkSession =
-        if (artifact.isEmpty) spark else configure(spark.newSession(), log = false)
-      def runOnce(s: SparkSession): String = query match {
-        case Some(fn) => s"${fn(s, sfDir).count()} rows"
-        case None => artifact.get.build(s, sfDir); "built"
+      def runOnce(): String = query match {
+        case Some(fn) => s"${fn(spark, sfDir).count()} rows"
+        case None => artifact.get.build(spark, sfDir); "built"
       }
       if (flags("--plan")) query.foreach(_(spark, sfDir).explain("formatted"))
       def kb(b: Long): String = s"${b / 1024}KB"
       def sec(ms: Long): String = f"${ms / 1000.0}%.2fs"
       (1 to runs).foreach { i =>
-        val s = session()
-        val kept = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val rep = Metrics.attach(s)
+        // a cold build: drop what the earlier runs built, and free its blocks
+        // so no run builds under a heap holding the previous ones
+        if (artifact.isDefined) Artifacts.release(spark)
+        val rep = Metrics.attach(spark)
         try {
-          val (what, use) = Metrics.measure(runOnce(s))
+          val (what, use) = Metrics.measure(runOnce())
           // the listener bus is asynchronous: read only once every
           // execution this run ended has reached the reporter
           try rep.drain()
@@ -149,17 +140,12 @@ object PlanProbe {
               println(f"[probe]   stage ${st.id}%4d: ${st.tasks}%3d tasks " +
                 f"${st.runMs / 1000.0}%7.2fs  ${st.name}")
             }
-        } finally {
-          rep.close()
-          // an artifact run's session is never used again: free the blocks
-          // it pinned, or later runs build under a growing heap
-          if (artifact.isDefined) Artifacts.reclaim(s, kept)
-        }
+        } finally rep.close()
         // --final: the executed (post-AQE) operator skeleton — join
         // strategies and exchange counts as they actually RAN, which the
         // initial --plan cannot show
         if (flags("--final") && i == runs) query.foreach { fn =>
-          val df = fn(s, sfDir); df.count()
+          val df = fn(spark, sfDir); df.count()
           val skeleton = df.queryExecution.executedPlan.toString.linesIterator
             .map(_.replaceAll("\\[.*", "").replaceAll("\\(\\d+\\)", ""))
             .filter(l => l.exists(_.isLetter)).take(120)

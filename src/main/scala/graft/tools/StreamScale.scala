@@ -259,7 +259,7 @@ object StreamScale {
       }
       val batches = spark.read.parquet(rep)
         .select(col("batch_id")).distinct().count()
-      lex.unpersist()
+      graft.Checkpoints.release(lex)
       surface("hybrid_serve", sec, embN, batches, triggerMs)
     }
     println(s"""{"metric":"stream_scale","events_n":$eventsN,""" +

@@ -246,6 +246,24 @@ class DedupSpec extends AnyFunSuite {
     assert((5001L to 5600L).forall(labels(_) == 5001L))
   }
 
+  test("components leaves only its result persisted") {
+    import spark.implicits._
+    // a 21-node path (long enough for pointer-jump rounds) and 20 disjoint
+    // pairs: 40 pairs
+    val pairs = ((1L to 20L).map(i => (i, i + 1)) ++
+      (101L to 120L).map(i => (2 * i, 2 * i + 1))).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = Dedup.components(pairs)
+    val added = sc.getPersistentRDDs.keySet -- before
+    val result = labels.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    assert(added == Set(result), s"persisted besides the result: ${added - result}")
+    assert(labels.as[(Long, Long)].collect().count(_._2 == 1L) == 21)
+    Checkpoints.release(labels)
+    assert(!sc.getPersistentRDDs.contains(result))
+  }
+
   test("lshTopK recalls most of bruteForceTopK's neighbors") {
     val e = Tables.embeddings(spark, sf)
     val q = e.filter(col("vec_id") < 5)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Artifacts
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +19,10 @@ class RelationalSpec extends AnyFunSuite {
       val df = d.run(spark, sf)
       assert(df.columns.nonEmpty, s"${d.name} has no columns")
       assert(df.count() >= 0, s"${d.name} failed to execute")
+      Artifacts.reclaim(spark)
+      // a subset: the ContextCleaner may drop an owned RDD nothing reaches
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- Artifacts.owned(spark)
+      assert(left.isEmpty, s"persisted RDDs $left outlived the reclaim after ${d.name}")
     }
   }
 
