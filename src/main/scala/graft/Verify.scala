@@ -30,10 +30,8 @@ object Verify {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Jsons.quote(k)}: ${Jsons.quote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Jsons.Obj(SparkEntry.oracleSql.toSeq).toString)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")

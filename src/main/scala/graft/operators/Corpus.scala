@@ -284,10 +284,9 @@ object Corpus {
     // final join consume this aggregate — without the persist the full
     // corpus tokenize+hash+shuffle runs twice (the (h, cnt) frame is tiny
     // next to the corpus)
-    val hashes = df.select(
+    val hashes = graft.Checkpoints.persist(df.select(
       explode(ShingleHash.positionShingleHashes(col(textCol), n)).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("h").agg(count(lit(1)).as("cnt")))
     // boundary: the count of the k-th most frequent hash (one scalar back
     // to the driver; ties at the boundary are all admitted as candidates
     // so the text tie-break below sees every contender)
@@ -816,13 +815,12 @@ object Corpus {
       df.select(lit(tgt).as("__tgt"),
         graft.functions.TextFunctions.tokens(col(textCol)).as("__toks"))
     val union = tagged(raw, tgt = false).unionByName(tagged(target, tgt = true))
-    val counts = union
+    val counts = graft.Checkpoints.persist(union
       .select(col("__tgt"), explode(col("__toks")).as("__tok"))
       .select(col("__tgt"), feature(col("__tok")).as(featureCol))
       .groupBy(col(featureCol))
       .agg(sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"),
-        sum(when(!col("__tgt"), 1L).otherwise(0L)).as("__cr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(!col("__tgt"), 1L).otherwise(0L)).as("__cr")))
     // totals and |vocabulary| both derive from the persisted counts table
     // (r16, guide §1.2): every token occurrence lands in exactly one
     // counts row, so Σ__ct / Σ__cr ARE the side totals — the old totals

@@ -269,8 +269,7 @@ object Dedup {
     // consumer re-runs the corpus scan + tokenize + simhash (r17 plan
     // audit: 5 tokenize passes per invocation). Persist the 16-byte
     // (id, simhash) rows so the corpus tokenizes ONCE.
-    val sig = simhash(df, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = Checkpoints.persist(simhash(df, textCol, idCol))
 
     // (1) identical signatures: all id pairs within a group, hamming 0
     val ga = sig.select(col("simhash"), col("id").as("id_a"))
@@ -331,10 +330,9 @@ object Dedup {
                            threshold: Double = 0.5): DataFrame = {
     // the shingle table joins into BOTH sides of every candidate pair —
     // persist it so the corpus shingles once instead of once per side
-    val sh = df.select(col(idCol).as("id"),
+    val sh = Checkpoints.persist(df.select(col(idCol).as("id"),
       graft.functions.ShingleHash.wordShingleHashes(col(textCol), shingleK,
-        sorted = true).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sorted = true).as("sh")))
     val cands = simhashPairs(df, textCol, idCol, maxDist)
       .select(col("id_a"), col("id_b"))
     cands

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Checkpoints
 import graft.functions.VectorFunctions._
 import graft.functions.VectorExprs.cosineSim
 import graft.plans.TopK
@@ -440,8 +441,7 @@ object Similarity {
     }
     val assigned = c.withColumn("cell",
       element_at(cellRanking(col("cv"), centroids), 1))
-    val indexed =
-      if (persist) assigned.persist(StorageLevel.MEMORY_AND_DISK) else assigned
+    val indexed = if (persist) Checkpoints.persist(assigned) else assigned
     IvfIndex(centroids, indexed)
   }
 
@@ -460,7 +460,7 @@ object Similarity {
     val n = math.max(c.count(), 1L)
     // CONTENT-KEYED sampling, not df.sample: the seeded sampler draws per
     // (partition, position), so two physical layouts of the SAME data
-    // train different centroids (measured: DedupScale's semdedup survivor
+    // train different centroids (measured: Scale dedup's semdedup survivor
     // count moved 2438 -> 2739 -> 2432 across regenerated-but-identical
     // corpora). An id-hash stride selects the same rows under any layout,
     // and the lexicographic sort fixes their order — clustering now
@@ -474,8 +474,7 @@ object Similarity {
     val centroids = kmeansFit(train, nCentroids, iters = 5, seed = 42L)
     val assigned = c.withColumn("cell",
       element_at(cellRanking(col("cv"), centroids), 1))
-    val indexed =
-      if (persist) assigned.persist(StorageLevel.MEMORY_AND_DISK) else assigned
+    val indexed = if (persist) Checkpoints.persist(assigned) else assigned
     IvfIndex(centroids, indexed)
   }
 

@@ -2,13 +2,14 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.graft.DatasetBridge
 
 import scala.collection.mutable
 
@@ -23,11 +24,12 @@ import scala.collection.mutable
   * repeats the bounded heap per group after clustering. Same result, a
   * fraction of the shuffle.
   *
-  * Wiring: logical node → strategy (injected by GraftExtensions, or added
-  * on demand by [[TopK.perGroup]]) → two-phase physical plan, the
-  * partial phase declaring no required distribution and the final phase
-  * requiring `ClusteredDistribution(groupBy)` so the planner inserts the
-  * exchange between them.
+  * Wiring: `row_number() <= k` with the rank dropped → logical node (by
+  * [[TopKRewriteRule]]) → strategy (both injected by GraftExtensions) →
+  * two-phase physical plan, the partial phase declaring no required
+  * distribution and the final phase requiring
+  * `ClusteredDistribution(groupBy)` so the planner inserts the exchange
+  * between them.
   */
 case class TopKPerGroup(groupBy: Seq[Expression], order: Seq[SortOrder], k: Int,
                         child: LogicalPlan) extends UnaryNode {
@@ -119,32 +121,18 @@ object TopK {
   def asc(column: String): SortSpec = SortSpec(column, ascending = true)
   def desc(column: String): SortSpec = SortSpec(column, ascending = false)
 
-  /** Public API: top `k` rows per `groupBy` group under `orderBy`. Keys are
-    * column names resolved eagerly against the input's analyzed output —
-    * Column objects would arrive as lazy unresolved wrappers that Spark 4's
-    * analyzer does not rewrite inside third-party logical nodes.
+  /** Public API: top `k` rows per `groupBy` group under `orderBy`, written
+    * as `row_number()` over the window, `rn <= k` and a drop of `rn`:
+    * [[TopKRewriteRule]] turns that shape into the [[TopKPerGroup]]
+    * operator, so this is the same plan a SQL or window-API user gets.
     */
   def perGroup(df: DataFrame, groupBy: Seq[String], orderBy: Seq[SortSpec],
                k: Int): DataFrame = {
     require(k > 0, s"TopK.perGroup: k must be positive, got $k")
-    val spark = df.sparkSession
-    // sessions built without GraftExtensions get the strategy on demand
-    if (!spark.sessionState.planner.strategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-    val analyzed = df.queryExecution.analyzed
-    // resolve names with the SESSION's resolver (case-insensitive by
-    // default), like every built-in API — not exact string equality
-    val resolver = spark.sessionState.analyzer.resolver
-    def attr(name: String): Attribute =
-      analyzed.output.find(a => resolver(a.name, name)).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $name not in ${analyzed.output.map(_.name).mkString(", ")}"))
-    val orders = orderBy.map { s =>
-      SortOrder(attr(s.column), if (s.ascending) Ascending else Descending)
-    }
-    DatasetBridge.ofRows(spark,
-      TopKPerGroup(groupBy.map(attr), orders, k, analyzed))
+    val w = Window.partitionBy(groupBy.map(col): _*).orderBy(orderBy.map { s =>
+      if (s.ascending) col(s.column).asc else col(s.column).desc
+    }: _*)
+    df.withColumn("__topk_rn", row_number().over(w))
+      .filter(col("__topk_rn") <= k).drop("__topk_rn")
   }
 }

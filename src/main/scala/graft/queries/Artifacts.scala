@@ -3,9 +3,9 @@ package graft.queries
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.{Metrics, TempFiles}
+import graft.{Checkpoints, Metrics, TempFiles}
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** The one memo of what queries build once and reuse: a new artifact goes
@@ -30,12 +30,18 @@ object Artifacts {
   private final class Entry(staged: Boolean) {
     @volatile private var value: Option[Any] = None
     @volatile var owned = Set.empty[Int]
+    // the frames the build cached through Checkpoints.persist
+    @volatile var frames = Set.empty[DataFrame]
 
     def get(sc: SparkContext, build: => Any): Any = synchronized {
       value.getOrElse {
         val before = sc.getPersistentRDDs.keySet
+        val framesBefore = Checkpoints.live
         val v = build
-        if (!staged) owned = sc.getPersistentRDDs.keySet.toSet -- before
+        if (!staged) {
+          owned = sc.getPersistentRDDs.keySet.toSet -- before
+          frames = Checkpoints.live -- framesBefore
+        }
         value = Some(v)
         v
       }
@@ -80,21 +86,28 @@ object Artifacts {
       .flatMap(_._2.owned).toSet
 
   /** Unpersists every persisted RDD no live entry owns: the blocks a query
-    * pinned, so the next query starts from the same heap.
+    * pinned, so the next query starts from the same heap. A frame cached
+    * through `Checkpoints.persist` is uncached through Spark's
+    * CacheManager, so a later persist of its plan caches again.
     */
   def reclaim(spark: SparkSession): Unit = {
+    val mine = entries.asScala.filter(_._1.spark.sparkContext eq spark.sparkContext).values
+    val keepFrames = mine.flatMap(_.frames).toSet
+    Checkpoints.unpersist(spark.sparkContext)(d => !keepFrames(d))
     val keep = owned(spark)
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!keep(id)) rdd.unpersist(blocking = false)
     }
   }
 
-  /** Drops `spark`'s entries, unpersists the RDDs they own and deletes their
-    * staging dirs.
+  /** Drops `spark`'s entries, uncaches and unpersists what they own and
+    * deletes their staging dirs.
     */
   def release(spark: SparkSession): Unit = {
     val mine = entries.asScala.filter(_._1.spark eq spark).toSeq
     mine.foreach { case (k, e) => entries.remove(k, e) }
+    val frames = mine.flatMap(_._2.frames).toSet
+    Checkpoints.unpersist(spark.sparkContext)(frames)
     val rdds = spark.sparkContext.getPersistentRDDs
     mine.flatMap(_._2.owned).flatMap(rdds.get).foreach(_.unpersist(blocking = false))
     mine.flatMap(_._2.stagingDir).map(Paths.get(_)).filter(Files.exists(_))

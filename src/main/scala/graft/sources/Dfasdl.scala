@@ -1059,7 +1059,7 @@ object Dfasdl {
     // ---- r15 DECOMPOSED dispatch. The r12 formulation enumerated every
     // combination: one staged regex match + one typed predicate per
     // combination, O(combos × leaves) work per record — the 64-way
-    // SourceScale stressor priced it at 462k rows/s. Two structural facts
+    // Scale source stressor priced it at 462k rows/s. Two structural facts
     // collapse that:
     //   (1) leaf fragments are type-blind (`(start.*?)stop`), so
     //       combinations sharing the per-slot SHAPE tuple share one

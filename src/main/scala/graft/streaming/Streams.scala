@@ -186,8 +186,8 @@ object Streams {
     // corpus per batch would dominate gate latency (cache materializes on
     // the first batch; lifecycle belongs to the query — unpersist via the
     // returned handle when the query stops)
-    val refHashes = reference.select(contentDigest(col(textCol)).as("__h"))
-      .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val refHashes = Checkpoints.persist(
+      reference.select(contentDigest(col(textCol)).as("__h")).distinct())
     val gated = docs.withColumn("__h", contentDigest(col(textCol)))
       .join(refHashes, Seq("__h"), "left_anti")
       .drop("__h")

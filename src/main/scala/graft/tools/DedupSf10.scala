@@ -138,11 +138,8 @@ object DedupSf10 {
       df.coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
       println(s"[dedup-sf10] $name dumped")
     }
-    val json = oracles
-      .map { case (k, v) => s"${graft.Jsons.quote(k)}: ${graft.Jsons.quote(v)}" }
-      .mkString("{", ",", "}")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/oracle_sql.json"),
-      json.getBytes("UTF-8"))
+      graft.Jsons.Obj(oracles.toSeq).toString.getBytes("UTF-8"))
     mh.unpersist(); ng.unpersist()
   }
 }

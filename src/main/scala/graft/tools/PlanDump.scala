@@ -8,10 +8,12 @@ package graft.tools
   *
   * Each query's plan lands in `<outDir>/<name>.txt`. Plans are captured
   * WITHOUT executing the query (initial AQE plan), which is what the
-  * optimization round's before/after artifacts pin.
+  * optimization round's before/after artifacts pin. Every plan that can be
+  * written is; the run then exits 1, listing the queries that failed.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val args = Cli.parseArgs(argv.toSeq).positional
     val outDir = args.headOption.getOrElse("plans/tmp")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val names: Seq[String] = args.lift(2) match {
@@ -20,10 +22,11 @@ object PlanDump {
     }
     val spark = graft.GraftSession.get()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
     try names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'"))
       try {
+        val fn = graft.SparkEntry.queries.getOrElse(name,
+          sys.error(s"unknown query '$name'"))
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
@@ -31,8 +34,14 @@ object PlanDump {
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name ok")
       } catch {
-        case e: Throwable => println(s"[plandump] $name FAILED: ${e.getMessage}")
+        case e: Throwable =>
+          failed += name
+          System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
     } finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

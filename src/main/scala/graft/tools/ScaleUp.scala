@@ -49,7 +49,7 @@ object ScaleUp {
     * two tables to a 10x fan-out from sf0.1 — a relational x100 leg
     * (factor=100, docFactor=10) stays fixture-safe while the fact tables
     * take the full step. The dedup-family x100 evidence comes from
-    * DedupScale's own corpus instead.
+    * Scale dedup's own corpus instead.
     */
   def run(spark: SparkSession, src: String, dst: String, factor: Int,
           docFactor: Int = -1): Unit = {

@@ -1,11 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset, SparkSession}
-
-/** Bridge to build a DataFrame from a custom LogicalPlan (Dataset.ofRows is
-  * package-private in Spark 4). Lives under spark.sql purely for access.
+/** Bridge to Spark internals the TopK operator needs. Lives under
+  * spark.sql purely for access.
   */
 object DatasetBridge {
 
@@ -16,10 +12,4 @@ object DatasetBridge {
   def normalizeFloats(e: org.apache.spark.sql.catalyst.expressions.Expression)
   : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
-
-  def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
-    Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
-
-  def logicalPlan(df: DataFrame): LogicalPlan =
-    df.asInstanceOf[Dataset[_]].logicalPlan
 }

@@ -34,6 +34,18 @@ class ArtifactsSpec extends AnyFunSuite {
     }
   }
 
+  test("a reclaim uncaches an operator's persisted table, so it caches again next time") {
+    def cached = org.apache.spark.sql.graft.CacheEntries(spark)
+    val before = cached
+    val docs = Tables.documents(spark, sf)
+    for (_ <- 1 to 2) {
+      graft.operators.Dedup.simhashPairs(docs, "text", "doc_id", maxDist = 3).count()
+      assert(cached == before + 1)
+      Artifacts.reclaim(spark)
+      assert(cached == before, "the signature table is still registered")
+    }
+  }
+
   test("a labels consumer builds the labels itself, and a reclaim keeps them for the others") {
     val s = spark.newSession()
     try {

@@ -1,7 +1,7 @@
 package graft
 
-import graft.tools.PlanProbe
-import graft.tools.PlanProbe.Args
+import graft.tools.{Cli => PlanProbe}
+import graft.tools.Cli.Args
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PlanProbe's command line: `--set` values are confs, never positionals. */
