@@ -26,14 +26,14 @@ object Checkpoints {
     df.sparkSession.sharedState.cacheManager
       .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
 
-  /** `df.persist(level)`, remembered so [[unpersist]] can free it through
+  /** `df.persist(MEMORY_AND_DISK)`, remembered so [[unpersist]] can free it through
     * Spark's CacheManager: freeing the RDD alone leaves the plan cached
     * with no blocks, so the next persist of the same plan is a no-op
     * ('Asked to cache already cached data') and every scan recomputes.
     */
-  def persist(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+  def persist(df: DataFrame): DataFrame = {
     persisted.removeIf(d => d.sparkSession.sparkContext.isStopped || cacheEntry(d).isEmpty)
-    persisted.add(df.persist(level))
+    persisted.add(df.persist(StorageLevel.MEMORY_AND_DISK))
     df
   }
 

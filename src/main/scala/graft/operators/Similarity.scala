@@ -28,6 +28,7 @@ import org.apache.spark.storage.StorageLevel
   * for brute force — whereas the TopKPerGroup operator bounds each input
   * partition to k rows per query map-side, so the exchange carries at most
   * k×|queries| rows and the rank column is a window over that survivor set.
+  * Without GraftExtensions installed, perGroup is that plain window.
   */
 object Similarity {
   // PRECONDITION shared by every ANN path here: queries and corpus draw

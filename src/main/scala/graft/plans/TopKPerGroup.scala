@@ -122,9 +122,10 @@ object TopK {
   def desc(column: String): SortSpec = SortSpec(column, ascending = false)
 
   /** Public API: top `k` rows per `groupBy` group under `orderBy`, written
-    * as `row_number()` over the window, `rn <= k` and a drop of `rn`:
-    * [[TopKRewriteRule]] turns that shape into the [[TopKPerGroup]]
-    * operator, so this is the same plan a SQL or window-API user gets.
+    * as `row_number()` over the window, `rn <= k` and a drop of `rn`, the
+    * shape [[TopKRewriteRule]] turns into the [[TopKPerGroup]] operator.
+    * The rule comes only with `spark.sql.extensions=graft.GraftExtensions`
+    * (GraftSession sets it); without it this is a plain window, same rows.
     */
   def perGroup(df: DataFrame, groupBy: Seq[String], orderBy: Seq[SortSpec],
                k: Int): DataFrame = {
