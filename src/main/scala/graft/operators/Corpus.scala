@@ -702,7 +702,7 @@ object Corpus {
     // label BELOW the explode, in its own stage: inlining it beside the
     // generator plans the Project ABOVE Generate, re-evaluating the (regex-
     // heavy) label once per TOKEN row instead of once per document —
-    // measured 16 s vs 0.6 s at sf0.1 (the tokenStreamRecCols staging
+    // measured 16 s vs 0.6 s at sf0.1 (the Dfasdl.readTokenStream staging
     // lesson, generator edition)
     val counts = df
       .select(label.as("__pos"),

@@ -122,19 +122,15 @@ object Similarity {
     }
   }
 
-  /** Train PQ codebooks on a bounded driver-side sample (same sampling
-    * discipline as [[ivfBuild]]): split each sampled vector into `m`
+  /** Train PQ codebooks on a bounded driver-side sample ([[trainSample]],
+    * keyed by the vector itself): split each sampled vector into `m`
     * contiguous subvectors and run seeded k-means per subspace. A subspace
     * codebook needs ~100 points per centroid, so the sample is bounded by
     * construction regardless of corpus size.
     */
   def pqTrain(corpus: DataFrame, vecCol: String, m: Int = 8, ksub: Int = 16,
               trainTarget: Int = 1600): PqCodebooks = {
-    val n = math.max(corpus.count(), 1L)
-    val frac = math.min(1.0, trainTarget.toDouble * 1.2 / n)
-    val train = corpus.select(col(vecCol))
-      .sample(withReplacement = false, frac, seed = 42L).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+    val train = trainSample(corpus, vecCol, col(vecCol), trainTarget)
     val dim = train.headOption.map(_.length).getOrElse(m)
     require(dim % m == 0,
       s"PQ needs the vector dimension ($dim) divisible by m ($m): a " +
@@ -331,6 +327,29 @@ object Similarity {
   private def cellRanking(v: Column, centroids: Seq[Seq[Double]]): Column =
     graft.functions.VectorExprs.nearestCells(v, centroids)
 
+  /** A bounded training sample that depends on the data alone: the rows
+    * whose `xxhash64(key)` falls on a stride sized for ~1.2×`target` rows,
+    * collected and sorted lexicographically. `df.sample` draws per
+    * (partition, position), so two physical layouts of the SAME data
+    * trained different models (measured: Scale dedup's semdedup survivor
+    * count moved 2438 -> 2739 -> 2432 across regenerated-but-identical
+    * corpora, and PQ books changed under a repartition); a content-hash
+    * stride selects the same rows under any layout and the sort fixes
+    * their order. `key` is the id column where there is one, else the
+    * vector.
+    */
+  private def trainSample(df: DataFrame, vecCol: String, key: Column,
+                          target: Long): Array[Array[Double]] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    // size the stride off the row count (cheap parquet-metadata job)
+    val n = math.max(df.count(), 1L)
+    val every = math.max(1L, (n / math.max(1.0, target * 1.2)).toLong)
+    df.filter(pmod(xxhash64(key), lit(every)) === 0L)
+      .select(col(vecCol)).collect()
+      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      .sortBy(_.toSeq)
+  }
+
   /** Seeded k-means++ + Lloyd's iterations over an in-memory sample — the
     * coarse-quantizer trainer (Arthur & Vassilvitskii SODA'07 init, Lloyd'82
     * refinement). A coarse quantizer only ever trains on a BOUNDED sample
@@ -409,12 +428,8 @@ object Similarity {
                           nCentroids: Int, iters: Int = 3,
                           persist: Boolean = true): IvfIndex = {
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
-    val n = math.max(c.count(), 1L)
-    val initTarget = math.min(nCentroids * 20L, 200000L)
-    val frac = math.min(1.0, initTarget.toDouble * 1.2 / n)
-    val sample = c.sample(withReplacement = false, frac, seed = 42L)
-      .select(col("cv")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+    val sample = trainSample(c, "cv", col("corpus_id"),
+      math.min(nCentroids * 20L, 200000L))
     // k-means++ seeding only — 0 driver Lloyd iterations; refinement is
     // the distributed loop below
     var centroids = kmeansFit(sample, nCentroids, iters = 0, seed = 42L)
@@ -447,31 +462,16 @@ object Similarity {
   }
 
   /** Offline index build: train a coarse quantizer on a bounded subsample
-    * (a `sample()`, not a `limit()` — limit funnels rows to one partition;
-    * the collected sample is ≤ ~1.2×trainTarget rows by construction), then
-    * assign every corpus vector to its nearest centroid in one distributed
-    * pass.
+    * ([[trainSample]] keyed by id, ≤ ~1.2×trainTarget rows by
+    * construction), then assign every corpus vector to its nearest
+    * centroid in one distributed pass.
     */
   def ivfBuild(corpus: DataFrame, vecCol: String, idCol: String,
                nCentroids: Int = 16, trainTarget: Int = 1600,
                persist: Boolean = true): IvfIndex = {
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
-    // a coarse quantizer only needs ~100 points per centroid; size the
-    // sample fraction off the row count (cheap parquet-metadata job)
-    val n = math.max(c.count(), 1L)
-    // CONTENT-KEYED sampling, not df.sample: the seeded sampler draws per
-    // (partition, position), so two physical layouts of the SAME data
-    // train different centroids (measured: Scale dedup's semdedup survivor
-    // count moved 2438 -> 2739 -> 2432 across regenerated-but-identical
-    // corpora). An id-hash stride selects the same rows under any layout,
-    // and the lexicographic sort fixes their order — clustering now
-    // depends on the data alone.
-    import scala.math.Ordering.Implicits.seqOrdering
-    val every = math.max(1L, (n / math.max(1.0, trainTarget * 1.2)).toLong)
-    val train = c.filter(pmod(xxhash64(col("corpus_id")), lit(every)) === 0L)
-      .select(col("cv")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-      .sortBy(_.toSeq)
+    // a coarse quantizer only needs ~100 points per centroid
+    val train = trainSample(c, "cv", col("corpus_id"), trainTarget)
     val centroids = kmeansFit(train, nCentroids, iters = 5, seed = 42L)
     val assigned = c.withColumn("cell",
       element_at(cellRanking(col("cv"), centroids), 1))

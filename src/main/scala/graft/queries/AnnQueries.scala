@@ -113,8 +113,9 @@ object AnnQueries {
       .select(col("query_id"), col("corpus_id"), col("rk"))
   }
 
-  // PQ codebooks are trained ONCE per (session, data dir): seeded
-  // sampling + seeded k-means make training deterministic. The
+  // PQ codebooks are trained ONCE per (session, data dir): a
+  // content-keyed, sorted training sample + seeded k-means make the books
+  // depend on the data alone, not on its partition layout. The
   // offline-train / online-probe split of a production PQ deployment.
   /** Train (or fetch the memoized) PQ codebooks for `dir`'s embeddings. */
   def pqBooks(spark: SparkSession, dir: String): Similarity.PqCodebooks =
@@ -153,9 +154,10 @@ object AnnQueries {
       .select(col("query_id"), col("corpus_id"), col("rk"))
   }
 
-  // OPQ model trained ONCE per (session, data dir) — pqBooks' discipline:
-  // seeded sampling + seeded k-means + a deterministic sign-pinned
-  // eigenbasis make it reproducible.
+  // OPQ model trained ONCE per (session, data dir) — pqBooks' discipline
+  // plus a PCA basis from an order-independent fixed-point Gram aggregate,
+  // sign-pinned: the model, too, depends on the data alone (DedupSpec
+  // trains both on two layouts of the same embeddings).
   /** Train (or fetch the memoized) OPQ model for `dir`'s embeddings. */
   def opqModel(spark: SparkSession, dir: String): Similarity.OpqModel =
     Artifacts.memo(spark, "opq", dir) {

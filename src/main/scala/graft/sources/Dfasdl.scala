@@ -285,6 +285,26 @@ object Dfasdl {
   private def bounded(df: DataFrame, doc: Doc): DataFrame =
     doc.rowLimit.fold(df)(n => df.limit(n.toInt))
 
+  /** The raw-record source of one DFASDL read: `path` as a bounded batch
+    * (`spark.read`) or as an unbounded drop directory (`spark.readStream`,
+    * the reference agent's polling cycle as Structured Streaming's file
+    * source). Every reader plans over an Input, so a document shape has one
+    * plan for both; only [[recordStringsFramed]] frames a stream
+    * differently.
+    */
+  private final case class Input(spark: SparkSession, path: String,
+                                 streaming: Boolean) {
+    def load(format: String, schema: Option[StructType],
+             options: (String, String)*): DataFrame =
+      if (streaming) {
+        val r = spark.readStream.format(format).options(options.toMap)
+        schema.fold(r)(r.schema).load(path)
+      } else {
+        val r = spark.read.format(format).options(options.toMap)
+        schema.fold(r)(r.schema).load(path)
+      }
+  }
+
   /** A fixseq-bounded document cannot drive an unbounded stream — reject
     * rather than silently dropping the declared LIMIT.
     */
@@ -403,10 +423,25 @@ object Dfasdl {
     * the format conversions are plain Catalyst expressions layered over the
     * csv read, so pruning and pushdown still apply.
     */
-  def readDelimited(spark: SparkSession, path: String, doc: Doc): DataFrame = {
-    if (isLineChoiceDoc(doc)) return readChoiceLines(spark, path, doc)
-    if (isTokenStreamDoc(doc)) return readTokenStream(spark, path, doc)
-    if (isChoiceStreamDoc(doc)) return readChoiceStream(spark, path, doc)
+  def readDelimited(spark: SparkSession, path: String, doc: Doc): DataFrame =
+    delimited(Input(spark, path, streaming = false), doc)
+
+  /** Streaming form of [[readDelimited]]: the same plan per document shape
+    * over a drop directory, so a compiled cookbook recipe applies unchanged
+    * to a live feed of delimited exports (the reference agent's
+    * parse→process polling cycles, distributed and checkpointable).
+    */
+  def readDelimitedStream(spark: SparkSession, dirPath: String,
+                          doc: Doc): DataFrame = {
+    requireUnbounded(doc, "readDelimitedStream")
+    delimited(Input(spark, dirPath, streaming = true), doc)
+  }
+
+  /** The one dispatch over the delimited document shapes. */
+  private def delimited(in: Input, doc: Doc): DataFrame = {
+    if (isLineChoiceDoc(doc)) return readChoiceLines(in, doc)
+    if (isTokenStreamDoc(doc)) return readTokenStream(in, doc)
+    if (isChoiceStreamDoc(doc)) return readChoiceStream(in, doc)
     // a single-field record with no (or a line-break) stop-sign is one
     // whole line per record — the reference reads to DEFAULT_STOP_SIGN
     // (parsers/BaseParser.scala:50, a newline regex). Routing it through
@@ -415,16 +450,13 @@ object Dfasdl {
     doc.slots match {
       case Seq(f: Field)
           if f.attr("stop-sign").forall(s => s == "\\r\\n?|\\n" || s == "\n") =>
-        return bounded(rawLines(spark, path, doc)
+        return bounded(rawLines(in, doc)
           .select(convert(f, col("value")).as(f.id)), doc)
       case _ => ()
     }
     requireUniformSep(doc)
-    val raw = spark.read
-      .option("header", doc.preamble.nonEmpty.toString)
-      .option("sep", sepOf(doc))
-      .schema(rawSchema(doc))
-      .csv(path)
+    val raw = in.load("csv", Some(rawSchema(doc)),
+      "header" -> doc.preamble.nonEmpty.toString, "sep" -> sepOf(doc))
     bounded(raw.select(slotCols(doc): _*), doc)
   }
 
@@ -504,13 +536,6 @@ object Dfasdl {
   // stop-sign on ANY leaf (mixed signs dispatch to the token-stream
   // reader above).
 
-  /** The whole-record extraction regex for a token-stream doc: one
-    * fragment per leaf capturing up to its stop-sign (a regex fragment,
-    * interpolated exactly as the reference's
-    * FileParserFunctions.buildRegularExpression does), defaulting to the
-    * parser's newline default for sign-less leaves. Returns the pattern
-    * (unwrapped) and each leaf's capture-group index within it.
-    */
   /** One leaf's shape fragment — a lazy capture to its stop-sign (or the
     * newline default). The leaf's TYPE is invisible here: dispatch
     * between same-shape branches is the typed predicates' job.
@@ -521,68 +546,17 @@ object Dfasdl {
       f.attr("stop-sign").map(s => s"(?:$s)").getOrElse("(?:\\r\\n?|\\n|$)")
   }
 
+  /** The whole-record extraction regex for a token-stream doc: one
+    * fragment per leaf capturing up to its stop-sign (a regex fragment,
+    * interpolated exactly as the reference's
+    * FileParserFunctions.buildRegularExpression does), defaulting to the
+    * parser's newline default for sign-less leaves. Returns the pattern
+    * (unwrapped) and each leaf's capture-group index within it.
+    */
   private def tokenStreamPlan(fields: Seq[Field]): (String, Seq[Int]) = {
     val frags = fields.map(leafFrag)
     val idxs = frags.map(groupsIn).scanLeft(0)(_ + _).init.map(_ + 1)
     (frags.mkString, idxs)
-  }
-
-  /** Read a token-stream document ([[isTokenStreamDoc]]) — the reference's
-    * sequential FileParser consuming one stop-sign-terminated token per
-    * element, re-expressed as two regex passes over per-file text: records
-    * are the successive matches of the whole-record pattern
-    * (`regexp_extract_all` + explode), then each leaf extracts by capture
-    * group. Both passes are codegen'd Catalyst expressions.
-    *
-    * Parallelism note (r14): framing is a LADDER. LINE-ANCHORED docs
-    * ([[lineAnchoredRun]] — every mid-record stop-sign provably
-    * intra-line, record ends at its line end) frame by Spark's splittable
-    * line reader. FIXED-ARITY multi-line docs (the vCard label:value
-    * stacks — [[lineBlockArity]] = n) frame by byte-range splits with
-    * prefix-sum line ordinals ([[lineBlockRecords]]), falling back to
-    * `wholetext` when the input already has a file per task slot or a
-    * file's line count is not a multiple of n (raggedness somewhere —
-    * ordinal framing would phase-shift every later record). Only
-    * genuinely ambiguous shapes (fixseq-BOUNDED docs whose first-`max`
-    * semantics need file order) always keep `wholetext` — one task per
-    * file, the reference's one-stream-per-source model.
-    *
-    * Records that fail the record pattern (truncated tail, stray blank
-    * line) are skipped — the reference parser would mark the element BROKEN
-    * and stop; a bulk engine surfaces every well-formed record instead.
-    */
-  /** The record pattern (for record extraction) + groups pattern (for the
-    * per-record single-match re-parse) + per-leaf projection over the
-    * `__g` groups array, shared by the batch and streaming readers. The
-    * leaves read from ONE [[graft.functions.RegexpGroupsExpr]] match per
-    * record — `regexp_extract` per leaf would re-run the whole G-fragment
-    * pattern G times per record.
-    */
-  private def tokenStreamRecCols(doc: Doc): (String, String, Seq[Column]) = {
-    // both consumers read whole files (no header skip), and a header line
-    // could PARTIALLY match the record pattern and shift every record
-    // boundary — no token-stream corpus doc declares a preamble, so
-    // reject rather than risk silent mis-framing if one ever does
-    require(doc.preamble.isEmpty,
-      "token-stream documents with a preamble/header are not supported " +
-        "(the record pattern scans whole files); strip the header upstream")
-    val fields = doc.slots.collect { case f: Field => f }
-    val (pat, idxs) = tokenStreamPlan(fields)
-    // outer wrap so regexp_extract_all can return the WHOLE record as
-    // group 1 during record extraction
-    val recPattern = s"($pat)"
-    val cols = fields.zip(idxs).collect {
-      case (f, g) if !f.anonymous =>
-        val v = applyTrim(f, element_at(col("__g"), g))
-        // coerce (string input → typed), guarded by the same typed-parse
-        // predicate the choice dispatch uses: a malformed numeric/date
-        // token nulls like the csv source's PERMISSIVE mode instead of
-        // killing the job under ANSI (convert alone would also have left
-        // sign-less num/date leaves as raw STRINGS — it expects
-        // csv-pre-typed input)
-        when(branchMatches(f, v), coerce(f, v)).as(f.id)
-    }
-    (recPattern, "^" + pat + "$", cols)
   }
 
   /** Can this start/stop-sign regex fragment EVER match text containing a
@@ -650,38 +624,35 @@ object Dfasdl {
     lineBlockArity(leaves).contains(1)
 
   /** Raw record strings (`__rec`) for a stream-shaped doc: LINE-framed
-    * when `lineAnchored` (per-SPLIT parallel — a single multi-GB file
-    * fans out across byte ranges), else the whole-record pattern over
+    * when `arity` is 1 (per-SPLIT parallel — a single multi-GB file fans
+    * out across byte ranges), BLOCK-framed by line ordinals when it is
+    * n > 1 ([[lineBlockRecords]]), else the whole-record pattern over
     * per-file text (`wholetext` — the reference's one-stream-per-source
     * model, one task per file; multi-line records without a distinctive
     * record anchor are genuinely ambiguous at arbitrary byte offsets, so
-    * they keep sequential framing). Zero-length records drop in both
-    * modes: a doc whose every fragment is optional (all-sign-less
+    * they keep sequential framing). A stream always frames each arriving
+    * file whole: block framing needs RDD passes over a bounded input, and
+    * the file is the reference's stream unit. Zero-length records drop in
+    * every mode: a doc whose every fragment is optional (all-sign-less
     * formatstr rows) lets the record pattern make ONE zero-width match at
     * end-of-input — a spurious empty record; no real record is
     * zero-length (even all-blank lines carry their separators).
+    *
+    * The Boolean says whether BLOCK framing was chosen — the one mode
+    * whose record boundaries come from line ORDINALS rather than content,
+    * so a record its consumer cannot re-parse is evidence of mis-framing
+    * (see readTokenStream's phase guard), not of a malformed input region.
     */
-  private def recordStrings(spark: SparkSession, path: String,
-                            recPattern: String,
-                            arity: Option[Int]): DataFrame =
-    recordStringsFramed(spark, path, recPattern, arity)._1
-
-  /** [[recordStrings]] plus whether FIXED-ARITY BLOCK framing was chosen —
-    * the one framing mode whose record boundaries come from line ORDINALS
-    * rather than content, so a record its consumer cannot re-parse is
-    * evidence of mis-framing (see readTokenStream's phase guard), not of
-    * a malformed input region.
-    */
-  private def recordStringsFramed(spark: SparkSession, path: String,
-                                  recPattern: String,
+  private def recordStringsFramed(in: Input, recPattern: String,
                                   arity: Option[Int]): (DataFrame, Boolean) = {
-    def wholetext = spark.read.option("wholetext", "true").text(path)
+    def wholetext = in.load("text", None, "wholetext" -> "true")
       .select(explode(
         regexp_extract_all(col("value"), lit(recPattern), lit(1)))
         .as("__rec"))
     val (recs, block) = arity match {
-      case Some(1) => (spark.read.text(path).select(col("value").as("__rec")), false)
-      case Some(n) => lineBlockRecords(spark, path, n)
+      case _ if in.streaming => (wholetext, false)
+      case Some(1) => (in.load("text", None).select(col("value").as("__rec")), false)
+      case Some(n) => lineBlockRecords(in.spark, in.path, n)
         .map((_, true)).getOrElse((wholetext, false))
       case None    => (wholetext, false)
     }
@@ -858,10 +829,59 @@ object Dfasdl {
     Some(local.toDF("__rec").unionByName(edgeRecs))
   }
 
-  private def readTokenStream(spark: SparkSession, path: String,
-                              doc: Doc): DataFrame = {
-    val (recPattern, groupsPattern, cols) = tokenStreamRecCols(doc)
+  /** Read a token-stream document ([[isTokenStreamDoc]]) — the reference's
+    * sequential FileParser consuming one stop-sign-terminated token per
+    * element, re-expressed as two regex passes over per-file text: records
+    * are the successive matches of the whole-record pattern
+    * (`regexp_extract_all` + explode), then each leaf extracts by capture
+    * group. Both passes are codegen'd Catalyst expressions.
+    *
+    * Parallelism note (r14): framing is a LADDER. LINE-ANCHORED docs
+    * ([[lineAnchoredRun]] — every mid-record stop-sign provably
+    * intra-line, record ends at its line end) frame by Spark's splittable
+    * line reader. FIXED-ARITY multi-line docs (the vCard label:value
+    * stacks — [[lineBlockArity]] = n) frame by byte-range splits with
+    * prefix-sum line ordinals ([[lineBlockRecords]]), falling back to
+    * `wholetext` when the input already has a file per task slot or a
+    * file's line count is not a multiple of n (raggedness somewhere —
+    * ordinal framing would phase-shift every later record). Only
+    * genuinely ambiguous shapes (fixseq-BOUNDED docs whose first-`max`
+    * semantics need file order) always keep `wholetext` — one task per
+    * file, the reference's one-stream-per-source model.
+    *
+    * A stream frames each arriving file whole ([[recordStringsFramed]]).
+    * The leaves read from ONE [[graft.functions.RegexpGroupsExpr]] match
+    * per record — `regexp_extract` per leaf would re-run the whole
+    * G-fragment pattern G times per record.
+    *
+    * Records that fail the record pattern (truncated tail, stray blank
+    * line) are skipped — the reference parser would mark the element BROKEN
+    * and stop; a bulk engine surfaces every well-formed record instead.
+    */
+  private def readTokenStream(in: Input, doc: Doc): DataFrame = {
+    // the record pattern scans whole files (no header skip), and a header
+    // line could PARTIALLY match it and shift every record boundary — no
+    // token-stream corpus doc declares a preamble, so reject rather than
+    // risk silent mis-framing if one ever does
+    require(doc.preamble.isEmpty,
+      "token-stream documents with a preamble/header are not supported " +
+        "(the record pattern scans whole files); strip the header upstream")
     val fields = doc.slots.collect { case f: Field => f }
+    val (pat, idxs) = tokenStreamPlan(fields)
+    // outer wrap so regexp_extract_all can return the WHOLE record as
+    // group 1 during record extraction
+    val recPattern = s"($pat)"
+    val cols = fields.zip(idxs).collect {
+      case (f, g) if !f.anonymous =>
+        val v = applyTrim(f, element_at(col("__g"), g))
+        // coerce (string input → typed), guarded by the same typed-parse
+        // predicate the choice dispatch uses: a malformed numeric/date
+        // token nulls like the csv source's PERMISSIVE mode instead of
+        // killing the job under ANSI (convert alone would also have left
+        // sign-less num/date leaves as raw STRINGS — it expects
+        // csv-pre-typed input)
+        when(branchMatches(f, v), coerce(f, v)).as(f.id)
+    }
     // TWO select stages so the groups re-parse runs once per record —
     // inlining it per leaf would let CollapseProject duplicate the match
     // per output column (the same staging trick the choice reader uses)
@@ -871,10 +891,10 @@ object Dfasdl {
     // splits by size, not position); a bounded read is small by definition
     val arity = if (doc.rowLimit.isDefined) None else lineBlockArity(fields)
     val (framed, blockFramed) =
-      recordStringsFramed(spark, path, recPattern, arity)
+      recordStringsFramed(in, recPattern, arity)
     val recs = framed
       .select(col("__rec"), graft.functions.RegexFns
-        .regexpGroups(col("__rec"), groupsPattern).as("__g"))
+        .regexpGroups(col("__rec"), "^" + pat + "$").as("__g"))
     // line framing surfaces EVERY line, including one the record pattern
     // rejects (wholetext framing would simply not have extracted it) — a
     // null match must DROP the line, not emit a phantom all-null row.
@@ -915,11 +935,7 @@ object Dfasdl {
     * columns; `trim` attributes apply; anonymous label leaves are consumed
     * and dropped. One distributed text scan, all dispatch codegen'd.
     */
-  /** The per-line branch-dispatch projection of a line-choice doc, shared
-    * by the batch and streaming readers (identical semantics over either
-    * source).
-    */
-  private def choiceLineCols(doc: Doc): Seq[Column] = {
+  private def readChoiceLines(in: Input, doc: Doc): DataFrame = {
     val ch = doc.slots.head.asInstanceOf[ChoiceSlot]
     val line = col("value")
     val plans = ch.branches.map(branchLinePlan)
@@ -934,7 +950,7 @@ object Dfasdl {
       }.foldLeft(line.rlike(p))(_ && _)
     }
     val first = firstMatchOnly(preds)
-    ch.branches.zip(plans).zipWithIndex.flatMap {
+    val cols = ch.branches.zip(plans).zipWithIndex.flatMap {
       case ((b, (p, idxs)), i) =>
         b.leaves.zip(idxs).collect {
           case (f, g) if !f.anonymous =>
@@ -942,11 +958,12 @@ object Dfasdl {
             when(first(i), coerce(f, v)).as(f.id)
         }
     }
+    bounded(rawLines(in, doc).select(cols: _*), doc)
   }
 
   /** First-match-wins dispatch: entry i holds "predicate i AND no earlier
     * predicate" — the in-order branch retry every choice reader shares
-    * ([[choiceCols]], [[choiceLineCols]], [[choiceStreamCols]]).
+    * ([[choiceCols]], [[readChoiceLines]], [[choiceStreamCols]]).
     */
   private def firstMatchOnly(preds: Seq[Column]): Seq[Column] =
     preds.zipWithIndex.map { case (p, i) =>
@@ -962,16 +979,11 @@ object Dfasdl {
     * and escape "" (maps to \u0000 in CSVOptions — the default backslash
     * escape would otherwise swallow literal backslashes).
     */
-  private def rawLines(spark: SparkSession, path: String, doc: Doc): DataFrame =
-    if (doc.preamble.isEmpty) spark.read.text(path)
-    else spark.read.option("header", "true")
-      .option("sep", "\u0001\u0002\u0001")
-      .option("quote", "").option("escape", "")
-      .schema(StructType(Seq(StructField("value", StringType)))).csv(path)
-
-  private def readChoiceLines(spark: SparkSession, path: String,
-                              doc: Doc): DataFrame =
-    bounded(rawLines(spark, path, doc).select(choiceLineCols(doc): _*), doc)
+  private def rawLines(in: Input, doc: Doc): DataFrame =
+    if (doc.preamble.isEmpty) in.load("text", None)
+    else in.load("csv", Some(StructType(Seq(StructField("value", StringType)))),
+      "header" -> "true", "sep" -> "\u0001\u0002\u0001",
+      "quote" -> "", "escape" -> "")
 
   // --------------------- record-scope multi-leaf choice documents (r12)
 
@@ -1007,18 +1019,18 @@ object Dfasdl {
       for (prefix <- acc; o <- opts) yield prefix ++ o
     }
 
-  /** Shared batch/stream plan for a choice-stream doc: the record
+  /** The plan for a choice-stream doc: the record
     * extraction pattern (an alternation over every branch combination, so
     * `regexp_extract_all` frames records no matter which branches each
     * record takes), one STAGED [[graft.functions.RegexpGroupsExpr]] match
     * per combination (`groupCols` — the same one-match-per-record staging
-    * trick as [[tokenStreamRecCols]]: per-leaf `regexp_extract` would
+    * trick as [[readTokenStream]]: per-leaf `regexp_extract` would
     * re-run each combination's full pattern per output column), the
     * dispatch `keep` predicate, and the output projection — combination i
     * wins when its anchored pattern full-matches AND every leaf passes its
     * typed-parse predicate and no earlier combination won (the reference's
     * first-branch-that-parses rule, type failures included, lifted from
-    * the line scope of [[choiceLineCols]] to the whole record). Losing
+    * the line scope of [[readChoiceLines]] to the whole record). Losing
     * branches' leaves are null, the either/or nullability the reference's
     * expected-data fixtures show per record. A record that shape-frames
     * but type-fails EVERY combination is dropped by `keep` — the
@@ -1211,16 +1223,6 @@ object Dfasdl {
       case _ => recs
     }
 
-  /** Read a choice-stream document ([[isChoiceStreamDoc]]): records frame
-    * by line when EVERY branch combination is [[lineAnchoredRun]]
-    * (per-SPLIT parallel — the framing is byte-range splittable no matter
-    * which branch each record takes), else by the combination alternation
-    * over per-file text (`wholetext`, the reference's
-    * one-stream-per-source unit — see [[recordStrings]]). Each record
-    * then dispatches to the first branch combination that fully parses.
-    * All dispatch is codegen'd Catalyst regex/conditional expressions —
-    * one distributed scan, no UDFs.
-    */
   /** The per-record dispatch over the staged group arrays: one projection
     * derives `__winner` (it references sibling `__g_i` aliases, so it
     * needs its own stage), then the no-combination-parses drop runs as an
@@ -1240,8 +1242,18 @@ object Dfasdl {
         array(struct(cols: _*)))).as("__row"))
       .select("__row.*")
 
-  private def readChoiceStream(spark: SparkSession, path: String,
-                               doc: Doc): DataFrame = {
+  /** Read a choice-stream document ([[isChoiceStreamDoc]]): records frame
+    * by line when EVERY branch combination is [[lineAnchoredRun]]
+    * (per-SPLIT parallel — the framing is byte-range splittable no matter
+    * which branch each record takes), else by the combination alternation
+    * over per-file text (`wholetext`, the reference's
+    * one-stream-per-source unit — see [[recordStringsFramed]], which also
+    * frames every stream this way). Each record then dispatches to the
+    * first branch combination that fully parses. All dispatch is
+    * codegen'd Catalyst regex/conditional expressions — one distributed
+    * scan, no UDFs.
+    */
+  private def readChoiceStream(in: Input, doc: Doc): DataFrame = {
     val (recPattern, stages, winner, cols) = choiceStreamCols(doc)
     // block framing needs ONE static record arity; a choice doc's arity
     // varies by branch combination, so only the 1-line case frames by
@@ -1249,25 +1261,13 @@ object Dfasdl {
     // records in FILE order, which only sequential framing preserves)
     val anchored = doc.rowLimit.isEmpty &&
       choiceStreamCombos(doc).forall(lineAnchoredRun)
-    val recs = stageChoiceStream(recordStrings(spark, path, recPattern,
-      if (anchored) Some(1) else None), stages)
+    val recs = stageChoiceStream(recordStringsFramed(in, recPattern,
+      if (anchored) Some(1) else None)._1, stages)
     // a line no combination parses is dropped by [[dispatchRows]]'s
     // null-winner explode — the line-framed twin of wholetext's
     // never-extracted malformed region
     bounded(dispatchRows(recs, winner, cols), doc)
   }
-
-  /** Streaming twin of [[rawLines]] — same options, `readStream` source. */
-  private def rawLinesStream(spark: SparkSession, dirPath: String,
-                             doc: Doc): DataFrame =
-    if (doc.preamble.isEmpty)
-      spark.readStream
-        .schema(StructType(Seq(StructField("value", StringType))))
-        .text(dirPath)
-    else spark.readStream.option("header", "true")
-      .option("sep", "\u0001\u0002\u0001")
-      .option("quote", "").option("escape", "")
-      .schema(StructType(Seq(StructField("value", StringType)))).csv(dirPath)
 
   /** The reference's `trim` attribute (trim="both"/"left"/"right") on a
     * parsed value.
@@ -1277,65 +1277,6 @@ object Dfasdl {
     case Some("left")  => ltrim(c)
     case Some("right") => rtrim(c)
     case _             => c
-  }
-
-  /** Streaming twin of [[readDelimited]]: the same schema and format
-    * conversions over `readStream.csv`, so a compiled cookbook recipe
-    * applies unchanged to a live drop-directory of delimited exports. The
-    * reference agent's polling trigger loop
-    * (TenseiAgent parse→process cycles) IS Structured Streaming's file
-    * source, distributed and checkpointable.
-    */
-  def readDelimitedStream(spark: SparkSession, dirPath: String,
-                          doc: Doc): DataFrame = {
-    requireUnbounded(doc, "readDelimitedStream")
-    // r9 parity: every document shape the batch reader accepts streams too,
-    // over the same shared projections — a line-choice doc dispatches each
-    // arriving line, a token-stream doc explodes records out of each
-    // arriving FILE (wholetext; the file is the reference's stream unit)
-    if (isLineChoiceDoc(doc))
-      return rawLinesStream(spark, dirPath, doc).select(choiceLineCols(doc): _*)
-    if (isTokenStreamDoc(doc)) {
-      val (recPattern, groupsPattern, cols) = tokenStreamRecCols(doc)
-      return spark.readStream.option("wholetext", "true")
-        .schema(StructType(Seq(StructField("value", StringType))))
-        .text(dirPath)
-        .select(explode(regexp_extract_all(col("value"), lit(recPattern),
-          lit(1))).as("__rec"))
-        .filter(length(col("__rec")) > 0) // see readTokenStream
-        .select(graft.functions.RegexFns
-          .regexpGroups(col("__rec"), groupsPattern).as("__g"))
-        .select(cols: _*)
-    }
-    if (isChoiceStreamDoc(doc)) {
-      val (recPattern, stages, winner, cols) = choiceStreamCols(doc)
-      return dispatchRows(
-        stageChoiceStream(
-          spark.readStream.option("wholetext", "true")
-            .schema(StructType(Seq(StructField("value", StringType))))
-            .text(dirPath)
-            .select(explode(regexp_extract_all(col("value"), lit(recPattern),
-              lit(1))).as("__rec"))
-            .filter(length(col("__rec")) > 0), // see readTokenStream
-          stages),
-        winner, cols)
-    }
-    // single-field sign-less records: whole lines, same as the batch
-    // reader (the csv route would split at "," — see readDelimited)
-    doc.slots match {
-      case Seq(f: Field)
-          if f.attr("stop-sign").forall(s => s == "\\r\\n?|\\n" || s == "\n") =>
-        return rawLinesStream(spark, dirPath, doc)
-          .select(convert(f, col("value")).as(f.id))
-      case _ => ()
-    }
-    requireUniformSep(doc)
-    val raw = spark.readStream
-      .option("header", doc.preamble.nonEmpty.toString)
-      .option("sep", sepOf(doc))
-      .schema(rawSchema(doc))
-      .csv(dirPath)
-    raw.select(slotCols(doc): _*)
   }
 
   /** Fixed-width flat file described by a DFASDL document whose every field
@@ -1408,31 +1349,25 @@ object Dfasdl {
   def readXml(spark: SparkSession, path: String, doc: Doc,
               rowTag: Option[String] = None): DataFrame = {
     requireNoRepeatInstances(doc, "readXml")
-    val (tag, rawSchema, cols) = xmlPlan(doc, rowTag)
-    bounded(spark.read.format("xml").option("rowTag", tag).schema(rawSchema)
-      .load(path).select(cols: _*), doc)
+    xml(Input(spark, path, streaming = false), doc, rowTag)
   }
 
-  /** Streaming twin of [[readXml]] (the xml source is file-based, so it
+  /** Streaming form of [[readXml]] (the xml source is file-based, so it
     * streams a drop-directory of XML exports like any other file source).
     */
   def readXmlStream(spark: SparkSession, dirPath: String, doc: Doc,
                     rowTag: Option[String] = None): DataFrame = {
     requireNoRepeatInstances(doc, "readXmlStream")
     requireUnbounded(doc, "readXmlStream")
-    val (tag, rawSchema, cols) = xmlPlan(doc, rowTag)
-    spark.readStream.format("xml").option("rowTag", tag).schema(rawSchema)
-      .load(dirPath)
-      .select(cols: _*)
+    xml(Input(spark, dirPath, streaming = true), doc, rowTag)
   }
 
-  /** The shared batch/stream plan for a DFASDL-described XML read: the
-    * resolved rowTag, the all-strings raw read schema (a leaf element that
-    * also carries mapped attributes surfaces as a struct — valueTag
-    * "_VALUE" + "_<attr>"s), and the typed projection back to field ids.
+  /** The one plan for a DFASDL-described XML read: the resolved rowTag,
+    * the all-strings raw read schema (a leaf element that also carries
+    * mapped attributes surfaces as a struct — valueTag "_VALUE" +
+    * "_<attr>"s), and the typed projection back to field ids.
     */
-  private def xmlPlan(doc: Doc, rowTag: Option[String])
-      : (String, StructType, Seq[Column]) = {
+  private def xml(in: Input, doc: Doc, rowTag: Option[String]): DataFrame = {
     val tag = rowTag.orElse(doc.rowName).getOrElse("row")
     final case class AttrField(parent: String, name: String, f: Field)
     val (attrFs, plainFs) = doc.fields.partition(f =>
@@ -1471,7 +1406,8 @@ object Dfasdl {
       }
       coerce(f, c).as(f.id)
     }
-    (tag, StructType(rawFields), cols)
+    bounded(in.load("xml", Some(StructType(rawFields)), "rowTag" -> tag)
+      .select(cols: _*), doc)
   }
 
   /** Read JSON records described by a DFASDL schema — the reference's
@@ -1486,28 +1422,27 @@ object Dfasdl {
   def readJson(spark: SparkSession, path: String, doc: Doc,
                multiline: Boolean = false): DataFrame = {
     requireNoRepeatInstances(doc, "readJson")
-    def jsonName(f: Field): String = f.attr("json-attribute-name").getOrElse(f.id)
-    val raw = spark.read
-      .option("multiLine", multiline.toString)
-      .schema(StructType(doc.fields.map(f => StructField(jsonName(f), StringType))))
-      .json(path)
-    bounded(raw.select(doc.fields.map(f =>
-      coerce(f, col(jsonName(f))).as(f.id)): _*), doc)
+    json(Input(spark, path, streaming = false), doc, multiline)
   }
 
-  /** Streaming twin of [[readJson]] (cf. [[readDelimitedStream]]): the same
-    * key mapping and coercions over `readStream.json` for a live
-    * drop-directory of JSON Lines exports — a compiled cookbook applies
-    * unchanged.
+  /** Streaming form of [[readJson]] (cf. [[readDelimitedStream]]): the
+    * same key mapping and coercions for a live drop-directory of JSON
+    * Lines exports — a compiled cookbook applies unchanged.
     */
   def readJsonStream(spark: SparkSession, dirPath: String, doc: Doc): DataFrame = {
     requireNoRepeatInstances(doc, "readJsonStream")
     requireUnbounded(doc, "readJsonStream")
+    json(Input(spark, dirPath, streaming = true), doc, multiline = false)
+  }
+
+  /** The one plan for a DFASDL-described JSON read. */
+  private def json(in: Input, doc: Doc, multiline: Boolean): DataFrame = {
     def jsonName(f: Field): String = f.attr("json-attribute-name").getOrElse(f.id)
-    val raw = spark.readStream
-      .schema(StructType(doc.fields.map(f => StructField(jsonName(f), StringType))))
-      .json(dirPath)
-    raw.select(doc.fields.map(f => coerce(f, col(jsonName(f))).as(f.id)): _*)
+    val raw = in.load("json",
+      Some(StructType(doc.fields.map(f => StructField(jsonName(f), StringType)))),
+      "multiLine" -> multiline.toString)
+    bounded(raw.select(doc.fields.map(f =>
+      coerce(f, col(jsonName(f))).as(f.id)): _*), doc)
   }
 
   // --------------------------------------------------- cookbook write side

@@ -461,6 +461,20 @@ class DedupSpec extends AnyFunSuite {
       s"OPQ recall $rOpq fell materially below plain PQ $rPq")
   }
 
+  test("PQ and OPQ training depend on the data, not its partition layout") {
+    // the same embeddings hash-partitioned by id and reordered into three
+    // round-robin partitions: a layout-keyed sample trains different books
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val byId = e.repartition(7, col("vec_id"))
+    val reordered = e.orderBy(col("vec_id").desc).repartition(3)
+    assert(Similarity.pqTrain(byId, "embedding", m = 8, ksub = 16).books ==
+      Similarity.pqTrain(reordered, "embedding", m = 8, ksub = 16).books)
+    val (a, b) = (Similarity.opqTrain(byId, "embedding", m = 8, ksub = 16),
+      Similarity.opqTrain(reordered, "embedding", m = 8, ksub = 16))
+    assert(a.rotation.map(_.toSeq).toSeq == b.rotation.map(_.toSeq).toSeq)
+    assert(a.books.books == b.books.books)
+  }
+
   test("opqTopK beats plain PQ on an anisotropic corpus (the OPQ promise, r14)") {
     // scale dim i by 1/(1+i/4): variance decays ~16x across dims, so plain
     // PQ's contiguous split gives subquantizer 0 nearly all the variance

@@ -1324,18 +1324,62 @@ class DfasdlSpec extends AnyFunSuite {
       org.apache.spark.sql.streaming.OutputMode.Append()).collect().toSet
     assert(streamedC == Dfasdl.readDelimited(spark, lcDir, cd).collect().toSet
       && streamedC.size == 16)
-    // single-field sign-less doc: stream == batch (whole lines, no comma split)
+  }
+
+  test("readDelimitedStream equals readDelimited on token-stream, line-choice and single-field docs") {
+    // self-written fixtures, one arriving file per shape: the batch read
+    // frames by line ordinals or lines, the stream frames the file whole,
+    // and both must surface the same rows
+    def streamEqualsBatch(name: String, d: Dfasdl.Doc, text: String): Set[Row] = {
+      val dir = Files.createTempDirectory(name).toString
+      Files.write(Paths.get(dir, "a.txt"), text.getBytes("UTF-8"))
+      val streamed = graft.streaming.Streams.runToMemory(spark,
+        Dfasdl.readDelimitedStream(spark, dir, d), name,
+        org.apache.spark.sql.streaming.OutputMode.Append()).collect().toSet
+      val batch = Dfasdl.readDelimited(spark, dir, d).collect().toSet
+      assert(streamed == batch, s"$name: stream $streamed vs batch $batch")
+      streamed
+    }
+    // token-stream: label:value over two lines per record (block framing)
+    val tokenDoc = Dfasdl.parseSchema(
+      """<dfasdl xmlns="http://www.dfasdl.org/DFASDL"><seq id="s"><elem id="r">
+        |  <str class="label" stop-sign=":"/>
+        |  <num id="okey"/>
+        |  <str class="label" stop-sign=":"/>
+        |  <str id="prio"/>
+        |</elem></seq></dfasdl>""".stripMargin)
+    val tokens = streamEqualsBatch("token_stream_eq", tokenDoc,
+      "OKEY:1\nPRIO:1-URGENT\nOKEY:2\nPRIO:2-HIGH\nOKEY:3\nPRIO:5-LOW\n")
+    assert(tokens == Set(Row(1L, "1-URGENT"), Row(2L, "2-HIGH"),
+      Row(3L, "5-LOW")), tokens.toString)
+    // line-choice: one choice per line, start-sign-anchored label branches
+    // ahead of a generic label:value catch-all
+    val choiceDoc = Dfasdl.parseSchema(
+      """<dfasdl xmlns="http://www.dfasdl.org/DFASDL"><seq id="s">
+        |  <choice id="line">
+        |    <celem id="fn">
+        |      <str class="label" start-sign="FN" stop-sign=":"/><str id="fn_value"/>
+        |    </celem>
+        |    <celem id="email">
+        |      <str class="label" start-sign="EMAIL" stop-sign=":"/><str id="email_value"/>
+        |    </celem>
+        |    <celem id="other">
+        |      <str id="other_label" stop-sign=":"/><str id="other_value"/>
+        |    </celem>
+        |  </choice>
+        |</seq></dfasdl>""".stripMargin)
+    val lines = streamEqualsBatch("line_choice_eq", choiceDoc,
+      "FN:Ada Lovelace\nEMAIL:ada@example.com\nTEL:555-0100\nFN:Alan Turing\n")
+    assert(lines == Set(Row("Ada Lovelace", null, null, null),
+      Row(null, "ada@example.com", null, null), Row(null, null, "TEL", "555-0100"),
+      Row("Alan Turing", null, null, null)), lines.toString)
+    // single-field sign-less: whole lines, no comma split
     val sfDoc = Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL"><seq id="s"><elem id="r">
         |  <str id="line"/>
         |</elem></seq></dfasdl>""".stripMargin)
-    val sfDir = Files.createTempDirectory("singlefield_stream").toString
-    Files.write(Paths.get(sfDir, "a.txt"), "x, y, z\nplain\n".getBytes("UTF-8"))
-    val streamedS = graft.streaming.Streams.runToMemory(spark,
-      Dfasdl.readDelimitedStream(spark, sfDir, sfDoc), "singlefield_stream",
-      org.apache.spark.sql.streaming.OutputMode.Append()).collect().toSet
-    assert(streamedS == Dfasdl.readDelimited(spark, sfDir, sfDoc).collect().toSet
-      && streamedS.exists(_.getString(0) == "x, y, z"), streamedS.toString)
+    val single = streamEqualsBatch("singlefield_stream", sfDoc, "x, y, z\nplain\n")
+    assert(single == Set(Row("x, y, z"), Row("plain")), single.toString)
   }
 
   test("writeFixedWidth round-trips through readFixedWidth and rejects overflow") {
