@@ -6,9 +6,9 @@ import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (SURVEY.md §2e): treat image/audio/video as
   * opaque `binary` columns with typed metadata, and run feature extraction
-  * batch-wise per partition.
+  * row by row inside each partition.
   *
-  * The Spark-side shape — schema, partition-parallel batched extraction,
+  * The Spark-side shape — schema, partition-parallel extraction,
   * deterministic features — is real and tested, and so are the DECODERS
   * (r15): PNG through a self-contained wire-level path ([[decodePng]] —
   * chunk walk, Inflater, all five scanline filters), JPEG/GIF/BMP through
@@ -40,13 +40,12 @@ object Multimodal {
   /** Byte-histogram feature: 16 buckets over byte values, L1-normalized —
     * a real, deterministic per-payload feature computed without any codec
     * (usable for corruption screening / format clustering at scale).
-    * Implemented with mapPartitions in batches, the Scala analog of
-    * `mapInPandas`: per-partition, per-batch iteration with a bounded batch
-    * size, which is exactly the shape a vectorized decoder needs.
+    * Implemented with mapPartitions, the Scala analog of `mapInPandas`:
+    * one payload at a time per partition, so only the current payload is
+    * held alive.
     */
-  def byteHistogram(df: DataFrame, binCol: String, idCol: String,
-                    batchSize: Int = 256): DataFrame =
-    byteHistogramCounts(df, binCol, idCol, batchSize)
+  def byteHistogram(df: DataFrame, binCol: String, idCol: String): DataFrame =
+    byteHistogramCounts(df, binCol, idCol)
       .select(col("id"),
         transform(col("counts"),
           c => c.cast(DoubleType) / greatest(col("n_bytes"), lit(1L)).cast(DoubleType))
@@ -54,29 +53,23 @@ object Multimodal {
 
   /** Raw 16-bucket byte counts + payload length — the integer-exact form of
     * [[byteHistogram]] (no float division), which is what an engine-portable
-    * comparison needs. Dataset mapPartitions with a product encoder: the
-    * per-partition batched iteration a vectorized decoder needs, without the
-    * RDD detour's Row reflection.
+    * comparison needs. Dataset mapPartitions with a product encoder, without
+    * the RDD detour's Row reflection.
     */
-  def byteHistogramCounts(df: DataFrame, binCol: String, idCol: String,
-                          batchSize: Int = 256): DataFrame = {
+  def byteHistogramCounts(df: DataFrame, binCol: String,
+                          idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast(LongType), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // batch boundary = where a vectorized decoder would process a block
-          batch.iterator.map { case (id, bytes) =>
-            val hist = new Array[Long](16)
-            var i = 0
-            while (i < bytes.length) {
-              hist((bytes(i) & 0xff) >>> 4) += 1
-              i += 1
-            }
-            (id, hist, bytes.length.toLong)
-          }
+      .mapPartitions(_.map { case (id, bytes) =>
+        val hist = new Array[Long](16)
+        var i = 0
+        while (i < bytes.length) {
+          hist((bytes(i) & 0xff) >>> 4) += 1
+          i += 1
         }
-      }.toDF("id", "counts", "n_bytes")
+        (id, hist, bytes.length.toLong)
+      }).toDF("id", "counts", "n_bytes")
   }
 
   /** A decoded raster: geometry plus the flattened H×W×C pixel bytes in
@@ -391,7 +384,7 @@ object Multimodal {
         "payload is not a decodable image (PNG wire path + JDK ImageIO both refused)")
     }
 
-  /** Batched JPEG screening with a LOSSY-codec oracle contract: decode each
+  /** JPEG screening with a LOSSY-codec oracle contract: decode each
     * payload via the JDK codec and report exact geometry plus a
     * `within_tol` flag — max absolute per-channel error against the
     * caller-supplied expected uniform color, bounded by `tol`. The flag is
@@ -405,91 +398,82 @@ object Multimodal {
                        expR: org.apache.spark.sql.Column,
                        expG: org.apache.spark.sql.Column,
                        expB: org.apache.spark.sql.Column,
-                       tol: Int = 8, batchSize: Int = 256): DataFrame = {
+                       tol: Int = 8): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast(LongType), col(binCol),
         expR.cast(LongType), expG.cast(LongType), expB.cast(LongType))
       .as[(Long, Array[Byte], Long, Long, Long)]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.iterator.map { case (id, bytes, r, g, b) =>
-          decodeImage(bytes) match {
-            case Some(img) =>
-              var maxErr = 0L
-              var i = 0
-              while (i < img.pixels.length) {
-                val exp = (i % 3) match { case 0 => r; case 1 => g; case _ => b }
-                val e = math.abs((img.pixels(i) & 0xff) - exp)
-                if (e > maxErr) maxErr = e
-                i += 1
-              }
-              (id, 1L, img.width.toLong, img.height.toLong,
-                if (maxErr <= tol) 1L else 0L)
-            case None => (id, 0L, -1L, -1L, -1L)
-          }
-        })
-      }.toDF("id", "ok", "width", "height", "within_tol")
+      .mapPartitions(_.map { case (id, bytes, r, g, b) =>
+        decodeImage(bytes) match {
+          case Some(img) =>
+            var maxErr = 0L
+            var i = 0
+            while (i < img.pixels.length) {
+              val exp = (i % 3) match { case 0 => r; case 1 => g; case _ => b }
+              val e = math.abs((img.pixels(i) & 0xff) - exp)
+              if (e > maxErr) maxErr = e
+              i += 1
+            }
+            (id, 1L, img.width.toLong, img.height.toLong,
+              if (maxErr <= tol) 1L else 0L)
+          case None => (id, 0L, -1L, -1L, -1L)
+        }
+      }).toDF("id", "ok", "width", "height", "within_tol")
   }
 
-  /** Batched PNG pixel-level screening: decode each payload with
+  /** PNG pixel-level screening: decode each payload with
     * [[decodePng]] and report integer raster statistics — geometry plus
     * per-channel pixel sums (first three channels; -1 where absent), with
     * ok=0 / all -1 for payloads that fail the full decode (truncation,
-    * bad filter, length-mismatched zlib stream). The per-partition batched
-    * iteration is the vectorized-decoder shape; only fixed-width stats
+    * bad filter, length-mismatched zlib stream). Only fixed-width stats
     * leave the task, never pixel buffers.
     */
-  def pngStats(df: DataFrame, binCol: String, idCol: String,
-               batchSize: Int = 256): DataFrame = {
+  def pngStats(df: DataFrame, binCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast(LongType), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.iterator.map { case (id, bytes) =>
-          decodePng(bytes) match {
-            case Some(img) =>
-              val sums = new Array[Long](3)
-              var i = 0
-              while (i < img.pixels.length) {
-                val c = i % img.channels
-                if (c < 3) sums(c) += img.pixels(i) & 0xff
-                i += 1
-              }
-              (id, 1L, img.width.toLong, img.height.toLong, img.channels.toLong,
-                if (img.channels > 0) sums(0) else -1L,
-                if (img.channels > 1) sums(1) else -1L,
-                if (img.channels > 2) sums(2) else -1L)
-            case None => (id, 0L, -1L, -1L, -1L, -1L, -1L, -1L)
-          }
-        })
-      }.toDF("id", "ok", "width", "height", "channels", "sum_c0", "sum_c1", "sum_c2")
+      .mapPartitions(_.map { case (id, bytes) =>
+        decodePng(bytes) match {
+          case Some(img) =>
+            val sums = new Array[Long](3)
+            var i = 0
+            while (i < img.pixels.length) {
+              val c = i % img.channels
+              if (c < 3) sums(c) += img.pixels(i) & 0xff
+              i += 1
+            }
+            (id, 1L, img.width.toLong, img.height.toLong, img.channels.toLong,
+              if (img.channels > 0) sums(0) else -1L,
+              if (img.channels > 1) sums(1) else -1L,
+              if (img.channels > 2) sums(2) else -1L)
+          case None => (id, 0L, -1L, -1L, -1L, -1L, -1L, -1L)
+        }
+      }).toDF("id", "ok", "width", "height", "channels", "sum_c0", "sum_c1", "sum_c2")
   }
 
-  /** Batched WAV/PCM screening: decode each payload with [[decodeWav]] and
+  /** WAV/PCM screening: decode each payload with [[decodeWav]] and
     * report integer clip statistics — format fields, sample count, total
     * and peak absolute amplitude (the silence/clipping screens an audio
     * curation pass runs) — with ok=0 / all -1 for undecodable payloads.
     */
-  def wavStats(df: DataFrame, binCol: String, idCol: String,
-               batchSize: Int = 256): DataFrame = {
+  def wavStats(df: DataFrame, binCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast(LongType), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.iterator.map { case (id, bytes) =>
-          decodeWav(bytes) match {
-            case Some(clip) =>
-              var sumAbs = 0L; var maxAbs = 0L
-              clip.samples.foreach { s =>
-                val a = math.abs(s.toLong)
-                sumAbs += a; if (a > maxAbs) maxAbs = a
-              }
-              (id, 1L, clip.sampleRate.toLong, clip.channels.toLong,
-                clip.samples.length.toLong, sumAbs, maxAbs)
-            case None => (id, 0L, -1L, -1L, -1L, -1L, -1L)
-          }
-        })
-      }.toDF("id", "ok", "sample_rate", "channels", "n_samples", "sum_abs", "max_abs")
+      .mapPartitions(_.map { case (id, bytes) =>
+        decodeWav(bytes) match {
+          case Some(clip) =>
+            var sumAbs = 0L; var maxAbs = 0L
+            clip.samples.foreach { s =>
+              val a = math.abs(s.toLong)
+              sumAbs += a; if (a > maxAbs) maxAbs = a
+            }
+            (id, 1L, clip.sampleRate.toLong, clip.channels.toLong,
+              clip.samples.length.toLong, sumAbs, maxAbs)
+          case None => (id, 0L, -1L, -1L, -1L, -1L, -1L)
+        }
+      }).toDF("id", "ok", "sample_rate", "channels", "n_samples", "sum_abs", "max_abs")
   }
 
   /** REAL header decode (r15 — retires the SURVEY §2e "decode stubbed"
@@ -565,22 +549,19 @@ object Multimodal {
     } else ("unknown", None, None, None)
   }
 
-  /** [[decodeHeader]] over a DataFrame's binary column — the same batched
+  /** [[decodeHeader]] over a DataFrame's binary column — the same
     * per-partition plumbing as [[byteHistogramCounts]] (where a pixel
     * decoder would slot in), emitting (id, format, width, height,
     * bit_depth) with null geometry for truncated/unknown payloads.
     */
-  def decodeHeaders(df: DataFrame, binCol: String, idCol: String,
-                    batchSize: Int = 256): DataFrame = {
+  def decodeHeaders(df: DataFrame, binCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast(LongType), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.iterator.map { case (id, bytes) =>
-          val (fmt, w, h, d) = decodeHeader(bytes)
-          (id, fmt, w, h, d)
-        })
-      }.toDF("id", "format", "width", "height", "bit_depth")
+      .mapPartitions(_.map { case (id, bytes) =>
+        val (fmt, w, h, d) = decodeHeader(bytes)
+        (id, fmt, w, h, d)
+      }).toDF("id", "format", "width", "height", "bit_depth")
   }
 
   /** Frame sampling plumbing for chunked media: split the payload into

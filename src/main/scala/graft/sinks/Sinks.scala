@@ -450,8 +450,6 @@ object Sinks extends Serializable {
                       keys: Seq[String],
                       props: Map[String, String] = Map.empty,
                       batchSize: Int = 1000): Unit = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types._
     val cols = df.columns.toSeq
     require(keys.nonEmpty, "writeJdbcUpsert: at least one key column required")
     require(keys.forall(cols.contains),
@@ -463,7 +461,6 @@ object Sinks extends Serializable {
     val schema = df.schema
     val fieldIdx = cols.zipWithIndex.toMap
     def q(c: String) = jdbcQuote(c)
-    def openConn(): java.sql.Connection = jdbcOpen(url, props)
     val lobKeyLen: Map[String, Int] = jdbcLobKeyLen(url, props, table, keys)
     def keyCmp(c: String): String = jdbcKeyCmp(lobKeyLen)(c)
     val updateSql = s"UPDATE $table SET " +
@@ -484,117 +481,89 @@ object Sinks extends Serializable {
     // dialect. UNIQUE also enforces the one-row-per-key invariant the
     // update semantics assume.
     jdbcEnsureKeyIndex(url, props, table, keys, "writeJdbcUpsert")
-    // one writer per key: see scaladoc (correctness, not an optimization)
-    val shuffleN = df.sparkSession.sessionState.conf.numShufflePartitions
-    val keyed = df.repartition(shuffleN, keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-    keyed.foreachPartition { (rows: Iterator[Row]) =>
-      val buffered = rows.toArray // retained for deadlock-victim replay
-      var attempt = 0
-      var done = buffered.isEmpty
-      while (!done) {
-        val conn = jdbcOpen(url, props)
-        try {
-          conn.setAutoCommit(false)
-          val upd = conn.prepareStatement(updateSql)
-          val ins = conn.prepareStatement(insertSql)
-          def bind(st: java.sql.PreparedStatement, idx: Int, colName: String,
-                   v: Any): Unit = jdbcBind(st, idx, sqlTypes(colName), v)
-          // binary keys normalize to Seq so the duplicate check compares
-          // content (Array equality is reference equality)
-          def keyOf(row: Row): Seq[Any] = keys.map(k => row.get(fieldIdx(k)) match {
-            case a: Array[Byte] => a.toSeq
-            case v => v
-          })
-          val pending = scala.collection.mutable.ArrayBuffer.empty[Row]
-          def insertRow(row: Row): Unit = {
-            cols.zipWithIndex.foreach { case (c, i) =>
-              bind(ins, i + 1, c, row.get(fieldIdx(c)))
-            }
-            ins.addBatch()
-          }
-          def exists(row: Row): Boolean = {
-            val ex = conn.prepareStatement(existsSql)
-            try {
-              keys.zipWithIndex.foreach { case (k, i) =>
-                bind(ex, i + 1, k, row.get(fieldIdx(k)))
-              }
-              val rs = ex.executeQuery()
-              try rs.next() finally rs.close()
-            } finally ex.close()
-          }
-          def flush(): Unit = if (pending.nonEmpty) {
-            val counts = upd.executeBatch()
-            var inserts = 0
-            counts.zip(pending).foreach { case (n, row) =>
-              // n > 0: definitely matched. n == 0 or SUCCESS_NO_INFO (-2):
-              // PROBE before inserting — affected-rows drivers (MySQL
-              // without CLIENT_FOUND_ROWS) report 0 for a matched row
-              // whose values didn't change, and assuming "missing" there
-              // would turn idempotent re-application into a duplicate-key
-              // crash. The probe is one indexed point SELECT per
-              // zero-count row only.
-              // EXECUTE_FAILED (-3) or any other negative ≠ SUCCESS_NO_INFO:
-              // drivers with continue-on-error batches report a FAILED
-              // entry this way — probing existence there would silently
-              // treat the lost UPDATE as applied. Fail the transaction so
-              // rollback + replay (or the caller) handles it.
-              if (n < 0 && n != java.sql.Statement.SUCCESS_NO_INFO)
-                throw new java.sql.SQLException(
-                  s"writeJdbcUpsert: batch UPDATE entry failed (count=$n) " +
-                    s"for key ${keyOf(row)} — driver continued past a failed " +
-                    "statement; rolling back the partition transaction")
-              val missing = if (n > 0) false else !exists(row)
-              if (missing) { insertRow(row); inserts += 1 }
-            }
-            if (inserts > 0) ins.executeBatch()
-            pending.clear()
-          }
-          var prevKey: Seq[Any] = null
-          buffered.foreach { row =>
-            val k = keyOf(row)
-            // a NULL key can never match its own WHERE clause (three-valued
-            // SQL: `k = NULL` is UNKNOWN), so the row would INSERT on every
-            // application — silently duplicating under replay. Primary keys
-            // are NOT NULL in every dialect; reject like one.
-            if (k.exists(_ == null))
-              throw new IllegalArgumentException(
-                s"writeJdbcUpsert: null in key ${keys.mkString(",")} = $k — " +
-                  "null keys cannot match an UPDATE/EXISTS probe and would " +
-                  "re-insert on every application; filter or key-fill first")
-            if (k == prevKey)
-              throw new IllegalArgumentException(
-                s"writeJdbcUpsert: duplicate key $k within one batch — " +
-                  "the outcome would be order-dependent; dedup the source first")
-            prevKey = k
-            setCols.zipWithIndex.foreach { case (c, i) =>
-              bind(upd, i + 1, c, row.get(fieldIdx(c)))
-            }
-            keys.zipWithIndex.foreach { case (c, i) =>
-              bind(upd, setCols.size + i + 1, c, row.get(fieldIdx(c)))
-            }
-            upd.addBatch()
-            pending += row
-            if (pending.size >= batchSize) flush()
-          }
-          flush()
-          conn.commit()
-          done = true
-        } catch {
-          case t: Throwable =>
-            try conn.rollback() catch { case _: Throwable => () }
-            // Deadlock victim (SQLState 40001, anywhere in the chain —
-            // drivers wrap it in BatchUpdateException): the engine rolled
-            // our transaction back whole, so replaying the buffered rows
-            // is EXACT, not merely idempotent. Jittered backoff breaks the
-            // lock-acquisition symmetry that caused the cycle.
-            if (jdbcDeadlockIn(t) && attempt < 6) {
-              attempt += 1
-              Thread.sleep(50L * attempt +
-                java.util.concurrent.ThreadLocalRandom.current().nextInt(200))
-            } else throw t
-        } finally conn.close()
+    jdbcKeyedApply(df, keys, url, props) { (conn, buffered) =>
+      val upd = conn.prepareStatement(updateSql)
+      val ins = conn.prepareStatement(insertSql)
+      def bind(st: java.sql.PreparedStatement, idx: Int, colName: String,
+               v: Any): Unit = jdbcBind(st, idx, sqlTypes(colName), v)
+      // binary keys normalize to Seq so the duplicate check compares
+      // content (Array equality is reference equality)
+      def keyOf(row: Row): Seq[Any] = keys.map(k => row.get(fieldIdx(k)) match {
+        case a: Array[Byte] => a.toSeq
+        case v => v
+      })
+      val pending = scala.collection.mutable.ArrayBuffer.empty[Row]
+      def insertRow(row: Row): Unit = {
+        cols.zipWithIndex.foreach { case (c, i) =>
+          bind(ins, i + 1, c, row.get(fieldIdx(c)))
+        }
+        ins.addBatch()
       }
+      def exists(row: Row): Boolean = {
+        val ex = conn.prepareStatement(existsSql)
+        try {
+          keys.zipWithIndex.foreach { case (k, i) =>
+            bind(ex, i + 1, k, row.get(fieldIdx(k)))
+          }
+          val rs = ex.executeQuery()
+          try rs.next() finally rs.close()
+        } finally ex.close()
+      }
+      def flush(): Unit = if (pending.nonEmpty) {
+        val counts = upd.executeBatch()
+        var inserts = 0
+        counts.zip(pending).foreach { case (n, row) =>
+          // n > 0: definitely matched. n == 0 or SUCCESS_NO_INFO (-2):
+          // PROBE before inserting — affected-rows drivers (MySQL
+          // without CLIENT_FOUND_ROWS) report 0 for a matched row
+          // whose values didn't change, and assuming "missing" there
+          // would turn idempotent re-application into a duplicate-key
+          // crash. The probe is one indexed point SELECT per
+          // zero-count row only.
+          // EXECUTE_FAILED (-3) or any other negative ≠ SUCCESS_NO_INFO:
+          // drivers with continue-on-error batches report a FAILED
+          // entry this way — probing existence there would silently
+          // treat the lost UPDATE as applied. Fail the transaction so
+          // rollback + replay (or the caller) handles it.
+          if (n < 0 && n != java.sql.Statement.SUCCESS_NO_INFO)
+            throw new java.sql.SQLException(
+              s"writeJdbcUpsert: batch UPDATE entry failed (count=$n) " +
+                s"for key ${keyOf(row)} — driver continued past a failed " +
+                "statement; rolling back the partition transaction")
+          val missing = if (n > 0) false else !exists(row)
+          if (missing) { insertRow(row); inserts += 1 }
+        }
+        if (inserts > 0) ins.executeBatch()
+        pending.clear()
+      }
+      var prevKey: Seq[Any] = null
+      buffered.foreach { row =>
+        val k = keyOf(row)
+        // a NULL key can never match its own WHERE clause (three-valued
+        // SQL: `k = NULL` is UNKNOWN), so the row would INSERT on every
+        // application — silently duplicating under replay. Primary keys
+        // are NOT NULL in every dialect; reject like one.
+        if (k.exists(_ == null))
+          throw new IllegalArgumentException(
+            s"writeJdbcUpsert: null in key ${keys.mkString(",")} = $k — " +
+              "null keys cannot match an UPDATE/EXISTS probe and would " +
+              "re-insert on every application; filter or key-fill first")
+        if (k == prevKey)
+          throw new IllegalArgumentException(
+            s"writeJdbcUpsert: duplicate key $k within one batch — " +
+              "the outcome would be order-dependent; dedup the source first")
+        prevKey = k
+        setCols.zipWithIndex.foreach { case (c, i) =>
+          bind(upd, i + 1, c, row.get(fieldIdx(c)))
+        }
+        keys.zipWithIndex.foreach { case (c, i) =>
+          bind(upd, setCols.size + i + 1, c, row.get(fieldIdx(c)))
+        }
+        upd.addBatch()
+        pending += row
+        if (pending.size >= batchSize) flush()
+      }
+      flush()
     }
   }
 
@@ -629,61 +598,39 @@ object Sinks extends Serializable {
       keys.map(jdbcKeyCmp(lobKeyLen)).mkString(" AND ")
     // unindexed keyed DELETEs full-scan under write locks like UPDATEs do
     jdbcEnsureKeyIndex(url, props, table, keys, "writeJdbcDelete")
-    val shuffleN = keyDf.sparkSession.sessionState.conf.numShufflePartitions
-    val keyed = keyDf.repartition(shuffleN, keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-    keyed.foreachPartition { (rows: Iterator[Row]) =>
-      val buffered = rows.toArray // retained for deadlock-victim replay
-      var attempt = 0
-      var done = buffered.isEmpty
-      while (!done) {
-        val conn = jdbcOpen(url, props)
-        try {
-          conn.setAutoCommit(false)
-          val del = conn.prepareStatement(deleteSql)
-          var inBatch = 0
-          def flush(): Unit = if (inBatch > 0) {
-            val counts = del.executeBatch()
-            counts.foreach { n =>
-              // 0 = already absent (idempotent re-application) — fine;
-              // EXECUTE_FAILED or any other negative ≠ SUCCESS_NO_INFO
-              // means a continue-on-error driver lost a statement
-              if (n < 0 && n != java.sql.Statement.SUCCESS_NO_INFO)
-                throw new java.sql.SQLException(
-                  s"writeJdbcDelete: batch DELETE entry failed (count=$n); " +
-                    "rolling back the partition transaction")
-            }
-            inBatch = 0
-          }
-          buffered.foreach { row =>
-            var i = 0
-            while (i < keys.length) {
-              val v = row.get(i)
-              if (v == null)
-                throw new IllegalArgumentException(
-                  s"writeJdbcDelete: null in key ${keys.mkString(",")} — " +
-                    "`k = NULL` matches nothing; the row would silently " +
-                    "never delete. Filter or key-fill first")
-              jdbcBind(del, i + 1, sqlTypes(i), v)
-              i += 1
-            }
-            del.addBatch()
-            inBatch += 1
-            if (inBatch >= batchSize) flush()
-          }
-          flush()
-          conn.commit()
-          done = true
-        } catch {
-          case t: Throwable =>
-            try conn.rollback() catch { case _: Throwable => () }
-            if (jdbcDeadlockIn(t) && attempt < 6) {
-              attempt += 1
-              Thread.sleep(50L * attempt +
-                java.util.concurrent.ThreadLocalRandom.current().nextInt(200))
-            } else throw t
-        } finally conn.close()
+    jdbcKeyedApply(keyDf, keys, url, props) { (conn, buffered) =>
+      val del = conn.prepareStatement(deleteSql)
+      var inBatch = 0
+      def flush(): Unit = if (inBatch > 0) {
+        val counts = del.executeBatch()
+        counts.foreach { n =>
+          // 0 = already absent (idempotent re-application) — fine;
+          // EXECUTE_FAILED or any other negative ≠ SUCCESS_NO_INFO
+          // means a continue-on-error driver lost a statement
+          if (n < 0 && n != java.sql.Statement.SUCCESS_NO_INFO)
+            throw new java.sql.SQLException(
+              s"writeJdbcDelete: batch DELETE entry failed (count=$n); " +
+                "rolling back the partition transaction")
+        }
+        inBatch = 0
       }
+      buffered.foreach { row =>
+        var i = 0
+        while (i < keys.length) {
+          val v = row.get(i)
+          if (v == null)
+            throw new IllegalArgumentException(
+              s"writeJdbcDelete: null in key ${keys.mkString(",")} — " +
+                "`k = NULL` matches nothing; the row would silently " +
+                "never delete. Filter or key-fill first")
+          jdbcBind(del, i + 1, sqlTypes(i), v)
+          i += 1
+        }
+        del.addBatch()
+        inBatch += 1
+        if (inBatch >= batchSize) flush()
+      }
+      flush()
     }
   }
 
@@ -723,6 +670,48 @@ object Sinks extends Serializable {
   }
 
   // ------- shared machinery of the keyed JDBC writes (upsert/delete/CDC)
+
+  /** The keyed writes' partition loop. Rows hash-repartition on `keys` and
+    * sort within each partition, so ONE task owns each key (and duplicate
+    * keys sit next to each other). Each task buffers its partition and runs
+    * `apply` over it in one transaction: autocommit off, commit after
+    * `apply` returns, rollback on any failure. A deadlock victim (SQLState
+    * 40001, anywhere in the chain — drivers wrap it in
+    * BatchUpdateException) was rolled back whole by the engine, so
+    * replaying the buffered rows is EXACT, not merely idempotent; up to 6
+    * replays, with jittered backoff to break the lock-acquisition symmetry
+    * that caused the cycle. Any other failure rethrows.
+    */
+  private def jdbcKeyedApply(df: DataFrame, keys: Seq[String], url: String,
+                             props: Map[String, String])(
+      apply: (java.sql.Connection, Array[Row]) => Unit): Unit = {
+    import org.apache.spark.sql.functions.col
+    val shuffleN = df.sparkSession.sessionState.conf.numShufflePartitions
+    val keyed = df.repartition(shuffleN, keys.map(col): _*)
+      .sortWithinPartitions(keys.map(col): _*)
+    keyed.foreachPartition { (rows: Iterator[Row]) =>
+      val buffered = rows.toArray // retained for deadlock-victim replay
+      var attempt = 0
+      var done = buffered.isEmpty
+      while (!done) {
+        val conn = jdbcOpen(url, props)
+        try {
+          conn.setAutoCommit(false)
+          apply(conn, buffered)
+          conn.commit()
+          done = true
+        } catch {
+          case t: Throwable =>
+            try conn.rollback() catch { case _: Throwable => () }
+            if (jdbcDeadlockIn(t) && attempt < 6) {
+              attempt += 1
+              Thread.sleep(50L * attempt +
+                java.util.concurrent.ThreadLocalRandom.current().nextInt(200))
+            } else throw t
+        } finally conn.close()
+      }
+    }
+  }
 
   /** Quote column identifiers exactly as Spark's own jdbc writer does at
     * CREATE TABLE time (JdbcDialect.quoteIdentifier → double quotes): an

@@ -3,18 +3,21 @@ package graft.sources
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.datasources.v2.text.TextTable
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
-
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 registration of the fixed-width flat-file format —
   * `spark.read.format("fixedwidth").option("fields", "name:8,qty:4")` — so
@@ -23,18 +26,17 @@ import scala.jdk.CollectionConverters._
   * multi-path loads) instead of requiring the [[Sources.readFixedWidth]]
   * function call.
   *
-  * Scale design: one input partition per file (fixed-width records are
-  * line-delimited; a directory of exports parallelizes by file, like the
-  * Excel reader), and the scan implements COLUMN PRUNING
-  * (SupportsPushDownRequiredColumns) — a 2-column projection over a
-  * 40-field record only materializes 2 substrings per line, and the pruned
-  * schema is visible in the plan for audit.
+  * The read is Spark's own text scan (the listing, globs, splits and line
+  * framing of `spark.read.text`); each line is sliced into just the
+  * REQUIRED columns (column pruning, visible in the plan) by
+  * [[Sources.readFixedWidth]]'s rule. The write pads and truncates by code
+  * points like `Sinks.writeFixedWidth`; its values arrive rendered by
+  * Spark's string cast in the session time zone, because a V2 write casts
+  * the query's columns to this table's all-STRING schema.
   *
-  * Paths may name files, directories or globs. Options: `fields` =
+  * Paths may name files, directories or globs. Option: `fields` =
   * comma-separated `name:width` in record order, every width > 0
-  * (required); `trim` = trim values and null empties (default true,
-  * DFASDL's trim="both"). All columns surface as STRING, like csv without
-  * inferSchema.
+  * (required). All columns surface as STRING, like csv without inferSchema.
   */
 class FixedWidthDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "fixedwidth"
@@ -66,29 +68,6 @@ private[sources] object FixedWidthV2 {
 
   def schemaFor(fields: Seq[(String, Int)]): StructType =
     StructType(fields.map { case (n, _) => StructField(n, StringType) })
-
-  /** Render one InternalRow value as the string the fixed-width layout
-    * writes — matching Sinks.writeFixedWidth's `cast(string)` bytes.
-    * Date/timestamp live as internal epoch numbers in an InternalRow, so
-    * `String.valueOf(row.get(...))` would write '20679' for 2026-08-14
-    * and micros-since-epoch for timestamps (timestamps render in UTC,
-    * the engine's session zone).
-    */
-  private[sources] def renderValue(row: org.apache.spark.sql.catalyst.InternalRow,
-                                   idx: Int, dt: org.apache.spark.sql.types.DataType): String = dt match {
-    case org.apache.spark.sql.types.DateType => java.time.LocalDate.ofEpochDay(row.getInt(idx).toLong).toString
-    case org.apache.spark.sql.types.TimestampType =>
-      val micros = row.getLong(idx)
-      val secs = java.lang.Math.floorDiv(micros, 1000000L)
-      val frac = java.lang.Math.floorMod(micros, 1000000L)
-      val ldt = java.time.LocalDateTime.ofEpochSecond(secs, 0,
-        java.time.ZoneOffset.UTC)
-      val base = f"${ldt.getYear}%04d-${ldt.getMonthValue}%02d-${ldt.getDayOfMonth}%02d " +
-        f"${ldt.getHour}%02d:${ldt.getMinute}%02d:${ldt.getSecond}%02d"
-      if (frac == 0L) base
-      else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
-    case _ => String.valueOf(row.get(idx, dt))
-  }
 }
 
 private[sources] class FixedWidthTable(options: CaseInsensitiveStringMap)
@@ -102,82 +81,87 @@ private[sources] class FixedWidthTable(options: CaseInsensitiveStringMap)
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new FixedWidthScanBuilder(fields, o)
+    new FixedWidthScan(fields, o)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new FixedWidthWriteBuilder(fields, info)
 }
 
-private[sources] class FixedWidthScanBuilder(
+/** Builder, scan and batch in one: Spark's text scan over the paths, its
+  * partitions read through [[FixedWidthReaderFactory]].
+  */
+private[sources] class FixedWidthScan(
     fields: Seq[(String, Int)], options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
+    extends ScanBuilder with SupportsPushDownRequiredColumns with Scan with Batch {
   private var required: StructType = FixedWidthV2.schemaFor(fields)
+  private lazy val lines = TextTable("fixedwidth", SparkSession.active,
+    CaseInsensitiveStringMap.empty(), SourceFiles.paths(options), None,
+    classOf[TextFileFormat]).newScanBuilder(CaseInsensitiveStringMap.empty())
+    .build().toBatch
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val files = SourceFiles.list(SourceFiles.paths(options),
-      spark.sessionState.newHadoopConf()).map(_.getPath.toString)
-    new FixedWidthScan(fields, required,
-      Option(options.get("trim")).forall(_.toBoolean), files,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-  }
-}
-
-private[sources] case class FixedWidthFilePartition(file: String)
-    extends InputPartition
-
-private[sources] class FixedWidthScan(
-    fields: Seq[(String, Int)], required: StructType, trim: Boolean,
-    files: Seq[String], conf: SerializableConfiguration)
-    extends Scan with Batch {
-
+  override def build(): Scan = this
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"fixedwidth ReadSchema: ${required.fieldNames.mkString(",")}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(FixedWidthFilePartition.apply).toArray
+    lines.planInputPartitions()
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FixedWidthReaderFactory(fields, required.fieldNames.toSeq, trim, conf)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    // code-point (offset, width) of just the REQUIRED columns, in required
+    // order — pruning means the other substrings are never sliced
+    val offsets = fields.scanLeft(0) { case (off, (_, w)) => off + w }
+    val byName = fields.zip(offsets).map { case ((n, w), off) => n -> (off, w) }.toMap
+    new FixedWidthReaderFactory(lines.createReaderFactory(),
+      required.fieldNames.map(byName))
+  }
 }
 
 private[sources] class FixedWidthReaderFactory(
-    fields: Seq[(String, Int)], requiredNames: Seq[String], trim: Boolean,
-    conf: SerializableConfiguration)
+    lines: PartitionReaderFactory, slices: Array[(Int, Int)])
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[FixedWidthFilePartition].file
-    // (offset, width) of just the REQUIRED columns, in required order —
-    // pruning means the other substrings are never materialized
-    val offsets = fields.scanLeft(0) { case (off, (_, w)) => off + w }
-    val byName = fields.zip(offsets).map { case ((n, w), off) => n -> (off, w) }.toMap
-    val picks = requiredNames.map(byName)
+    val in = lines.createReader(p)
     new PartitionReader[InternalRow] {
-      private val path = new Path(file)
-      private val in = path.getFileSystem(conf.value).open(path)
-      private val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-      private var line: String = _
+      private val row = new GenericInternalRow(slices.length)
 
-      override def next(): Boolean = { line = reader.readLine(); line != null }
+      override def next(): Boolean = in.next()
 
+      // Sources.readFixedWidth's rule without copying: code points
+      // [offset, offset + width), spaces trimmed, empty = null. A value
+      // views the line's buffer, which the text reader reuses on next()
       override def get(): InternalRow = {
-        val vals = picks.map { case (off, w) =>
-          val raw = if (off >= line.length) ""
-            else line.substring(off, math.min(off + w, line.length))
-          val v = if (trim) raw.trim else raw
-          if (v.isEmpty && trim) null else UTF8String.fromString(v)
+        val line = in.get().getUTF8String(0)
+        val base = line.getBaseObject
+        val off = line.getBaseOffset
+        val n = line.numBytes
+        def skip(from: Int, codePoints: Int): Int = {
+          var b = from
+          var c = 0
+          while (b < n && c < codePoints) {
+            b += UTF8String.numBytesForFirstByte(Platform.getByte(base, off + b))
+            c += 1
+          }
+          math.min(b, n)
         }
-        InternalRow.fromSeq(vals)
+        var i = 0
+        while (i < slices.length) {
+          var s = skip(0, slices(i)._1)
+          var e = skip(s, slices(i)._2)
+          while (s < e && Platform.getByte(base, off + s) == ' ') s += 1
+          while (e > s && Platform.getByte(base, off + e - 1) == ' ') e -= 1
+          row.update(i, if (s == e) null else UTF8String.fromAddress(base, off + s, e - s))
+          i += 1
+        }
+        row
       }
 
-      override def close(): Unit = reader.close()
+      override def close(): Unit = in.close()
     }
   }
 }
@@ -191,7 +175,7 @@ private[sources] class FixedWidthWriteBuilder(
 
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = {
-      val spark = org.apache.spark.sql.SparkSession.active
+      val spark = SparkSession.active
       val path = Option(info.options.get("path")).getOrElse(
         throw new IllegalArgumentException("fixedwidth write needs a path"))
       new FixedWidthBatchWrite(fields, info.schema(), path, doTruncate,
@@ -250,33 +234,22 @@ private[sources] class FixedWidthWriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     // render in FIELDS order (the record layout), wherever each column sits
-    // in the incoming schema: rpad + truncate, nulls as spaces — byte-parity
-    // with Sinks.writeFixedWidth
-    val picks = fields.map { case (n, w) =>
-      val i = schema.fieldIndex(n)
-      (i, w, schema(i).dataType)
-    }
+    // in the incoming (all-STRING) schema: rpad + truncate by code points,
+    // nulls as spaces — the bytes Sinks.writeFixedWidth writes
+    val picks = fields.map { case (n, w) => (schema.fieldIndex(n), w) }
+    val space = UTF8String.fromString(" ")
     val fin = new Path(path, f"part-$partitionId%05d-$taskId-$jobToken.txt")
     val tmp = new Path(path, f".part-$partitionId%05d-$taskId-$jobToken.tmp")
     new DataWriter[InternalRow] {
       private val fs = tmp.getFileSystem(conf.value)
-      private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
+      private val out = new java.io.BufferedOutputStream(fs.create(tmp, true))
 
       override def write(row: InternalRow): Unit = {
-        val sb = new java.lang.StringBuilder
-        picks.foreach { case (idx, w, dt) =>
-          val v = if (row.isNullAt(idx)) ""
-                  else FixedWidthV2.renderValue(row, idx, dt)
-          if (v.length >= w) sb.append(v, 0, w)
-          else {
-            sb.append(v)
-            var p = v.length
-            while (p < w) { sb.append(' '); p += 1 }
-          }
+        picks.foreach { case (i, w) =>
+          val v = if (row.isNullAt(i)) UTF8String.EMPTY_UTF8 else row.getUTF8String(i)
+          v.rpad(w, space).writeTo(out)
         }
-        out.write(sb.toString)
-        out.newLine()
+        out.write('\n')
       }
 
       override def commit(): WriterCommitMessage = {

@@ -100,18 +100,18 @@ object Sources {
     * widths). Spark form: one distributed text scan + a substring projection
     * per field — splits parallelize by file block, the projection is pure
     * codegen. `fields` are (name, width) pairs in record order, every width
-    * > 0; values are trimmed (DFASDL's trim="both" default) and empty
-    * fields become null.
+    * > 0; values are trimmed of spaces (DFASDL's trim="both" default) and
+    * empty fields become null. `format("fixedwidth")` slices by the same
+    * rule over the same text scan.
     */
   def readFixedWidth(spark: SparkSession, path: String,
-                     fields: Seq[(String, Int)],
-                     trimValues: Boolean = true): DataFrame = {
+                     fields: Seq[(String, Int)]): DataFrame = {
     requirePositiveWidths(fields)
     val offsets = fields.scanLeft(1) { case (off, (_, w)) => off + w }
     val cols = fields.zip(offsets).map { case ((name, w), off) =>
-      val raw = org.apache.spark.sql.functions.substring(
-        org.apache.spark.sql.functions.col("value"), off, w)
-      val v = if (trimValues) org.apache.spark.sql.functions.trim(raw) else raw
+      val v = org.apache.spark.sql.functions.trim(
+        org.apache.spark.sql.functions.substring(
+          org.apache.spark.sql.functions.col("value"), off, w))
       org.apache.spark.sql.functions
         .when(org.apache.spark.sql.functions.length(v) === 0, null)
         .otherwise(v).as(name)

@@ -390,13 +390,14 @@ object Scale {
 
     /** Runs the query `start` returns to completion under the leg timer,
       * with the summed `durationMs` of its triggers (addBatch, getBatch,
-      * walCommit, triggerExecution, …), read from a [[graft.Metrics]]
-      * reporter on the session that starts it. The reporter holds twice as
-      * many records as there are staged files (a stateful query may follow
-      * each data trigger with a no-data one), so no trigger is dropped.
+      * walCommit, triggerExecution, …) and the count of its triggers that
+      * read input rows, read from a [[graft.Metrics]] reporter on the
+      * session that starts it. The reporter holds twice as many records as
+      * there are staged files (a stateful query may follow each data
+      * trigger with a no-data one), so no trigger is dropped.
       */
     def drained(session: SparkSession)(start: => StreamingQuery)
-        : (Metrics.Usage, Map[String, Long]) = {
+        : (Metrics.Usage, Map[String, Long], Long) = {
       val rep = Metrics.attach(session, nBatches * 2 + 16)
       try {
         val (q, use) = leg(1) {
@@ -406,39 +407,37 @@ object Scale {
           q
         }
         rep.drain()
-        val triggerMs = rep.triggers.filter(_.runId == q.runId)
-          .flatMap(_.durationMs).groupMapReduce(_._1)(_._2)(_ + _)
-        (use, triggerMs)
+        val triggers = rep.triggers.filter(_.runId == q.runId)
+        val triggerMs = triggers.flatMap(_.durationMs)
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        (use, triggerMs, triggers.count(_.inputRows > 0).toLong)
       } finally rep.close()
     }
 
-    def surface(name: String, rows: Long, batches: Long,
-                run: (Metrics.Usage, Map[String, Long])): (String, Jsons.Obj) = {
-      val (u, triggerMs) = run
+    def surface(name: String, rows: Long, batches: Long, u: Metrics.Usage,
+                triggerMs: Map[String, Long]): (String, Jsons.Obj) = {
       println(f"[scale] stream $name: ${u.wallS}%.2f s, ${rate(rows, u)} rows/s, " +
         s"$batches batches, addBatch ${triggerMs.getOrElse("addBatch", 0L)} ms")
       name -> legJson(u, "rows_per_s" -> rate(rows, u), "batches" -> batches,
         "trigger_ms" -> Jsons.Obj(triggerMs.toSeq.sorted))
     }
 
-    /** A noop-sink surface; the batch count is counted in the callback,
-      * NOT via recentProgress — that is a ring buffer (default 100
-      * entries), so nBatches above ~100 would silently under-report the
-      * every-file-is-a-trigger sanity signal.
+    /** A noop-sink surface; `batches` counts the run's triggers that read
+      * input rows, so the no-data trigger a watermark query may run before
+      * `q.stop()` (only sometimes, depending on host load) is not counted
+      * and every file is exactly one batch.
       */
     def noop(name: String, rows: Long, streamed: DataFrame, mode: OutputMode)
         : (String, Jsons.Obj) = {
-      val batches = new java.util.concurrent.atomic.AtomicLong(0)
-      val run = drained(streamed.sparkSession) {
+      val (u, triggerMs, dataTriggers) = drained(streamed.sparkSession) {
         streamed.writeStream.outputMode(mode)
           .option("checkpointLocation", fresh(staging, "ckpt"))
           .foreachBatch { (b: Dataset[Row], _: Long) =>
-            batches.incrementAndGet()
             b.write.format("noop").mode("overwrite").save()
           }
           .start()
       }
-      surface(name, rows, batches.get(), run)
+      surface(name, rows, dataTriggers, u, triggerMs)
     }
 
     /** A report-sink surface: results land as batch_id partitions of
@@ -447,9 +446,9 @@ object Scale {
     def reported(name: String, rows: Long)(start: (String, String) => StreamingQuery)
         : (String, Jsons.Obj) = {
       val report = fresh(staging, "report")
-      val run = drained(spark)(start(report, fresh(staging, "ckpt")))
+      val (u, triggerMs, _) = drained(spark)(start(report, fresh(staging, "ckpt")))
       val batches = Tables.parquet(spark, report).select(col("batch_id")).distinct().count()
-      surface(name, rows, batches, run)
+      surface(name, rows, batches, u, triggerMs)
     }
 
     // r15: the online SemDeDup gate — every incoming embedding probes
@@ -637,9 +636,10 @@ object Scale {
     *     branch-dependent record arity; alternation + per-combination
     *     dispatch predicates are the costliest regex path).
     *   - fixed_width_fn / fixed_width_v2: the same fixed-width records
-    *     through [[Sources.readFixedWidth]] (splittable text scan +
-    *     substring projection) and `format("fixedwidth")` (one partition
-    *     per file), on `files` files and on one file.
+    *     through [[Sources.readFixedWidth]] (text scan + substring
+    *     projection) and `format("fixedwidth")` (the same text scan's
+    *     splits, sliced inside the V2 reader), on `files` files and on one
+    *     file.
     *
     * Each leg stages the orders (~1.5M records at sf1) into `files` text
     * files, then times a full scan -> count + checksum aggregate (forces

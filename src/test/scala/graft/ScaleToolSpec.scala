@@ -68,6 +68,11 @@ class ScaleToolSpec extends AnyFunSuite {
       "user_state", "quality_gate", "pack", "contamination", "neardup_gate",
       "semdedup_gate", "drift_sink", "ann_serve", "hybrid_serve"),
       "rows_per_s", "batches", "trigger_ms")
+    // a noop surface counts its data triggers: each of the 2 staged files
+    // is one, and a no-data trigger under host load is not counted
+    for (s <- Seq("windowed_agg", "dedup", "sessionize", "user_state", "quality_gate",
+        "pack", "contamination", "neardup_gate", "semdedup_gate"))
+      assert(j.get("surfaces").get(s).get("batches").asLong == 2, s)
   }
 
   test("source: source_scale with one leg per reader") {

@@ -383,6 +383,88 @@ class SourcesSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"leftover tmp files: ${stray.mkString(",")}")
   }
 
+  test("fixedwidth V2 reads by readFixedWidth's rule: tabs kept, spaces trimmed, empties null") {
+    val dir = tmp("fwrule") + "/in"
+    // fields a:4, b:4, c:4 — a tab-led field (Spark's trim strips spaces
+    // only), trailing spaces, an empty field, a short line, and widths in
+    // code points (U+00E9 is two UTF-8 bytes, U+1D11E four bytes and two
+    // UTF-16 chars)
+    val multi = "\u00e9\uD834\uDD1E"
+    Seq("\tab     c   ", "x   5678 9", "12", multi + "xyabcdefgh").toDF("value")
+      .coalesce(1).write.text(dir)
+    val fields = Seq(("a", 4), ("b", 4), ("c", 4))
+    val v2 = spark.read.format("fixedwidth").option("fields", "a:4,b:4,c:4")
+      .load(dir).as[(String, String, String)].collect().toSet
+    val fn = Sources.readFixedWidth(spark, dir, fields)
+      .as[(String, String, String)].collect().toSet
+    assert(fn == Set(("\tab", null, "c"), ("x", "5678", "9"), ("12", null, null),
+      (multi + "xy", "abcd", "efgh")), s"function reader: $fn")
+    assert(v2 == fn, s"V2 $v2 != function reader $fn")
+  }
+
+  test("fixedwidth V2 plans the same input partitions as spark.read.text") {
+    val small = tmp("fwparts")
+    (0 until 16).foreach(i => Files.write(java.nio.file.Paths.get(small, f"part-$i%02d.txt"),
+      f"$i%06dname-$i\n".getBytes("UTF-8")))
+    val big = tmp("fwbig")
+    Files.write(java.nio.file.Paths.get(big, "one.txt"),
+      (0 until 400).map(i => f"$i%06dname-$i%-4s\n").mkString.getBytes("UTF-8"))
+    def parts(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.toRdd.getNumPartitions
+    def v2(dir: String) = spark.read.format("fixedwidth")
+      .option("fields", "id:6,name:9").load(dir)
+    val smallText = parts(spark.read.text(small))
+    assert(smallText < 16, s"text scan did not pack small files: $smallText")
+    assert(parts(v2(small)) == smallText)
+    assert(v2(small).count() == 16)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "1024")
+      val bigText = parts(spark.read.text(big))
+      assert(bigText > 1, s"text scan did not split the file: $bigText")
+      assert(parts(v2(big)) == bigText)
+      assert(v2(big).count() == 400)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("fixedwidth V2 write renders like writeFixedWidth: binary, timestamp_ntz, decimal, code points") {
+    val fields = Seq(("bin", 6), ("ntz", 24), ("dec", 10), ("ts", 19), ("s", 3))
+    // raw bytes of every line, sorted (ISO-8859-1 maps each byte to a char)
+    def lines(dir: String): Seq[String] = new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .flatMap(f => new String(Files.readAllBytes(f.toPath), "ISO-8859-1").split("\n"))
+      .sorted.toSeq
+    // U+1D11E is one code point but two UTF-16 chars: widths count code
+    // points, like Spark's rpad
+    val clef = "\uD834\uDD1E"
+    val key = "spark.sql.session.timeZone"
+    val before = spark.conf.get(key)
+    try {
+      // a non-UTC session zone: both writers render timestamps in it
+      spark.conf.set(key, "America/New_York")
+      val df = spark.sql("""SELECT * FROM VALUES
+        (X'616263', TIMESTAMP_NTZ'2024-03-05 06:07:08.5', CAST(12.340 AS DECIMAL(10,3)),
+         TIMESTAMP'2024-03-05 06:07:08'),
+        (CAST(NULL AS BINARY), TIMESTAMP_NTZ'1999-12-31 23:59:59', CAST(-0.5 AS DECIMAL(10,3)),
+         CAST(NULL AS TIMESTAMP))
+        AS t(bin, ntz, dec, ts)""")
+        .withColumn("s", when(col("dec") > 0, lit(clef + "abcd")).otherwise(lit(clef)))
+      val fnDir = tmp("fwwfn") + "/out"
+      val v2Dir = tmp("fwwv2") + "/out"
+      Sinks.writeFixedWidth(df, fnDir, fields)
+      df.write.format("fixedwidth").option("fields", fields.map { case (n, w) => s"$n:$w" }
+        .mkString(",")).mode("overwrite").save(v2Dir)
+      val want = lines(fnDir)
+      val first = "abc   2024-03-05 06:07:08.5   12.340    2024-03-05 06:07:08" + clef + "ab"
+      assert(want.contains(new String(first.getBytes("UTF-8"), "ISO-8859-1")), want)
+      assert(lines(v2Dir) == want)
+    } finally spark.conf.set(key, before)
+  }
+
   test("fixed-width readers reject malformed field specs, naming the entry") {
     val dir = tmp("fwbad") + "/out"
     Seq("1     alpha").toDF("value").write.text(dir)
