@@ -54,10 +54,14 @@ object GraftSession {
       // on identical code. Deriving the partition count from DATA SIZE
       // (advisory 256 MB, the optimization guide's production starting
       // point) makes partitioning scale-adaptive: tiny exchanges collapse
-      // to one task, 100 TB exchanges get ~bytes/256MB tasks. CPU-heavy
-      // stages whose input bytes are tiny (pair scoring, pigeonhole
-      // enumeration) keep their parallelism via the EXPLICIT
-      // repartition(n, cols) fanouts those operators already pin.
+      // to one task, 100 TB exchanges get ~bytes/256MB tasks. AQE never
+      // coalesces a repartition(n, cols) with an explicit n, so CPU-heavy
+      // stages over few bytes stay parallel only where an operator pins n:
+      // Dedup.simhashPairs (pigeonhole pairing), Dedup.ngramJaccardPairs
+      // (the quadratic block walk) and FuzzyJoin's blocked probe side. The
+      // unnumbered repartition(col("id")) in Dedup.shingleHashes (so
+      // minhashPairs' signatures) and Dedup.simhash IS coalesced: at 2,000
+      // docs the minhash signature stage runs as one task.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
       // Sort-based shuffle writer for every multi-reducer exchange (r17).
@@ -93,7 +97,35 @@ object GraftSession {
       // and it runs each query's reps back to back. Static conf — it takes
       // effect when the JVM first generates code, which is why it lives here.
       .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.buffer.pageSize", s"${pageSizeBytes(Runtime.getRuntime.maxMemory, cores)}b")
+      // Local files through NioRawLocalFileSystem: no forked chmod per
+      // mkdir or create, no forked readlink per FileContext rename.
+      // fs.file.impl serves FileSystem.get (readers, writers, the commit
+      // protocol); the AbstractFileSystem key serves FileContext
+      // (streaming checkpoints, state and metadata logs).
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       .config("spark.ui.enabled", "false")
+
+  /** Tungsten page size for `cores` tasks in a heap of `maxHeapBytes`: the
+    * largest power of two at most `maxHeapBytes / min(cores, 4) / 1024`,
+    * clamped to [1 MB, 64 MB] (1 MB at 3 GB and 4 cores, 2 MB at 8 GB and
+    * 4, 64 MB at 64 GB and 1). Spark's default (execution memory / cores /
+    * 16) gives 16 MB pages at 3 GB and 4 cores, and every shuffle sorter,
+    * aggregate map and external sorter takes at least one whole page, even
+    * for a few KB of rows; under G1 each such page is a humongous object
+    * allocated straight into the old generation.
+    *
+    * Derived, not fixed: a task may hold at most 8,192 pages, so a fixed
+    * 1 MB page would fail a big-heap task that should spill. A task running
+    * alone may take the whole execution pool (about 0.6 of the heap), which
+    * is why the page stops shrinking past 4 cores: a page of at least
+    * `maxHeapBytes / 8192` (after the power-of-two rounding) keeps the
+    * whole pool under about 5,000 pages at any core count.
+    */
+  def pageSizeBytes(maxHeapBytes: Long, cores: Int): Long =
+    math.min(64L << 20, math.max(1L << 20,
+      java.lang.Long.highestOneBit(maxHeapBytes / math.min(math.max(1, cores), 4) / 1024)))
 
   /** The builder's session with WARN logging. Throws when the session's
     * SparkContext was created earlier without graft's extension — its

@@ -63,12 +63,15 @@ object Dedup {
   /** Shingle hashes per row: id column + xxhash64 of each word k-shingle,
     * computed map-side in ONE fused codegen pass
     * (graft.functions.WordShingleHashExpr) — the text itself never crosses
-    * the wire; the single exchange here carries `(id, array<long>)` and
-    * exists to spread the (heavier) downstream signature work even when the
-    * source is a single small parquet split. The earlier higher-order-
-    * function formulation needed a full-text shuffle barrier to dodge
-    * CollapseProject re-evaluation; the fused expression removes both the
-    * interpreted per-element cost and the text payload.
+    * the wire; the single exchange here carries `(id, array<long>)`. It has
+    * no partition count, so under the session's size-first coalescing AQE
+    * folds it to about bytes / 256 MB tasks: at 2,000 docs minhashPairs'
+    * signature stage runs as ONE task, and the exchange does not spread the
+    * downstream signature work (pinning a count is its own, measured change).
+    * The earlier higher-order-function formulation needed a full-text
+    * shuffle barrier to dodge CollapseProject re-evaluation; the fused
+    * expression removes both the interpreted per-element cost and the text
+    * payload.
     */
   private def shingleHashes(df: DataFrame, textCol: String, idCol: String,
                             shingleK: Int): DataFrame =
@@ -217,8 +220,11 @@ object Dedup {
 
   /** 64-bit SimHash (Charikar'02): per token-hash bit, sum ±1 across tokens,
     * sign gives the bit — computed per row in one codegen'd pass
-    * (graft.functions.SimHashExpr), so signatures need NO shuffle; the only
-    * exchange in simhash dedup is the candidate pairing itself.
+    * (graft.functions.SimHashExpr), so signatures need NO shuffle for their
+    * own sake. The unnumbered `repartition(col("id"))` below does not spread
+    * the signature work either: AQE's size-first coalescing folds it to one
+    * task on small inputs, as in [[shingleHashes]]; the fanout that keeps
+    * simhash dedup parallel is simhashPairs' explicit pigeonhole one.
     */
   def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("id"),
